@@ -98,33 +98,12 @@ object GraftSession {
     * duration of the `start()` call itself; the engine's entry points
     * start queries from the calling thread, never concurrently with a
     * batch plan compile on the same session. */
-  def withStreamPartitions[T](spark: SparkSession)(start: => T): T =
-    withPartitions(spark, streamShufflePartitions)(start)
-
-  private def withPartitions[T](spark: SparkSession, n: Int)(start: => T): T = {
+  def withStreamPartitions[T](spark: SparkSession)(start: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
+    spark.conf.set(key, streamShufflePartitions.toString)
     try start finally spark.conf.set(key, prev)
   }
-
-  /** State-store partition count for the streaming CHANGELOG-JOIN tiers
-    * (r20, VERDICT r19 task 2). r19 exempted these from the streaming
-    * cut ("CPU-bound per key", 32 beat 8 by 2.5× pre-net-emission), but
-    * the r19 driver's own 8-core run beat the 32-core sweep on all three
-    * CDC joins (5.7-5.8 vs 7.4-8.3 s) — post-net-emission the per-key
-    * CPU shrank and the balance was re-measured this round (see
-    * OPTIMIZATION_r20.md): the v2 state codec cut the per-key step cost
-    * further, and the A/B now reads 8 partitions ≤ 32 at 32 cores, so
-    * the join tiers take the streaming default. Production sizes state
-    * partitions to state volume via the same env override. */
-  def joinStreamPartitions: Int =
-    sys.env.get("SPARK_GRAFT_JOIN_STREAM_PARTITIONS").map(_.toInt)
-      .getOrElse(streamShufflePartitions)
-
-  /** [[withStreamPartitions]] for the changelog-join tiers. */
-  def withJoinStreamPartitions[T](spark: SparkSession)(start: => T): T =
-    withPartitions(spark, joinStreamPartitions)(start)
 
   /** `.startScoped(spark)` — a `DataStreamWriter.start()` under
     * [[withStreamPartitions]]; the engine's streaming sinks start through
@@ -134,12 +113,6 @@ object GraftSession {
     def startScoped(spark: SparkSession)
         : org.apache.spark.sql.streaming.StreamingQuery =
       withStreamPartitions(spark)(w.start())
-
-    /** `.start()` under [[withJoinStreamPartitions]] — the changelog-join
-      * tiers' variant. */
-    def startJoinScoped(spark: SparkSession)
-        : org.apache.spark.sql.streaming.StreamingQuery =
-      withJoinStreamPartitions(spark)(w.start())
   }
 
   /** Build (or reuse) a session and register all graft SQL functions. */

@@ -104,11 +104,15 @@ object ChangelogJoin {
     @transient private lazy val rDes =
       ExpressionEncoder(rType).resolveAndBind().createDeserializer()
     // Kryo decoder for pre-v2 checkpoint blobs: the same serializer
-    // Encoders.kryo resolves at runtime (SparkEnv conf when live).
+    // Encoders.kryo resolves at runtime, so it needs the live SparkEnv
+    // conf — a default conf would miss the writer's Kryo registration.
     @transient private lazy val kryo = {
-      val conf = Option(org.apache.spark.SparkEnv.get).map(_.conf)
-        .getOrElse(new org.apache.spark.SparkConf)
-      new org.apache.spark.serializer.KryoSerializer(conf).newInstance()
+      val env = Option(org.apache.spark.SparkEnv.get).getOrElse(
+        throw new IllegalStateException(
+          "decoding a pre-v2 (Kryo) changelog-join state blob needs a " +
+            "live SparkEnv: its Kryo settings (spark.kryo.registrator, " +
+            "registrationRequired) must match the writer's"))
+      new org.apache.spark.serializer.KryoSerializer(env.conf).newInstance()
     }
 
     private def writeSide(

@@ -42,6 +42,33 @@ private[graft] object FsOps {
     ()
   }
 
+  /** Replace the contents of `dest` with what `write` puts at the staging
+    * path it is given. Crash-safe on one filesystem: the previous state
+    * moves ASIDE to `dest.old` before the staging dir is promoted, so
+    * every crash point leaves `dest` or `dest.old` holding a whole state,
+    * which [[current]] reads back. Replaying the write after a crash
+    * reaches the same state (the staging write overwrites). Transactional
+    * commit is the table format's job at scale. */
+  def replace(spark: SparkSession, dest: String)(write: String => Unit): Unit = {
+    val staging = dest + ".staging"
+    val old = dest + ".old"
+    write(staging)
+    if (exists(spark, dest)) {
+      deleteRecursive(spark, old)
+      rename(spark, dest, old)
+    }
+    rename(spark, staging, dest)
+    deleteRecursive(spark, old)
+  }
+
+  /** Where the state [[replace]] last committed to `dest` lives: `dest`,
+    * else `dest.old` (a crash between the two renames); None when neither
+    * holds data files (Spark's rule: `_`/`.`-prefixed names are metadata,
+    * `k=v` partition dirs are data). */
+  def current(spark: SparkSession, dest: String): Option[String] =
+    Seq(dest, dest + ".old").find(p => childNames(spark, p).exists(n =>
+      !n.startsWith(".") && (!n.startsWith("_") || n.contains("="))))
+
   /** Total bytes of the path's DIRECT children (metadata-only listing —
     * no data read); 0 if absent. Sizing signal for the unbucketed-store
     * warning in [[UpsertSink]]. */

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * abilities the reference models as SupportsRowLevelUpdate /
   * SupportsRowLevelDelete (flink-table-common/…/connector/sink/abilities/).
   *
-  * The table must use the [[UpsertSink.applyBatchBucketed]] layout
+  * The table must use the bucketed [[UpsertSink.applyBatch]] layout
   * (`__bucket=N/` hash partitions). Execution: one scan evaluates the
   * predicate everywhere (a predicate is not generally bucket-prunable),
   * but only buckets that actually CONTAIN matching rows are rewritten —

@@ -9,15 +9,25 @@ import org.apache.spark.sql.functions._
   * the reference's Sink + SinkUpsertMaterializer pair
   * (StreamExecSink.java:137, SinkUpsertMaterializer.java:64).
   *
-  * Per micro-batch: read current table state, union the batch's changelog
-  * rows, keep-last per key by `__seq`, drop deleted keys, atomically
-  * replace the table (write to a staging dir, swap). Idempotent under
-  * micro-batch replay: re-applying a batch reaches the same state because
-  * materialization is keyed keep-last by seq, not an increment.
+  * Per micro-batch, one MERGE for both store layouts:
+  * {{{
+  *   stored LEFT ANTI (keys of the batch's non -U rows)
+  *     ∪ UpsertMaterialize(batch)
+  * }}}
+  * — stored rows the batch does not touch, plus the batch's keep-last
+  * image per key (keys whose last change is `-D` drop out). A key whose
+  * only batch row is a `-U` keeps its stored row, exactly as
+  * [[UpsertMaterialize]] over the whole changelog would. Stored rows
+  * carry no seq: `__seq` orders changes within one batch only. Spark's
+  * own size-based join selection broadcasts the batch's key set when it
+  * is small (the stored side is then a map-side pass that never
+  * shuffles) and sort-merges it when it is not.
   *
-  * At scale the overwrite becomes a MERGE INTO on a table format with
-  * transactional commit (Delta/Iceberg — not in this container); the
-  * changelog→final-state semantics are identical and tested here.
+  * Idempotent under micro-batch replay: re-applying a batch reaches the
+  * same state because materialization is keyed keep-last, not an
+  * increment. At scale the overwrite becomes a MERGE INTO on a table
+  * format with transactional commit (Delta/Iceberg — not on this
+  * build's classpath); the changelog→final-state semantics are identical.
   */
 object UpsertSink {
 
@@ -28,42 +38,30 @@ object UpsertSink {
   /** Default bucket count for NEW upsert stores (VERDICT r18 task 5). */
   val DefaultBuckets = 64
 
-  /** Broadcast gate for the anti-join MERGE (r20): micro-batches at or
-    * under this many rows resolve "which stored keys does the batch
-    * supersede" by broadcasting the batch's key columns into a map-side
-    * LEFT ANTI join — the stored side then never shuffles. 2^20 key rows
-    * is a few tens of MB framed, far under the 8 GB / 512M-row broadcast
-    * cap; larger batches (the 100 TB regime) keep the windowed-union
-    * MERGE. Deployment-tunable (session conf wins, then the env var),
-    * local default constant across the driver's core-count runs. */
-  def antiJoinMaxBatchKeyRows(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.merge.antiJoinMaxKeys")
-      .orElse(sys.env.get("SPARK_GRAFT_MERGE_ANTI_MAX_KEYS"))
-      .map(_.toLong).getOrElse(1L << 20)
+  private val BucketCol = "__bucket"
+
+  /** The store at `tablePath` uses the hash-bucketed layout. */
+  def isBucketed(spark: SparkSession, tablePath: String): Boolean =
+    FsOps.childNames(spark, tablePath).exists(_.startsWith(BucketCol + "="))
 
   /** Bucket-layout decision for a PK sink, made ONCE at query start: an
     * explicit `'distribution-buckets'` declaration always wins; without
     * one, a NEW (empty) store defaults to the hash-bucketed layout
-    * ([[applyBatchBucketed]], [[DefaultBuckets]] buckets) so per-batch
-    * MERGE I/O is proportional to the touched fraction of the table from
-    * day one — the whole-table rewrite was the at-scale default failure
-    * shape (VERDICT r18 what's-wrong #3). An EXISTING store that already
-    * holds unbucketed parquet files keeps its flat layout (a bucketed
-    * MERGE looks only under `__bucket=` dirs and would silently orphan
-    * the flat files); the `.old` aside-dir counts as existing state so a
-    * crash mid-swap cannot flip a store's layout on restart. */
+    * ([[DefaultBuckets]] buckets) so per-batch MERGE I/O is proportional
+    * to the touched fraction of the table from day one — the whole-table
+    * rewrite was the at-scale default failure shape (VERDICT r18
+    * what's-wrong #3). An EXISTING store that already holds unbucketed
+    * parquet files keeps its flat layout (a bucketed MERGE looks only
+    * under `__bucket=` dirs and would silently orphan the flat files);
+    * [[FsOps.current]] reads the `.old` aside-dir too, so a crash
+    * mid-swap cannot flip a store's layout on restart. */
   def resolveBuckets(
       spark: SparkSession,
       tablePath: String,
       declared: Option[Int]): Option[Int] =
     declared.orElse {
-      def flatParquet(p: String): Boolean = {
-        val names = FsOps.childNames(spark, p)
-        names.exists(_.endsWith(".parquet")) &&
-          !names.exists(_.startsWith("__bucket="))
-      }
-      if (flatParquet(tablePath) || flatParquet(tablePath + ".old")) None
-      else Some(DefaultBuckets)
+      val flat = FsOps.current(spark, tablePath).exists(!isBucketed(spark, _))
+      if (flat) None else Some(DefaultBuckets)
     }
 
   /** Read an upsert store back as its LOGICAL table: the internal
@@ -71,30 +69,62 @@ object UpsertSink {
     * the default for new stores) is dropped, flat stores read as-is. */
   def readTable(spark: SparkSession, tablePath: String): DataFrame = {
     val df = spark.read.parquet(tablePath)
-    if (df.columns.contains("__bucket")) df.drop("__bucket") else df
+    if (df.columns.contains(BucketCol)) df.drop(BucketCol) else df
   }
 
-  /** Apply one changelog micro-batch to the stored table. */
+  /** Apply one changelog micro-batch to the stored table: a flat store
+    * (`buckets = None`, rewritten wholly through a crash-safe swap) or
+    * one hash-bucketed into `__bucket = pmod(hash(keys), n)` directories
+    * (only the buckets the batch touches are read and rewritten). */
   def applyBatch(
+      spark: SparkSession,
+      tablePath: String,
+      batch0: DataFrame,
+      keyCols: Seq[String],
+      buckets: Option[Int]): Unit = {
+    val batch = buckets.fold(batch0)(n => batch0.withColumn(
+      BucketCol, pmod(hash(keyCols.map(col): _*), lit(n))))
+    // inside foreachBatch the batch DataFrame is a plan, not rows: every
+    // action re-executes the micro-batch's whole incremental plan (source
+    // read, shuffles, stateful operators), and the MERGE reads the batch
+    // twice — persist it for the duration (guide §5). Each route's first
+    // action materializes it, so the MERGE's join selection sees its real
+    // size, and skips a no-data micro-batch (watermark-advance trigger),
+    // which changes nothing (guide §1.2: measured 0.5-0.9 s per batch).
+    batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      if (buckets.isEmpty) mergeFlat(spark, tablePath, batch, keyCols)
+      else mergeBuckets(spark, tablePath, batch, keyCols)
+    } finally batch.unpersist(blocking = false)
+  }
+
+  /** The MERGE: stored rows whose key the batch does not change, plus the
+    * batch's keep-last image per key. `-U` rows change no key on their
+    * own ([[UpsertMaterialize]] drops them), so they stay out of the key
+    * set. Null-safe equality: keep-last groups NULL keys together. */
+  private def merge(
+      stored: DataFrame,
+      batch: DataFrame,
+      keyCols: Seq[String]): DataFrame = {
+    val bk = batch.where(col(RowKind.kindCol) =!= RowKind.UpdateBefore)
+      .select(keyCols.map(k => col(k).as("__bk_" + k)): _*)
+    val cond = keyCols.map(k => stored(k) <=> bk("__bk_" + k)).reduce(_ && _)
+    stored.join(bk, cond, "left_anti")
+      .unionByName(UpsertMaterialize(batch, keyCols))
+  }
+
+  private def mergeFlat(
       spark: SparkSession,
       tablePath: String,
       batch: DataFrame,
       keyCols: Seq[String]): Unit = {
-    // crash-safe read (r18, extending ADVICE r17's rank-store fix to the
-    // shared MERGE): a crash between the swap's two renames leaves the
-    // current state in tablePath + ".old" — read it back rather than
-    // silently merging into an empty table, which would permanently drop
-    // every pre-batch key
-    val old = tablePath + ".old"
-    def has(p: String): Boolean =
-      FsOps.childNames(spark, p).exists(_.endsWith(".parquet"))
-    // scale steering (metadata-only check, once per path): the plain
+    if (batch.count() == 0) return
+    // scale steering (metadata-only check, once per path): the flat
     // MERGE rewrites the WHOLE store per micro-batch — right at modest
     // sizes, a scale-killer past ~1 GiB, where the bucketed layout
     // ('distribution-buckets' on the sink) rewrites only touched buckets.
     // The already-warned check comes FIRST (review r18): sizeBytes is a
-    // full listStatus, and gating on it before the set lookup re-listed
-    // the table on every micro-batch after the one-shot warning fired.
+    // full listStatus.
     if (!warnedUnbucketed.contains(tablePath) &&
         FsOps.sizeBytes(spark, tablePath) > UnbucketedWarnBytes &&
         warnedUnbucketed.add(tablePath))
@@ -102,32 +132,54 @@ object UpsertSink {
         s"upsert store $tablePath exceeds 1 GiB with no bucketing — " +
           "each micro-batch rewrites it wholly; declare " +
           "'distribution-buckets' on the sink for touched-bucket MERGE I/O")
-    val existing =
-      if (has(tablePath)) Some(spark.read.parquet(tablePath))
-      else if (has(old)) Some(spark.read.parquet(old))
-      else None
+    val merged = FsOps.current(spark, tablePath)
+      .fold(UpsertMaterialize(batch, keyCols))(p =>
+        merge(spark.read.parquet(p), batch, keyCols))
+    FsOps.replace(spark, tablePath)(merged.write.mode("overwrite").parquet)
+  }
 
-    // stored rows re-enter as seq-0 upserts so any change in the batch
-    // (seq >= 1) supersedes them
-    val storedAsLog = existing.map(
-      _.withColumn(RowKind.kindCol, lit(RowKind.UpdateAfter))
-        .withColumn(RowKind.seqCol, lit(0L)))
-
-    val merged = UpsertMaterialize(
-      storedAsLog.map(_.unionByName(batch)).getOrElse(batch), keyCols)
-
-    val staging = tablePath + ".staging"
-    merged.write.mode("overwrite").parquet(staging)
-    // crash-safe swap (single-FS renames; transactional commit is the
-    // table format's job at scale): the previous state moves ASIDE
-    // before staging promotes, so every crash point leaves either
-    // tablePath or tablePath+".old" holding the pre-batch state
-    if (FsOps.exists(spark, tablePath)) {
-      FsOps.deleteRecursive(spark, old)
-      FsOps.rename(spark, tablePath, old)
+  /** Touched-bucket MERGE (dynamic partition overwrite): per-batch I/O is
+    * proportional to the touched fraction of the table, not its size. A
+    * bucket whose keys are all deleted is removed explicitly (dynamic
+    * overwrite skips partitions absent from the written data). File
+    * count stays bounded: every touched bucket is rewritten wholly per
+    * batch, so its files never exceed the writing tasks of one batch. */
+  private def mergeBuckets(
+      spark: SparkSession,
+      tablePath: String,
+      batch: DataFrame,
+      keyCols: Seq[String]): Unit = {
+    // one pass answers which buckets the batch touches and which of them
+    // could EMPTY (only a bucket receiving a -D can; the common all-upsert
+    // batch skips that bookkeeping)
+    val info = batch.groupBy(col(BucketCol))
+      .agg(max(col(RowKind.kindCol) === lit(RowKind.Delete)))
+      .collect()
+    if (info.isEmpty) return
+    if (!isBucketed(spark, tablePath)) {
+      UpsertMaterialize(batch, keyCols)
+        .write.mode("overwrite").partitionBy(BucketCol).parquet(tablePath)
+      return
     }
-    FsOps.rename(spark, staging, tablePath)
-    FsOps.deleteRecursive(spark, old)
+    val stored = spark.read.parquet(tablePath)
+      .where(col(BucketCol).isin(info.map(_.get(0)): _*))
+    val suspects = info.filter(_.getBoolean(1)).map(_.getInt(0))
+    // emptied-bucket detection is a METADATA diff, not a Spark job: a
+    // dynamic partition overwrite replaces the files of every bucket the
+    // written data contains (fresh UUID part names) and leaves row-less
+    // buckets untouched — so a suspect bucket whose file listing is
+    // byte-identical across the write received no surviving rows
+    def files(b: Int): Set[String] =
+      FsOps.childNames(spark, s"$tablePath/$BucketCol=$b")
+        .filterNot(_.startsWith("_")).toSet
+    val namesBefore = suspects.map(b => b -> files(b)).toMap
+    merge(stored, batch, keyCols).write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(BucketCol).parquet(tablePath)
+    suspects.foreach { b =>
+      if (files(b) == namesBefore(b))
+        FsOps.deleteRecursive(spark, s"$tablePath/$BucketCol=$b")
+    }
   }
 
   /** Start a streaming upsert sink for a changelog-emitting query. */
@@ -140,143 +192,7 @@ object UpsertSink {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(batch.sparkSession, tablePath, batch, keyCols)
-      }
-      .startScoped(changelog.sparkSession)
-
-  /** Bucketed MERGE (the at-scale form of [[applyBatch]], VERDICT r2 note):
-    * the stored table is hash-partitioned into `__bucket = pmod(hash(keys),
-    * numBuckets)` directories; a micro-batch only READS and REWRITES the
-    * buckets its keys touch (dynamic partition overwrite), so per-batch
-    * I/O is proportional to the touched fraction of the table, not its
-    * size. A bucket whose keys are all deleted is removed explicitly
-    * (dynamic overwrite skips partitions absent from the written data).
-    * Same idempotence argument as [[applyBatch]]; transactional commit is
-    * still the table format's job at 100 TB, but the touched-partition
-    * I/O shape here IS the MERGE shape.
-    */
-  def applyBatchBucketed(
-      spark: SparkSession,
-      tablePath: String,
-      batch0: DataFrame,
-      keyCols: Seq[String],
-      numBuckets: Int = 64): Unit = {
-    val batch = batch0.withColumn(
-      "__bucket", pmod(hash(keyCols.map(col): _*), lit(numBuckets)))
-    // Each action below re-executes the micro-batch's WHOLE incremental
-    // plan (source read, shuffles, stateful operators) — inside
-    // foreachBatch the batch DataFrame is a plan, not materialized rows.
-    // The MERGE needs the batch 2-3 times (touched-bucket probe, merged
-    // write, emptied-bucket check), so persist it for the duration
-    // (guide §5: reuse-justified caching, scoped and unpersisted).
-    batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val exists =
-        FsOps.childNames(spark, tablePath).exists(_.startsWith("__bucket="))
-
-      if (!exists) {
-        UpsertMaterialize(batch, keyCols)
-          .write.mode("overwrite").partitionBy("__bucket").parquet(tablePath)
-        return
-      }
-
-      // one pass answers "which buckets does this batch touch", "which of
-      // them could EMPTY" (only a bucket receiving a -D can — the common
-      // all-upsert batch then skips the emptied-bucket bookkeeping
-      // entirely) and "how many rows is the batch" (the anti-join
-      // broadcast gate below)
-      val info = batch.groupBy(col("__bucket"))
-        .agg(max(col(RowKind.kindCol) === lit(RowKind.Delete)).as("hasdel"),
-          count(lit(1)).as("n"))
-        .collect()
-      // a no-data micro-batch (watermark-advance trigger) touches nothing:
-      // the collect above already executed the incremental plan (state
-      // commit included), so the stored-read + overwrite + listing I/O
-      // below would all be no-ops — skip them (guide §1.2: don't compute
-      // what you throw away; measured 0.5-0.9 s per empty batch)
-      if (info.isEmpty) return
-      val affected = info.map(_.getInt(0)).sorted
-      val suspects = info.filter(_.getBoolean(1)).map(_.getInt(0))
-      val batchRows = info.map(_.getLong(2)).sum
-      val storedRaw = spark.read.parquet(tablePath)
-        .where(col("__bucket").isin(affected.map(Int.box): _*))
-      // Anti-join MERGE (r20, VERDICT r19 task 5, guide §2.4/§3.1):
-      // stored rows are all seq-0 and unique per key, so
-      //   UpsertMaterialize(stored ∪ batch)
-      //     = stored[key ∉ batch keys] ∪ UpsertMaterialize(batch)
-      // given the documented seq contract (batch seqs ≥ 1 supersede
-      // stored seq 0). With the batch's key set BROADCAST, the stored
-      // side — usually the larger — is a map-side LEFT ANTI pass: it
-      // never shuffles through the keep-last window. Null-safe equality
-      // mirrors the window path (a window groups NULL keys together).
-      // GATED on the batch row count (collected above at zero extra
-      // cost): a 100 TB batch's key set can exceed the broadcast cap, so
-      // oversized batches fall back to the windowed union. File-count
-      // shape: every touched bucket is rewritten wholly per batch, so
-      // files per bucket stay bounded by (stored scan tasks + batch
-      // window tasks), never compounding across batches — locked by
-      // UpsertSinkSpec's file-count assertions.
-      val merged =
-        if (batchRows <= antiJoinMaxBatchKeyRows(spark)) {
-          val bk = batch
-            .select(keyCols.map(k => col(k).as("__bk_" + k)): _*)
-          val cond = keyCols
-            .map(k => storedRaw(k) <=> bk("__bk_" + k))
-            .reduce(_ && _)
-          storedRaw.join(broadcast(bk), cond, "left_anti")
-            .unionByName(UpsertMaterialize(batch, keyCols))
-        } else {
-          val stored = storedRaw
-            .withColumn(RowKind.kindCol, lit(RowKind.UpdateAfter))
-            .withColumn(RowKind.seqCol, lit(0L))
-          UpsertMaterialize(stored.unionByName(batch), keyCols)
-        }
-      // emptied-bucket detection is a METADATA diff, not a Spark job: a
-      // dynamic partition overwrite replaces the files of every bucket the
-      // written data contains (fresh UUID part names) and leaves row-less
-      // buckets untouched — so a suspect bucket whose file listing is
-      // byte-identical across the write received no surviving rows.
-      // (Previously this re-evaluated the whole merge plan a second time
-      // just to ask which suspects survive — a full extra Spark job per
-      // delete-carrying micro-batch; guide §1.2.)
-      // dev-only plan evidence hook (r20): dump the MERGE's physical plan
-      // so the anti-join's "stored side never shuffles" claim is auditable
-      // (plans/r20/upsert_merge_anti_after.txt)
-      if (sys.env.contains("SPARK_GRAFT_MERGE_EXPLAIN"))
-        System.err.println("[merge-plan]\n" +
-          merged.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-      val namesBefore: Map[Int, Set[String]] = suspects.map { b =>
-        b -> FsOps.childNames(spark, s"$tablePath/__bucket=$b")
-          .filterNot(_.startsWith("_")).toSet
-      }.toMap
-      merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__bucket").parquet(tablePath)
-
-      // buckets emptied by deletes produce no rows — remove their dirs
-      suspects.foreach { b =>
-        val after = FsOps.childNames(spark, s"$tablePath/__bucket=$b")
-          .filterNot(_.startsWith("_")).toSet
-        if (after == namesBefore(b))
-          FsOps.deleteRecursive(spark, s"$tablePath/__bucket=$b")
-      }
-    } finally batch.unpersist(blocking = false)
-  }
-
-  /** Streaming face of [[applyBatchBucketed]]. */
-  def writeUpsertBucketed(
-      changelog: DataFrame,
-      tablePath: String,
-      keyCols: Seq[String],
-      checkpoint: String,
-      numBuckets: Int = 64): org.apache.spark.sql.streaming.StreamingQuery =
-    changelog.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatchBucketed(batch.sparkSession, tablePath, batch, keyCols,
-          numBuckets)
+        applyBatch(batch.sparkSession, tablePath, batch, keyCols, None)
       }
       .startScoped(changelog.sparkSession)
 }

@@ -510,8 +510,9 @@ object FlinkDdl {
     *  - `UPDATE t SET c = e[, …] [WHERE cond]` — rewrite-and-swap with
     *    `when(cond, e)` per assignment.
     *  - `TRUNCATE TABLE t` — removes the table's files.
-    * (The bucketed upsert layout has its own in-place path:
-    * [[graft.changelog.RowLevelOps]].)
+    * A hash-bucketed upsert store (the default layout of a PK sink) takes
+    * [[graft.changelog.RowLevelOps]] instead: touched buckets rewrite in
+    * place, so the store keeps the layout its streaming MERGE writes.
     */
   private def executeRowLevel(
       spark: SparkSession,
@@ -542,6 +543,10 @@ object FlinkDdl {
           return
         }
         val condText = rewriteExpr(restFrom(p.i))
+        if (graft.changelog.UpsertSink.isBucketed(spark, s.path)) {
+          graft.changelog.RowLevelOps.delete(spark, s.path, expr(condText))
+          return
+        }
         val partKeys = s.options.get("partition-keys")
           .map(_.split(",").map(_.trim).toSeq).getOrElse(Nil)
         val condRefs = spark.sessionState.sqlParser
@@ -586,6 +591,17 @@ object FlinkDdl {
         }
         val cond =
           if (p.opt("WHERE")) expr(rewriteExpr(restFrom(p.i))) else lit(true)
+        if (graft.changelog.UpsertSink.isBucketed(spark, s.path)) {
+          // a row's bucket is the hash of its key: moving keys would
+          // strand rows in the wrong bucket
+          require(!assigns.exists(a =>
+              s.primaryKey.exists(_.equalsIgnoreCase(a._1))),
+            s"UPDATE ${s.name}: a bucketed upsert store cannot reassign " +
+              s"its PRIMARY KEY [${s.primaryKey.mkString(", ")}]")
+          graft.changelog.RowLevelOps.update(spark, s.path, cond,
+            assigns.map { case (c, e) => c -> expr(e) }.toMap)
+          return
+        }
         rewriteSwap(spark, s, df => assigns.foldLeft(df) {
           case (d, (c, e)) =>
             d.withColumn(c, when(coalesce(cond, lit(false)), expr(e))
@@ -594,22 +610,24 @@ object FlinkDdl {
     }
   }
 
-  /** Rewrite a filesystem table through `transform` into a temp sibling
-    * dir, then atomically swap it in (overwriting a path being read is
-    * not safe in-place). */
+  /** Rewrite a filesystem table through `transform` into a staging
+    * sibling dir, then swap it in crash-safe (overwriting a path being
+    * read is not safe in-place). Reads from `.old` when a crash left the
+    * table there. */
   private def rewriteSwap(
       spark: SparkSession,
       spec: TableSpec,
       transform: DataFrame => DataFrame): Unit = {
-    val tmp = spec.path + ".__graft_rewrite"
-    graft.changelog.FsOps.deleteRecursive(spark, tmp)
-    val w = transform(fsRead(spark, spec)).write.mode("overwrite")
-      .format(spec.format)
-    spec.options.get("partition-keys")
-      .fold(w)(ks => w.partitionBy(ks.split(",").map(_.trim): _*))
-      .save(tmp)
-    graft.changelog.FsOps.deleteRecursive(spark, spec.path)
-    graft.changelog.FsOps.rename(spark, tmp, spec.path)
+    val from = graft.changelog.FsOps.current(spark, spec.path)
+      .getOrElse(spec.path)
+    graft.changelog.FsOps.replace(spark, spec.path) { staging =>
+      val w = transform(fsRead(spark,
+          spec.copy(options = spec.options + ("path" -> from))))
+        .write.mode("overwrite").format(spec.format)
+      spec.options.get("partition-keys")
+        .fold(w)(ks => w.partitionBy(ks.split(",").map(_.trim): _*))
+        .save(staging)
+    }
   }
 
   /** Small local-metadata result (SHOW/DESCRIBE/EXPLAIN output). */
@@ -2343,27 +2361,15 @@ object FlinkDdl {
         val ckpt = spec.options.getOrElse("sink.checkpoint-dir",
           java.nio.file.Files
             .createTempDirectory(s"graft_rank_ck_${spec.name}_").toString)
-        // Crash-safe swap (ADVICE r17): the previous state moves ASIDE
-        // (dest -> dest+".old") before the staging promotion, so a crash
-        // between the renames leaves either dest or .old on disk — the
-        // candidate-store reader below falls back to .old — instead of
-        // losing the store to a delete-then-rename hole (the sink side
-        // always self-healed on replay; the incremental store did not).
-        // Sink-facing swaps honor the DECLARED format (ADVICE r17: the
-        // parquet-only write corrupted csv/json-declared sinks); the
-        // .rankstate store is engine-internal and stays parquet.
-        def swap(df: DataFrame, dest: String, fmt: String): Unit = {
-          val sp = df.sparkSession
-          val staging = dest + ".staging"
-          val old = dest + ".old"
-          df.write.mode("overwrite").format(fmt).save(staging)
-          if (graft.changelog.FsOps.exists(sp, dest)) {
-            graft.changelog.FsOps.deleteRecursive(sp, old)
-            graft.changelog.FsOps.rename(sp, dest, old)
-          }
-          graft.changelog.FsOps.rename(sp, staging, dest)
-          graft.changelog.FsOps.deleteRecursive(sp, old)
-        }
+        // Crash-safe swap (ADVICE r17): a crash between the renames
+        // leaves the candidate store in .old, which the reader below
+        // falls back to. Sink-facing swaps honor the DECLARED format
+        // (ADVICE r17: the parquet-only write corrupted csv/json-declared
+        // sinks); the .rankstate store is engine-internal and stays
+        // parquet.
+        def swap(df: DataFrame, dest: String, fmt: String): Unit =
+          graft.changelog.FsOps.replace(df.sparkSession, dest)(
+            df.write.mode("overwrite").format(fmt).save)
         def applyOuter(sp: SparkSession, snapshot: DataFrame): DataFrame =
           alignToSink(spec, FlinkSql.sql(sp, rs.outerText,
             Map(StreamingRank.Marker -> snapshot), models))
@@ -2377,14 +2383,8 @@ object FlinkDdl {
             .startScoped(spark), ckpt))
         } else if (modeOk(in, Append()) && rs.candidateText.nonEmpty) {
           val stateDir = spec.path + ".rankstate"
-          def readState(sp: SparkSession): Option[DataFrame] = {
-            def has(p: String) = graft.changelog.FsOps.childNames(sp, p)
-              .exists(_.endsWith(".parquet"))
-            if (has(stateDir)) Some(sp.read.parquet(stateDir))
-            else if (has(stateDir + ".old"))
-              Some(sp.read.parquet(stateDir + ".old"))
-            else None
-          }
+          def readState(sp: SparkSession): Option[DataFrame] =
+            graft.changelog.FsOps.current(sp, stateDir).map(sp.read.parquet(_))
           Some((in.writeStream.outputMode("append")
             .option("checkpointLocation", ckpt)
             .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -2562,20 +2562,15 @@ object FlinkDdl {
           .option("checkpointLocation", ckpt)
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             // Update-mode micro-batches carry each changed key once;
-            // re-enter them as +U upserts at a batch-monotonic seq (>= 1)
-            // so the keep-last MERGE supersedes stored state (seq 0).
+            // re-enter them as +U upserts, superseding their stored rows.
             // Replay-idempotent: re-applying a batch re-merges the same
-            // values at the same seq.
+            // values.
             val log = batch
               .withColumn(graft.changelog.RowKind.kindCol,
                 lit(graft.changelog.RowKind.UpdateAfter))
               .withColumn(graft.changelog.RowKind.seqCol, lit(batchId + 1L))
-            buckets match {
-              case Some(n) => graft.changelog.UpsertSink.applyBatchBucketed(
-                batch.sparkSession, spec.path, log, pk, n)
-              case None => graft.changelog.UpsertSink.applyBatch(
-                batch.sparkSession, spec.path, log, pk)
-            }
+            graft.changelog.UpsertSink.applyBatch(
+              batch.sparkSession, spec.path, log, pk, buckets)
           }
           .startScoped(aligned.sparkSession)
       case ("filesystem", "complete") if exitRewrite.isDefined =>
@@ -2600,12 +2595,8 @@ object FlinkDdl {
               .withColumn(graft.changelog.RowKind.seqCol, lit(batchId + 1L))
               .drop(KeepCol)
             onMergeBatch.foreach(f => f(spec.name, log.count()))
-            buckets match {
-              case Some(n) => graft.changelog.UpsertSink.applyBatchBucketed(
-                batch.sparkSession, spec.path, log, pk, n)
-              case None => graft.changelog.UpsertSink.applyBatch(
-                batch.sparkSession, spec.path, log, pk)
-            }
+            graft.changelog.UpsertSink.applyBatch(
+              batch.sparkSession, spec.path, log, pk, buckets)
           }
           .startScoped(aligned.sparkSession)
       case ("filesystem", "complete") =>
@@ -2613,23 +2604,12 @@ object FlinkDdl {
           .outputMode("complete")
           .option("checkpointLocation", ckpt)
           .foreachBatch { (batch: DataFrame, _: Long) =>
-            // each batch IS the whole result: stage + swap (idempotent
-            // under replay — rewriting the same state is a no-op), in the
-            // sink's DECLARED format (no merge-back read here, unlike the
-            // upsert path, so any writable format works). Crash-safe
-            // aside-rename like every other swap (r18): a crash between
-            // the renames leaves the previous result in .old instead of
-            // a missing table until the next batch.
-            val sp = batch.sparkSession
-            val staging = spec.path + ".staging"
-            val old = spec.path + ".old"
-            batch.write.mode("overwrite").format(spec.format).save(staging)
-            if (graft.changelog.FsOps.exists(sp, spec.path)) {
-              graft.changelog.FsOps.deleteRecursive(sp, old)
-              graft.changelog.FsOps.rename(sp, spec.path, old)
-            }
-            graft.changelog.FsOps.rename(sp, staging, spec.path)
-            graft.changelog.FsOps.deleteRecursive(sp, old)
+            // each batch IS the whole result: crash-safe stage + swap
+            // (idempotent under replay — rewriting the same state is a
+            // no-op), in the sink's DECLARED format (no merge-back read
+            // here, unlike the upsert path, so any writable format works)
+            graft.changelog.FsOps.replace(batch.sparkSession, spec.path)(
+              batch.write.mode("overwrite").format(spec.format).save)
           }
           .startScoped(aligned.sparkSession)
       case ("filesystem", _) =>

@@ -111,10 +111,11 @@ object StreamingCdc {
     * wrap below an earlier row's seq, so the guard RAISES instead of
     * wrapping silently (raise source parallelism or cap the batch with
     * `maxFilesPerTrigger`). The counter restarting at 0 each micro-batch
-    * is harmless: the sink MERGE re-enters stored state at seq 0, so a
-    * later batch's rows always supersede earlier batches regardless of
-    * their seq values — cross-batch order comes from batch sequencing,
-    * and this seq only needs to order rows WITHIN one batch. */
+    * is harmless: in the sink MERGE any batch row supersedes the stored
+    * row of its key, so a later batch's rows always supersede earlier
+    * batches regardless of their seq values — cross-batch order comes
+    * from batch sequencing, and this seq only needs to order rows WITHIN
+    * one batch. */
   def withArrivalSeq(log: DataFrame): DataFrame =
     // ArrivalId: graft's streaming-legal per-partition row counter (see
     // its scaladoc for why the replay contract holds here); the bound
@@ -234,23 +235,6 @@ object StreamingCdc {
     }.map(_.toLowerCase).toSet
   }
 
-  /** Atomic whole-result replacement into the sink (the complete-mode
-    * materialization), with the uniform crash-safe aside-rename swap. */
-  private def truncateReplace(
-      spec: FlinkDdl.TableSpec, batch: DataFrame): Unit = {
-    import graft.changelog.FsOps
-    val sp = batch.sparkSession
-    val staging = spec.path + ".staging"
-    val old = spec.path + ".old"
-    batch.write.mode("overwrite").format(spec.format).save(staging)
-    if (FsOps.exists(sp, spec.path)) {
-      FsOps.deleteRecursive(sp, old)
-      FsOps.rename(sp, spec.path, old)
-    }
-    FsOps.rename(sp, staging, spec.path)
-    FsOps.deleteRecursive(sp, old)
-  }
-
   private def requireUpsertSink(spec: FlinkDdl.TableSpec): Unit = {
     require(spec.connector == "filesystem",
       s"CDC-sourced INSERT supports filesystem sinks, not " +
@@ -297,12 +281,8 @@ object StreamingCdc {
     // at-scale I/O shape for big key spaces
     val buckets = UpsertSink.resolveBuckets(spark, spec.path,
       spec.options.get("distribution-buckets").map(_.toInt))
-    def merge(batch: DataFrame, log: DataFrame): Unit = buckets match {
-      case Some(n) => UpsertSink.applyBatchBucketed(
-        batch.sparkSession, spec.path, log, pk, n)
-      case None => UpsertSink.applyBatch(
-        batch.sparkSession, spec.path, log, pk)
-    }
+    def merge(batch: DataFrame, log: DataFrame): Unit =
+      UpsertSink.applyBatch(batch.sparkSession, spec.path, log, pk, buckets)
 
     // Top-level aggregate (optionally under an attribute-only Project the
     // analyzer sometimes leaves above it) → an aggregation tier.
@@ -346,13 +326,10 @@ object StreamingCdc {
             agg.aggregateExpressions.map(ne => StreamingCdcJoin
               .rebind(ne, child.output).asInstanceOf[NamedExpression]),
             child)
-        val joinChild = !(child eq agg.child)
         if (signedCapable(agg2))
-          startSignedAgg(spark, spec, agg2, outer, sign, ckpt, merge,
-            joinChild)
+          startSignedAgg(spark, spec, agg2, outer, sign, ckpt, merge)
         else
-          startRetractableAgg(spark, spec, agg2, outer, ckpt, merge,
-            joinChild)
+          startRetractableAgg(spark, spec, agg2, outer, ckpt, merge)
 
       case None if StreamingCdcJoin.hasJoin(analyzed) =>
         // join passthrough: ChangelogJoin output (an upsert changelog of
@@ -376,11 +353,7 @@ object StreamingCdc {
             // its 2·seq+bit stamp over the arrival-seq domain
             merge(batch, alignKeeping(spec, batch))
           }
-          // join-tier partition scope (r20, re-adjudicating the r19
-          // full-parallelism exemption): post-net-emission and post-v2-
-          // state-codec the per-key step is no longer CPU-bound — see
-          // GraftSession.joinStreamPartitions for the fresh A/B
-          .startJoinScoped(spark)
+          .startScoped(spark)
 
       case None =>
         // Passthrough tier: projection/filter only. Thread the changelog
@@ -455,16 +428,8 @@ object StreamingCdc {
       outer: Option[Project],
       sign: Attribute,
       ckpt: String,
-      merge: (DataFrame, DataFrame) => Unit,
-      joinChild: Boolean = false)
+      merge: (DataFrame, DataFrame) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    // a ChangelogJoin child takes the join-tier partition scope (r20 —
-    // see GraftSession.joinStreamPartitions), the rest the streaming one
-    implicit class TierStart[T](
-        w: org.apache.spark.sql.streaming.DataStreamWriter[T]) {
-      def startTier(): org.apache.spark.sql.streaming.StreamingQuery =
-        if (joinChild) w.startJoinScoped(spark) else w.startScoped(spark)
-    }
     val rewritten = rewriteAggregate(agg, sign)
     val plan = outer match {
       case Some(p) =>
@@ -480,8 +445,8 @@ object StreamingCdc {
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           // groups whose live-row count reached zero retract (-D); the
-          // rest upsert at a batch-monotonic seq, superseding stored
-          // state (seq 0). Replay-idempotent like the update tier.
+          // rest upsert, superseding their stored rows. Replay-idempotent
+          // like the update tier.
           val log = batch
             .withColumn(RowKind.kindCol,
               when(col(LiveCol) > 0, RowKind.UpdateAfter)
@@ -490,18 +455,20 @@ object StreamingCdc {
             .drop(LiveCol)
           merge(batch, alignKeeping(spec, log))
         }
-        .startTier()
+        .startScoped(spark)
     else
       pf.writeStream
         .outputMode("complete")
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          // whole-result tier: drop dead groups, atomic truncate-replace
-          truncateReplace(spec,
-            align(spec, batch.where(col(LiveCol) > 0).drop(LiveCol),
-              keepMeta = false))
+          // whole-result tier: drop dead groups, crash-safe
+          // truncate-replace of the whole sink
+          val live = align(spec,
+            batch.where(col(LiveCol) > 0).drop(LiveCol), keepMeta = false)
+          graft.changelog.FsOps.replace(batch.sparkSession, spec.path)(
+            live.write.mode("overwrite").format(spec.format).save)
         }
-        .startTier()
+        .startScoped(spark)
   }
 
   /** Hidden value column the retractable tier folds. */
@@ -526,14 +493,8 @@ object StreamingCdc {
       agg: Aggregate,
       outer: Option[Project],
       ckpt: String,
-      merge: (DataFrame, DataFrame) => Unit,
-      joinChild: Boolean = false)
+      merge: (DataFrame, DataFrame) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    implicit class TierStart[T](
-        w: org.apache.spark.sql.streaming.DataStreamWriter[T]) {
-      def startTier(): org.apache.spark.sql.streaming.StreamingQuery =
-        if (joinChild) w.startJoinScoped(spark) else w.startScoped(spark)
-    }
     val childOut = agg.child.output
     val metaAttrs = Seq(RowKind.kindCol, RowKind.seqCol).map(n =>
       childOut.find(_.name == n).getOrElse(
@@ -632,12 +593,12 @@ object StreamingCdc {
       .outputMode("append")
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // transitions carry their own per-key monotone seq (>= 1), so
-        // keep-last MERGE supersedes stored state (seq 0); -U rows are
-        // dropped by the materializer, -D deletes the key
+        // transitions carry their own per-key monotone seq, so keep-last
+        // picks each key's final image; -U rows are dropped by the
+        // materializer, -D deletes the key
         merge(batch, alignKeeping(spec, batch))
       }
-      .startTier()
+      .startScoped(spark)
   }
 
   /** Hidden liveness column: `SUM(sign)` = number of live rows in the

@@ -1204,7 +1204,7 @@ class ChangelogSpec extends SparkSpecBase {
     // batch 1: keys 1..40 at v=k*1
     val b1 = (1L to 40L).map(k => (k, k * 1.0, 1L, RowKind.Insert))
       .toDF("k", "v", RowKind.seqCol, RowKind.kindCol)
-    UpsertSink.applyBatchBucketed(spark, table, b1, Seq("k"), buckets)
+    UpsertSink.applyBatch(spark, table, b1, Seq("k"), Some(buckets))
 
     // pick a key and record its bucket dir's file set; then update a key
     // from a DIFFERENT bucket and assert the first bucket's files are
@@ -1222,7 +1222,7 @@ class ChangelogSpec extends SparkSpecBase {
 
     val b2 = Seq((otherKey, 999.0, 2L, RowKind.UpdateAfter))
       .toDF("k", "v", RowKind.seqCol, RowKind.kindCol)
-    UpsertSink.applyBatchBucketed(spark, table, b2, Seq("k"), buckets)
+    UpsertSink.applyBatch(spark, table, b2, Seq("k"), Some(buckets))
     assert(filesOf(bucketOf(k1)) == before,
       "untouched bucket was rewritten")
 
@@ -1236,61 +1236,126 @@ class ChangelogSpec extends SparkSpecBase {
     val victims = (1L to 40L).filter(k => bucketOf(k) == victim)
     val b3 = victims.map(k => (k, 0.0, 3L, RowKind.Delete))
       .toDF("k", "v", RowKind.seqCol, RowKind.kindCol)
-    UpsertSink.applyBatchBucketed(spark, table, b3, Seq("k"), buckets)
+    UpsertSink.applyBatch(spark, table, b3, Seq("k"), Some(buckets))
     assert(!new java.io.File(table, s"__bucket=$victim").exists(),
       "emptied bucket dir not removed")
     val after = spark.read.parquet(table).select("k").as[Long].collect().toSet
     assert(after == (1L to 40L).toSet -- victims)
   }
 
-  test("anti-join MERGE matches the windowed fallback, files stay bounded") {
-    // r20: the bucketed MERGE resolves superseded stored keys with a
-    // broadcast LEFT ANTI join when the batch is under the key gate; an
-    // oversized batch falls back to the windowed union. Both routes must
-    // reach the identical store, and the anti-join's split write path
-    // (stored scan tasks + batch window tasks per bucket) must not
-    // compound file counts across batches.
-    val base = java.nio.file.Files.createTempDirectory("graft-anti-")
-    val tAnti = base.toString + "/anti"
-    val tWin = base.toString + "/win"
+  test("upsert MERGE matches the UpsertMaterialize oracle, both " +
+      "layouts and joins") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    // The oracle is the changelog's own final state: after every batch
+    // the store must equal UpsertMaterialize over ALL batches so far,
+    // whichever layout holds it and whichever join Spark picks for the
+    // MERGE's key set.
+    val base = java.nio.file.Files.createTempDirectory("graft-merge-")
     val buckets = 8
-    def batchDf(rows: Seq[(Long, Double, Long, String)]) =
+    def batchDf(rows: Seq[(Option[Long], Double, Long, String)]) =
       rows.toDF("k", "v", RowKind.seqCol, RowKind.kindCol)
     val batches = Seq(
-      (1L to 60L).map(k => (k, k * 1.0, 1L, RowKind.Insert)),
+      (1L to 60L).map(k => (Some(k), k * 1.0, 1L, RowKind.Insert)) :+
+        ((None, -1.0, 1L, RowKind.Insert)),
       // updates + a delete + a fresh key
-      Seq((3L, 33.0, 2L, RowKind.UpdateAfter),
-        (7L, 0.0, 3L, RowKind.Delete),
-        (61L, 61.0, 4L, RowKind.Insert)),
-      // churn again over the same buckets
-      Seq((3L, 34.0, 5L, RowKind.UpdateAfter),
-        (61L, 0.0, 6L, RowKind.Delete),
-        (8L, 88.0, 7L, RowKind.UpdateAfter)))
-    val gateKey = "spark.graft.merge.antiJoinMaxKeys"
-    batches.foreach { b =>
-      UpsertSink.applyBatchBucketed(spark, tAnti, batchDf(b), Seq("k"),
-        buckets)
-      spark.conf.set(gateKey, "0") // force the windowed fallback
-      try UpsertSink.applyBatchBucketed(spark, tWin, batchDf(b), Seq("k"),
-        buckets)
-      finally spark.conf.unset(gateKey)
+      Seq((Some(3L), 33.0, 2L, RowKind.UpdateAfter),
+        (Some(7L), 0.0, 3L, RowKind.Delete),
+        (Some(61L), 61.0, 4L, RowKind.Insert)),
+      // a lone -U for a stored key changes nothing
+      Seq((Some(5L), 5.0, 5L, RowKind.UpdateBefore)),
+      // churn over the same keys: a -U/+U pair, a re-delete, an upsert
+      // of the NULL key, and a lone -U beside them
+      Seq((Some(3L), 33.0, 6L, RowKind.UpdateBefore),
+        (Some(3L), 34.0, 7L, RowKind.UpdateAfter),
+        (Some(61L), 0.0, 8L, RowKind.Delete),
+        (Some(8L), 88.0, 9L, RowKind.UpdateAfter),
+        (None, -2.0, 10L, RowKind.UpdateAfter),
+        (Some(9L), 9.0, 11L, RowKind.UpdateBefore)))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "v").as[(Option[Long], Double)].collect().toSet
+
+    // the MERGE write's executed plan: the query plans holding a LEFT
+    // ANTI join (AQE drops the join when the key set is empty, as for
+    // the lone -U batch). Listener events arrive asynchronously but in
+    // order, so a marker query seen last means every plan before it is in.
+    val mergePlans =
+      new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val markers = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case o => o +: o.children.flatMap(nodes)
     }
-    val got = spark.read.parquet(tAnti).select("k", "v")
-      .as[(Long, Double)].collect().toMap
-    val want = spark.read.parquet(tWin).select("k", "v")
-      .as[(Long, Double)].collect().toMap
-    assert(got == want, "anti-join and windowed MERGE diverged")
-    assert(got(3L) == 34.0 && got(8L) == 88.0 &&
-      !got.contains(7L) && !got.contains(61L) && got.size == 59)
-    // file-count bound: every touched bucket is rewritten wholly per
-    // batch, so per-bucket files never exceed the writing tasks of ONE
-    // batch (stored-scan + batch-window tasks), and never compound
-    (0 until buckets).foreach { b =>
-      val d = new java.io.File(tAnti, s"__bucket=$b")
-      val n = Option(d.listFiles()).getOrElse(Array.empty)
-        .count(_.getName.endsWith(".parquet"))
-      assert(n <= 16, s"bucket $b holds $n files — small-files regression")
+    def antiJoin(p: SparkPlan): Boolean = nodes(p).exists {
+      case j: BroadcastHashJoinExec => j.joinType == LeftAnti
+      case j: SortMergeJoinExec => j.joinType == LeftAnti
+      case _ => false
     }
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (antiJoin(qe.executedPlan)) mergePlans.add(qe.executedPlan)
+        else markers.add(qe.logical.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // replay every batch into both layouts; returns the MERGE plans
+    def replay(tag: String): Seq[SparkPlan] = {
+      import scala.jdk.CollectionConverters._
+      mergePlans.clear()
+      val layouts = Seq(None, Some(buckets))
+      batches.indices.foreach { i =>
+        val want = rows(UpsertMaterialize(
+          batches.take(i + 1).map(batchDf).reduce(_ union _), Seq("k")))
+        layouts.foreach { l =>
+          val t = s"$base/$tag-${l.fold("flat")(n => s"b$n")}"
+          UpsertSink.applyBatch(spark, t, batchDf(batches(i)), Seq("k"), l)
+          assert(rows(UpsertSink.readTable(spark, t)) == want,
+            s"$tag ${l.fold("flat")(_ => "bucketed")} store diverged " +
+              s"from the oracle after batch ${i + 1}")
+        }
+      }
+      val marker = s"merge-plans-$tag"
+      spark.range(1).select(lit(marker)).collect()
+      eventually("the MERGE plans")(markers.asScala.exists(_.contains(marker)))
+      assert(!mergePlans.isEmpty, "no MERGE plan captured")
+      // file-count bound: every touched bucket is rewritten wholly per
+      // batch, so per-bucket files never compound across batches
+      (0 until buckets).foreach { b =>
+        val n = Option(new java.io.File(s"$base/$tag-b$buckets/__bucket=$b")
+          .listFiles()).getOrElse(Array.empty)
+          .count(_.getName.endsWith(".parquet"))
+        assert(n <= 16, s"bucket $b holds $n files — small-files regression")
+      }
+      mergePlans.asScala.toSeq
+    }
+
+    spark.listenerManager.register(listener)
+    try {
+      replay("auto").foreach { p =>
+        val j = nodes(p).collectFirst {
+          case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
+        }.getOrElse(fail(s"a small batch key set must broadcast:\n$p"))
+        assert(j.buildSide == BuildRight)
+        val probe = nodes(j.left)
+        assert(probe.exists(_.isInstanceOf[FileSourceScanExec]) &&
+          !probe.exists(_.isInstanceOf[Exchange]),
+          s"the stored scan must not shuffle:\n$j")
+      }
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, "-1")
+      try {
+        val smj = replay("sortmerge")
+        assert(smj.forall(nodes(_).exists {
+          case j: SortMergeJoinExec => j.joinType == LeftAnti
+          case _ => false
+        }), "with broadcasts off the MERGE must sort-merge")
+      } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("RowLevelOps update/delete rewrite only touched buckets") {
@@ -1298,7 +1363,7 @@ class ChangelogSpec extends SparkSpecBase {
       .toString + "/t"
     val b0 = (1L to 30L).map(k => (k, k * 1.0, 1L, RowKind.Insert))
       .toDF("k", "v", RowKind.seqCol, RowKind.kindCol)
-    UpsertSink.applyBatchBucketed(spark, table, b0, Seq("k"), numBuckets = 4)
+    UpsertSink.applyBatch(spark, table, b0, Seq("k"), Some(4))
 
     // UPDATE v = v * 10 WHERE k <= 3
     val nUpd = RowLevelOps.update(spark, table,

@@ -2230,6 +2230,57 @@ class FlinkDdlSpec extends SparkSpecBase {
     } finally qs.foreach(_.stop())
   }
 
+  test("DELETE / UPDATE on a bucketed CDC sink keep its layout; the " +
+      "next CDC batch merges into the surviving rows") {
+    import spark.implicits._
+    val dir = tmpDir()
+    new java.io.File(s"$dir/src").mkdirs()
+    val sink =
+      s"""CREATE TABLE by_k (k STRING, n BIGINT, sv BIGINT,
+         |  PRIMARY KEY (k) NOT ENFORCED)
+         |  WITH ('connector'='filesystem', 'path'='$dir/snk',
+         |        'format'='parquet', 'sink.checkpoint-dir'='$dir/ck')"""
+        .stripMargin
+    val qs = FlinkDdl.runStreaming(spark,
+      s"""CREATE TABLE changes (
+         |  id BIGINT, k STRING, v BIGINT,
+         |  PRIMARY KEY (id) NOT ENFORCED
+         |) WITH ('connector'='filesystem', 'path'='$dir/src',
+         |        'format'='debezium-json');
+         |$sink;
+         |INSERT INTO by_k
+         |SELECT k, COUNT(*) AS n, SUM(v) AS sv
+         |FROM changes GROUP BY k""".stripMargin)
+    def insert(id: Long, k: String, v: Long) =
+      s"""{"after":{"id":$id,"k":"$k","v":$v},"op":"c","ts_ms":$id}"""
+    def arrive(lines: String*): Unit = {
+      lines.toSeq.toDF("value").coalesce(1)
+        .write.mode("append").text(s"$dir/src")
+      qs.head.processAllAvailable()
+    }
+    def state(): Map[String, (Long, Long)] =
+      graft.changelog.UpsertSink.readTable(spark, s"$dir/snk")
+        .as[(String, Long, Long)].collect().map(r => r._1 -> (r._2, r._3))
+        .toMap
+    try {
+      arrive(insert(1, "a", 1), insert(2, "b", 2), insert(3, "c", 3))
+      FlinkDdl.runScript(spark,
+        s"""$sink;
+           |DELETE FROM by_k WHERE k = 'b';
+           |UPDATE by_k SET sv = -1 WHERE k = 'a'""".stripMargin)
+      assert(state() == Map("a" -> ((1L, -1L)), "c" -> ((1L, 3L))))
+      assert(graft.changelog.UpsertSink.isBucketed(spark, s"$dir/snk") &&
+        !new java.io.File(s"$dir/snk").list().exists(_.endsWith(".parquet")),
+        "row-level DML must keep the bucketed layout")
+      // the next batch touches only c: a must survive it
+      arrive(insert(4, "c", 4))
+      assert(state() == Map("a" -> ((1L, -1L)), "c" -> ((2L, 7L))))
+      val err = intercept[IllegalArgumentException](FlinkDdl.runScript(
+        spark, s"$sink;\nUPDATE by_k SET k = 'z' WHERE k = 'a'"))
+      assert(err.getMessage.contains("PRIMARY KEY"), err.getMessage)
+    } finally qs.foreach(_.stop())
+  }
+
   test("withArrivalSeq raises actionably past the 2^20 per-partition " +
       "ordering bound; stays exact under it") {
     import spark.implicits._

@@ -23,6 +23,25 @@ object RowLevelOps {
     spark.read.parquet(tablePath).where(cond)
       .select(col("__bucket")).distinct().collect().map(_.getInt(0))
 
+  /** `SET c = e, … WHERE cond` over `df` as ONE projection: `cond` and
+    * every assignment read the row as it was before the statement. (A
+    * chain of per-column rewrites would test `cond` against, and feed
+    * later assignments, the values earlier ones already wrote.) */
+  def assign(
+      df: DataFrame,
+      cond: Column,
+      assignments: Map[String, Column]): DataFrame = {
+    def target(c: String) = assignments.collectFirst {
+      case (a, e) if a.equalsIgnoreCase(c) => e }
+    assignments.keys.foreach(a =>
+      require(df.columns.exists(_.equalsIgnoreCase(a)),
+        s"UPDATE assigns unknown column $a; columns: " +
+          df.columns.mkString(", ")))
+    val hit = coalesce(cond, lit(false))
+    df.select(df.columns.map(c => target(c).fold(col(c))(e =>
+      when(hit, e).otherwise(col(c)).as(c))): _*)
+  }
+
   /** UPDATE table SET assignments WHERE cond. Returns rows changed. */
   def update(
       spark: SparkSession,
@@ -34,10 +53,7 @@ object RowLevelOps {
     val slice = spark.read.parquet(tablePath)
       .where(col("__bucket").isin(affected.map(Int.box): _*))
     val changed = slice.where(cond).count()
-    val updated = assignments.foldLeft(slice) { case (df, (c, v)) =>
-      df.withColumn(c, when(cond, v).otherwise(col(c)))
-    }
-    updated.write.mode("overwrite")
+    assign(slice, cond, assignments).write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("__bucket").parquet(tablePath)
     changed

@@ -72,8 +72,6 @@ object ConnectedComponents {
       case _ => Long.MaxValue
     }
     val smallGraph = symBytes < SmallGraphMaxBytes
-    if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] symBytes=$symBytes small=$smallGraph")
     def scopedRounds[T](body: => T): T =
       if (!smallGraph) body
       else {

@@ -1,7 +1,6 @@
 package graft.sql
 
-import graft.GraftSession.ScopedStart
-import graft.changelog.{CdcFormats, RowKind, UpsertSink}
+import graft.changelog.{CdcFormats, RowKind}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
@@ -37,18 +36,17 @@ import org.apache.spark.sql.types._
   *     rows and −1 for `-U`/`-D` rows (a `WHERE` over value columns
   *     filters both images symmetrically, so predicate exits retract
   *     correctly). The rewritten plan is a STANDARD Spark streaming
-  *     aggregate — per-group running sums in state, Update output mode —
-  *     and each micro-batch MERGEs into the sink on its PRIMARY KEY. A
-  *     hidden `SUM(sign)` liveness column detects groups whose last live
-  *     row was deleted: those MERGE as `-D`, the reference's
-  *     group-agg retraction when a count reaches zero.
+  *     aggregate — per-group running sums in state — run by the shared
+  *     update-mode tier. A hidden `SUM(sign)` liveness column detects
+  *     groups whose last live row was deleted: those MERGE as `-D`, the
+  *     reference's group-agg retraction when a count reaches zero.
   *
   *   - '''Retractable aggregation''' (r19, VERDICT r18 task 3): MIN /
   *     MAX / COUNT(DISTINCT) need retractable multiset state the signed
   *     rewrite cannot express — those route onto the DataStream tier's
   *     operator in place ([[graft.changelog.RetractingChangelogAgg]]):
   *     per-key multiset state, one transition pair per key per batch,
-  *     MERGEd by PRIMARY KEY. See [[startRetractableAgg]] for scope.
+  *     MERGEd by PRIMARY KEY. See [[retractableAgg]] for scope.
   *
   *   - '''Changelog join''' (r19, VERDICT r18 task 2): `cdc JOIN cdc` /
   *     `cdc JOIN dim` routes onto [[graft.changelog.ChangelogJoin]] via
@@ -65,6 +63,12 @@ import org.apache.spark.sql.types._
   *     ties) — and MERGEd into the sink by its PRIMARY KEY. An update
   *     whose new image leaves a `WHERE` predicate set still deletes the
   *     sink row via its surviving before-image.
+  *
+  * The tiers supply only their streaming plan and how a micro-batch
+  * becomes a changelog; the checkpoint, the sink's validation and bucket
+  * layout, the PRIMARY-KEY-vs-GROUP-BY guard with its whole-result
+  * fallback, and the MERGE come from [[StreamSink]], the path every
+  * streaming filesystem INSERT shares.
   */
 object StreamingCdc {
 
@@ -132,122 +136,8 @@ object StreamingCdc {
     df.queryExecution.analyzed
       .find(p => p.output.exists(_.name == SignCol)).isDefined
 
-  /** Output column names (lowercased) of `plan` that are pure
-    * pass-throughs of the topmost streaming Aggregate's GROUPING keys —
-    * the columns a per-group MERGE may key on. Provenance is traced only
-    * through Project/Filter/SubqueryAlias (anything else conservatively
-    * yields the empty set). Used to validate a sink's declared PRIMARY
-    * KEY against the query's grouping identity before choosing an
-    * incremental keep-last MERGE (review r18: a PK that is NOT the group
-    * key would collapse distinct groups / strand exited ones — such
-    * sinks must materialize by whole-result replacement instead). */
-  private[sql] def groupingPassThroughNames(plan: LogicalPlan): Set[String] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, SubqueryAlias}
-    def walk(p: LogicalPlan): Set[org.apache.spark.sql.catalyst.expressions.ExprId] =
-      p match {
-        case a: Aggregate if a.isStreaming =>
-          a.aggregateExpressions.flatMap { ne =>
-            val inner = ne match { case al: Alias => al.child; case e => e }
-            if (a.groupingExpressions.exists(_.semanticEquals(inner)))
-              Some(ne.toAttribute.exprId)
-            else None
-          }.toSet
-        case pr: Project =>
-          val below = walk(pr.child)
-          // casts are provenance-preserving here: the sink aligner wraps
-          // every column in a cast to its DECLARED type — the type the
-          // MERGE actually keys on — so Cast(groupingAttr) still names
-          // the group
-          def stripCast(e: Expression): Expression = e match {
-            case c: Cast => stripCast(c.child)
-            case other => other
-          }
-          pr.projectList.flatMap { ne =>
-            val inner = ne match { case al: Alias => al.child; case e => e }
-            stripCast(inner) match {
-              case ar: AttributeReference if below(ar.exprId) =>
-                Some(ne.toAttribute.exprId)
-              case _ => None
-            }
-          }.toSet
-        case f: Filter => walk(f.child)
-        case s: SubqueryAlias => walk(s.child)
-        case _ => Set.empty
-      }
-    val ids = walk(plan)
-    plan.output.filter(a => ids(a.exprId)).map(_.name.toLowerCase).toSet
-  }
-
   private def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.GraftPlans.ofRows(spark, plan)
-
-  /** Project a micro-batch onto the sink's declared physical schema
-    * ([[FlinkDdl.alignToSink]]'s rule: by name when the names line up,
-    * positionally otherwise — the batch's value columns keep the user's
-    * select-list order) KEEPING the changelog metadata columns for the
-    * MERGE. */
-  private def alignKeeping(
-      spec: FlinkDdl.TableSpec, df: DataFrame): DataFrame =
-    align(spec, df, keepMeta = true)
-
-  private def align(
-      spec: FlinkDdl.TableSpec, df: DataFrame, keepMeta: Boolean)
-      : DataFrame = {
-    val declared = spec.columns.collect {
-      case FlinkDdl.ColumnSpec(n, Some(t), _, false, _) => (n, t) }
-    if (declared.isEmpty) df
-    else {
-      val meta = Set(RowKind.kindCol, RowKind.seqCol, LiveCol, SignCol)
-      val values = df.columns.filterNot(meta)
-      val byName = declared.forall { case (n, _) =>
-        values.exists(_.equalsIgnoreCase(n)) }
-      require(byName || values.length == declared.size,
-        s"INSERT into ${spec.name}: query has ${values.length} columns, " +
-          s"sink declares ${declared.size}")
-      df.select(declared.zipWithIndex.map { case ((n, t), i) =>
-        (if (byName) col(values.find(_.equalsIgnoreCase(n)).get)
-         else col(values(i))).cast(t).as(n)
-      } ++ (if (keepMeta)
-        Seq(col(RowKind.kindCol), col(RowKind.seqCol)) else Nil): _*)
-    }
-  }
-
-  /** The sink's PRIMARY KEY columns mapped onto the QUERY's output
-    * column names (lowercased), following [[align]]'s rule: by name when
-    * every declared column matches a value column, positionally
-    * otherwise. Empty entries (a PK column with no counterpart) drop
-    * out, so a caller comparing against a non-empty expected set fails
-    * closed. */
-  private def pkValueNames(
-      spec: FlinkDdl.TableSpec, df: DataFrame): Set[String] = {
-    val declared = spec.columns.collect {
-      case FlinkDdl.ColumnSpec(n, Some(_), _, false, _) => n }
-    val meta = Set(RowKind.kindCol, RowKind.seqCol, LiveCol, SignCol)
-    val values = df.columns.filterNot(meta)
-    val byName = declared.isEmpty || declared.forall(n =>
-      values.exists(_.equalsIgnoreCase(n)))
-    spec.primaryKey.flatMap { p =>
-      if (byName) values.find(_.equalsIgnoreCase(p))
-      else declared.indexWhere(_.equalsIgnoreCase(p)) match {
-        case i if i >= 0 && i < values.length => Some(values(i))
-        case _ => None
-      }
-    }.map(_.toLowerCase).toSet
-  }
-
-  private def requireUpsertSink(spec: FlinkDdl.TableSpec): Unit = {
-    require(spec.connector == "filesystem",
-      s"CDC-sourced INSERT supports filesystem sinks, not " +
-        s"'${spec.connector}' (${spec.name})")
-    require(spec.primaryKey.nonEmpty,
-      s"Table sink '${spec.name}' doesn't support consuming update and " +
-        "delete changes which are produced by a CDC-format source — " +
-        "declare a PRIMARY KEY on the sink so it can upsert")
-    require(spec.format == "parquet",
-      s"Table sink '${spec.name}': upsert materialization of a CDC query " +
-        s"is parquet-backed; declared format '${spec.format}' cannot " +
-        "store the merge state — declare 'format'='parquet'")
-  }
 
   /** Start the continuous query for `INSERT INTO spec <compiled>` where
     * the compiled plan reads a CDC source. `sources` is the DDL catalog
@@ -267,22 +157,17 @@ object StreamingCdc {
       spark: SparkSession,
       spec: FlinkDdl.TableSpec,
       compiled: DataFrame,
-      sources: Seq[FlinkDdl.TableSpec] = Seq.empty)
-      : (org.apache.spark.sql.streaming.StreamingQuery, String) = {
-    requireUpsertSink(spec)
-    val ckpt = spec.options.getOrElse("sink.checkpoint-dir",
-      java.nio.file.Files
-        .createTempDirectory(s"graft_cdc_ck_${spec.name}_").toString)
+      sources: Seq[FlinkDdl.TableSpec] = Seq.empty): StreamSink.Started = {
+    val merge = StreamSink.upsertTarget(spark, spec, "a CDC-format source")
     val analyzed = compiled.queryExecution.analyzed
-    val pk = spec.primaryKey
-    // honor the sink's declared bucketing like the update tier — and
-    // bucket NEW stores by default (VERDICT r18 task 5): a bucketed
-    // MERGE only reads/rewrites the buckets a batch touches — the
-    // at-scale I/O shape for big key spaces
-    val buckets = UpsertSink.resolveBuckets(spark, spec.path,
-      spec.options.get("distribution-buckets").map(_.toInt))
-    def merge(batch: DataFrame, log: DataFrame): Unit =
-      UpsertSink.applyBatch(batch.sparkSession, spec.path, log, pk, buckets)
+    // an append-mode changelog: each micro-batch, made a log by `toLog`,
+    // MERGEs on the sink's PRIMARY KEY
+    def startChangelog(changelog: DataFrame)(
+        toLog: DataFrame => DataFrame): StreamSink.Started =
+      StreamSink.startSink(spec, FlinkDdl.alignToSink(spec, changelog,
+        Seq(RowKind.kindCol, RowKind.seqCol)), "append") { (batch, _) =>
+        merge(toLog(batch))
+      }
 
     // Top-level aggregate (optionally under an attribute-only Project the
     // analyzer sometimes leaves above it) → an aggregation tier.
@@ -294,7 +179,7 @@ object StreamingCdc {
       case _ => None
     }
 
-    val q = aggRoot match {
+    aggRoot match {
       case Some((agg, outer)) =>
         // the aggregate's input changelog: the decoded source directly,
         // or a ChangelogJoin of two sources (join composition)
@@ -327,9 +212,11 @@ object StreamingCdc {
               .rebind(ne, child.output).asInstanceOf[NamedExpression]),
             child)
         if (signedCapable(agg2))
-          startSignedAgg(spark, spec, agg2, outer, sign, ckpt, merge)
+          startSignedAgg(spark, spec, agg2, outer, sign, merge)
         else
-          startRetractableAgg(spark, spec, agg2, outer, ckpt, merge)
+          // transitions carry their own per-key monotone seq, so
+          // keep-last picks each key's final image
+          startChangelog(retractableAgg(spark, spec, agg2, outer))(identity)
 
       case None if StreamingCdcJoin.hasJoin(analyzed) =>
         // join passthrough: ChangelogJoin output (an upsert changelog of
@@ -338,22 +225,15 @@ object StreamingCdc {
         // identity, or distinct pairings would collapse
         val (joined, pairingKeys) =
           StreamingCdcJoin.changelogOf(spark, analyzed, sources).get
-        val pkm = pkValueNames(spec, joined)
-        require(pairingKeys.subsetOf(pkm),
+        require(pairingKeys.subsetOf(FlinkDdl.pkSources(spec, joined)),
           s"Table sink '${spec.name}': the PRIMARY KEY of a CDC join " +
             s"sink must include both join inputs' upsert keys " +
             s"[${pairingKeys.mkString(", ")}] (the pairing identity the " +
             "joined changelog is keyed by) — declared " +
             s"[${spec.primaryKey.mkString(", ")}]")
-        joined.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            // ChangelogJoin emits +U/-D only, already totally ordered by
-            // its 2·seq+bit stamp over the arrival-seq domain
-            merge(batch, alignKeeping(spec, batch))
-          }
-          .startScoped(spark)
+        // ChangelogJoin emits +U/-D only, already totally ordered by its
+        // 2·seq+bit stamp over the arrival-seq domain
+        startChangelog(joined)(identity)
 
       case None =>
         // Passthrough tier: projection/filter only. Thread the changelog
@@ -376,25 +256,18 @@ object StreamingCdc {
               "(signed-aggregation tier) or a projection/filter " +
               "(changelog passthrough)")
         }
-        ofRows(spark, plan).writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            // -U degrades to -D, and [[withArrivalSeq]] imposes log order
-            // on envelope-timestamp ties (review r18: the old seq·2+bit
-            // scheme made a same-ts delete LOSE to the update before it),
-            // so keep-last resolves in-place updates to the new image,
-            // predicate exits to the delete, and update-then-delete in
-            // one transaction to the delete.
-            val log = withArrivalSeq(batch)
-              .withColumn(RowKind.kindCol,
-                when(col(RowKind.kindCol) === RowKind.UpdateBefore,
-                  RowKind.Delete).otherwise(col(RowKind.kindCol)))
-            merge(batch, alignKeeping(spec, log))
-          }
-          .startScoped(spark)
+        // -U degrades to -D, and [[withArrivalSeq]] imposes log order on
+        // envelope-timestamp ties (review r18: the old seq·2+bit scheme
+        // made a same-ts delete LOSE to the update before it), so
+        // keep-last resolves in-place updates to the new image, predicate
+        // exits to the delete, and update-then-delete in one transaction
+        // to the delete.
+        startChangelog(ofRows(spark, plan)) { batch =>
+          withArrivalSeq(batch).withColumn(RowKind.kindCol,
+            when(col(RowKind.kindCol) === RowKind.UpdateBefore,
+              RowKind.Delete).otherwise(col(RowKind.kindCol)))
+        }
     }
-    (q, ckpt)
   }
 
   /** Every aggregate is expressible in signed-contribution form
@@ -414,22 +287,16 @@ object StreamingCdc {
     ok
   }
 
-  /** Signed-aggregation tier: rewrite to signed form, run as a standard
-    * Update-mode streaming aggregate, MERGE changed groups per batch on
-    * the sink PK. Precondition for the MERGE (review r18): the declared
-    * PRIMARY KEY must be exactly the aggregate's grouping output — any
-    * other PK collapses distinct groups or strands a group's previous
-    * row. On mismatch the query falls back to COMPLETE-mode
-    * truncate-replace, which ignores the PK and is always correct. */
+  /** Signed-aggregation tier: rewrite to signed form and run it through
+    * the update-mode tier ([[StreamSink.startUpdating]]), where a group
+    * is live while its live-row count is positive. */
   private def startSignedAgg(
       spark: SparkSession,
       spec: FlinkDdl.TableSpec,
       agg: Aggregate,
       outer: Option[Project],
       sign: Attribute,
-      ckpt: String,
-      merge: (DataFrame, DataFrame) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      merge: DataFrame => Unit): StreamSink.Started = {
     val rewritten = rewriteAggregate(agg, sign)
     val plan = outer match {
       case Some(p) =>
@@ -437,38 +304,9 @@ object StreamingCdc {
         Project(p.projectList :+ live, rewritten)
       case None => rewritten
     }
-    val pf = ofRows(spark, plan)
-    val grouping = groupingPassThroughNames(plan)
-    if (pkValueNames(spec, pf) == grouping && grouping.nonEmpty)
-      pf.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // groups whose live-row count reached zero retract (-D); the
-          // rest upsert, superseding their stored rows. Replay-idempotent
-          // like the update tier.
-          val log = batch
-            .withColumn(RowKind.kindCol,
-              when(col(LiveCol) > 0, RowKind.UpdateAfter)
-                .otherwise(RowKind.Delete))
-            .withColumn(RowKind.seqCol, lit(batchId + 1L))
-            .drop(LiveCol)
-          merge(batch, alignKeeping(spec, log))
-        }
-        .startScoped(spark)
-    else
-      pf.writeStream
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // whole-result tier: drop dead groups, crash-safe
-          // truncate-replace of the whole sink
-          val live = align(spec,
-            batch.where(col(LiveCol) > 0).drop(LiveCol), keepMeta = false)
-          graft.changelog.FsOps.replace(batch.sparkSession, spec.path)(
-            live.write.mode("overwrite").format(spec.format).save)
-        }
-        .startScoped(spark)
+    StreamSink.startUpdating(spec,
+      FlinkDdl.alignToSink(spec, ofRows(spark, plan), Seq(LiveCol)),
+      merge, col(LiveCol) > 0, Some(LiveCol))
   }
 
   /** Hidden value column the retractable tier folds. */
@@ -481,20 +319,19 @@ object StreamingCdc {
     * so the aggregate routes onto
     * [[graft.changelog.RetractingChangelogAgg]] — per-key multiset state,
     * one `-U`/`+U` transition pair per key per micro-batch, `-D` when a
-    * key's live set empties — and each batch's transitions MERGE into
-    * the sink by its PRIMARY KEY (which must be exactly the GROUP BY
-    * key). Supported: COUNT(*) / SUM / AVG / MIN / MAX /
+    * key's live set empties. Returns that transition changelog for the
+    * sink's MERGE, whose PRIMARY KEY must be exactly the GROUP BY key:
+    * append-mode transitions hold no whole result to replace the sink
+    * with, so any other key is a loud error. Supported: COUNT(*) / SUM /
+    * AVG / MIN / MAX /
     * COUNT(DISTINCT) over ONE shared value expression (the multiset
     * tracks one column; values must be non-null, the CDC envelope
     * payload contract). Shapes outside that stay loud errors. */
-  private def startRetractableAgg(
+  private def retractableAgg(
       spark: SparkSession,
       spec: FlinkDdl.TableSpec,
       agg: Aggregate,
-      outer: Option[Project],
-      ckpt: String,
-      merge: (DataFrame, DataFrame) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      outer: Option[Project]): DataFrame = {
     val childOut = agg.child.output
     val metaAttrs = Seq(RowKind.kindCol, RowKind.seqCol).map(n =>
       childOut.find(_.name == n).getOrElse(
@@ -582,28 +419,18 @@ object StreamingCdc {
       case None => projected
     }
 
-    val pkm = pkValueNames(spec, finalDf)
-    require(pkm == keyNames.map(_.toLowerCase).toSet,
+    require(FlinkDdl.pkSources(spec, finalDf) ==
+        keyNames.map(_.toLowerCase).toSet,
       s"Table sink '${spec.name}': the retractable CDC tier MERGEs by " +
         "PRIMARY KEY, which must be exactly the GROUP BY key " +
         s"[${keyNames.mkString(", ")}] — declared " +
         s"[${spec.primaryKey.mkString(", ")}]")
-
-    finalDf.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // transitions carry their own per-key monotone seq, so keep-last
-        // picks each key's final image; -U rows are dropped by the
-        // materializer, -D deletes the key
-        merge(batch, alignKeeping(spec, batch))
-      }
-      .startScoped(spark)
+    finalDf
   }
 
   /** Hidden liveness column: `SUM(sign)` = number of live rows in the
     * group — 0 means the group left the table and the sink must delete. */
-  private val LiveCol = "__live"
+  private[sql] val LiveCol = "__live"
 
   /** Rewrite each aggregate into its signed form and append the liveness
     * aggregate (always LAST in the output). */

@@ -2393,4 +2393,114 @@ class FlinkDdlSpec extends SparkSpecBase {
         "canal overlay pre-image must retract v=2, and b must vanish")
     } finally qs.foreach(_.stop())
   }
+
+  test("runStreaming: a sink PRIMARY KEY that is not the GROUP BY key " +
+      "keeps the full result on every update-mode tier") {
+    import spark.implicits._
+    val dir = tmpDir()
+    Seq("src", "cdc").foreach(d => new java.io.File(s"$dir/$d").mkdirs())
+    // keyed on the count n, a per-key MERGE would leave the stale (a, 1)
+    // beside (a, 2): each tier must notice the PRIMARY KEY is not the
+    // grouping key and replace the whole result instead
+    val sinks = Seq("plain_snk", "having_snk", "signed_snk")
+    val ddl = sinks.map(n =>
+      s"""CREATE TABLE $n (k STRING, n BIGINT,
+         |  PRIMARY KEY (n) NOT ENFORCED)
+         |  WITH ('connector'='filesystem', 'path'='$dir/$n',
+         |        'format'='parquet', 'sink.checkpoint-dir'='$dir/ck_$n');
+         |""".stripMargin).mkString
+    val qs = FlinkDdl.runStreaming(spark,
+      s"""CREATE TABLE src (k STRING, v BIGINT)
+         |  WITH ('connector'='filesystem', 'path'='$dir/src',
+         |        'format'='parquet');
+         |CREATE TABLE changes (id BIGINT, k STRING,
+         |  PRIMARY KEY (id) NOT ENFORCED)
+         |  WITH ('connector'='filesystem', 'path'='$dir/cdc',
+         |        'format'='debezium-json');
+         |$ddl
+         |INSERT INTO plain_snk SELECT k, COUNT(*) AS n FROM src GROUP BY k;
+         |INSERT INTO having_snk SELECT k, COUNT(*) AS n FROM src GROUP BY k
+         |  HAVING COUNT(*) < 5;
+         |INSERT INTO signed_snk SELECT k, COUNT(*) AS n FROM changes
+         |  GROUP BY k""".stripMargin)
+    assert(qs.size == 3)
+    try {
+      for (i <- 1L to 2L) {
+        Seq(("a", i)).toDF("k", "v").write.mode("append")
+          .parquet(s"$dir/src")
+        Seq(s"""{"after":{"id":$i,"k":"a"},"op":"c","ts_ms":$i}""")
+          .toDF("value").write.mode("append").text(s"$dir/cdc")
+        qs.foreach(_.processAllAvailable())
+        sinks.foreach { n =>
+          val got = graft.changelog.UpsertSink.readTable(spark, s"$dir/$n")
+            .as[(String, Long)].collect().toSeq.sorted
+          assert(got == Seq(("a", i)), s"$n after batch $i: $got")
+        }
+      }
+    } finally qs.foreach(_.stop())
+  }
+
+  test("UPDATE evaluates every assignment and the WHERE against the old " +
+      "row, on a flat table and on a bucketed store") {
+    import spark.implicits._
+    import graft.changelog.{RowKind, UpsertSink}
+    val dir = tmpDir()
+    val rows = Seq((1L, 3L, 10L), (2L, 7L, 20L), (3L, 9L, 30L))
+    // v = 0 must not hide the row from the WHERE for w = v, and w = v
+    // reads the old v
+    val want = Set((1L, 3L, 10L), (2L, 0L, 7L), (3L, 0L, 9L))
+    def table(name: String, pk: String) =
+      s"""CREATE TABLE $name (k BIGINT, v BIGINT, w BIGINT$pk)
+         |  WITH ('connector'='filesystem', 'path'='$dir/$name',
+         |        'format'='parquet')""".stripMargin
+    val update = "UPDATE %s SET v = 0, w = v WHERE v > 5"
+    val flat = FlinkDdl.run(spark,
+      s"""${table("flat", "")};
+         |INSERT INTO flat VALUES (1, 3, 10), (2, 7, 20), (3, 9, 30);
+         |${update.format("flat")};
+         |SELECT k, v, w FROM flat""".stripMargin)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(flat == want, s"flat: $flat")
+    UpsertSink.applyBatch(spark, s"$dir/bkt",
+      rows.toDF("k", "v", "w")
+        .withColumn(RowKind.kindCol, lit(RowKind.Insert))
+        .withColumn(RowKind.seqCol, lit(1L)),
+      Seq("k"), Some(4))
+    FlinkDdl.runScript(spark,
+      s"""${table("bkt", ", PRIMARY KEY (k) NOT ENFORCED")};
+         |${update.format("bkt")}""".stripMargin)
+    assert(UpsertSink.isBucketed(spark, s"$dir/bkt"))
+    val bkt = UpsertSink.readTable(spark, s"$dir/bkt")
+      .select("k", "v", "w").as[(Long, Long, Long)].collect().toSet
+    assert(bkt == want, s"bucketed: $bkt")
+  }
+
+  test("runStreaming: a 'distribution-buckets' value that is not a " +
+      "positive integer fails with a message naming the key and table") {
+    val dir = tmpDir()
+    new java.io.File(s"$dir/src").mkdirs()
+    for (bad <- Seq("x", "0", "-3")) {
+      val e = intercept[IllegalArgumentException](FlinkDdl.runStreaming(
+        spark,
+        s"""CREATE TABLE src (k STRING, v BIGINT)
+           |  WITH ('connector'='filesystem', 'path'='$dir/src',
+           |        'format'='parquet');
+           |CREATE TABLE agg (k STRING, n BIGINT,
+           |  PRIMARY KEY (k) NOT ENFORCED)
+           |  WITH ('connector'='filesystem', 'path'='$dir/snk',
+           |        'format'='parquet', 'distribution-buckets'='$bad');
+           |INSERT INTO agg SELECT k, COUNT(*) AS n FROM src GROUP BY k
+           |""".stripMargin).foreach(_.stop()))
+      assert(e.getMessage.contains("'distribution-buckets'") &&
+        e.getMessage.contains("agg") && e.getMessage.contains(s"'$bad'"),
+        e.getMessage)
+    }
+    val e = intercept[IllegalArgumentException](FlinkDdl.runScript(spark,
+      s"""CREATE TABLE t (k BIGINT)
+         |  WITH ('connector'='filesystem', 'path'='$dir/t',
+         |        'format'='parquet', 'distribution-buckets'='x');
+         |INSERT INTO t VALUES (1)""".stripMargin))
+    assert(e.getMessage.contains("'distribution-buckets'") &&
+      e.getMessage.contains("table t"), e.getMessage)
+  }
 }

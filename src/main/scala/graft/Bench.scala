@@ -43,10 +43,10 @@ import org.apache.spark.sql.SparkSession
   *     back-to-back in the warm sequential pass and skip the cold
   *     round-robin rescue rep (the rescue pass's cold-cache penalty would
   *     bias a 2-sample median upward — the r11 lesson);
-  *   - the full-sweep JSON is written to BENCH_LAST.json and the contract
-  *     line printed IMMEDIATELY after the timed reps, then again after each
-  *     optional stage, so a kill mid-stage still leaves a parseable line —
-  *     the driver tails stdout and the last complete line wins;
+  *   - the full-sweep JSON is written to BENCH_LAST.json IMMEDIATELY
+  *     after the timed reps, then again after each optional stage, so a
+  *     kill mid-stage still leaves the file; the headline is printed
+  *     exactly once, as the last stdout line;
   *   - every deadline-driven skip is recorded in the JSON (`budget` block)
   *     so a truncated sweep is never mistaken for a complete one.
   */
@@ -307,15 +307,12 @@ object Bench {
     def emit(
         results: Seq[(String, Double)],
         remeasured: Seq[String],
-        tiers: Seq[Tier]): Unit = {
+        tiers: Seq[Tier]): Unit =
       try java.nio.file.Files.write(
         java.nio.file.Paths.get(out),
         toJson(results, remeasured, tiers)
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       catch { case _: Throwable => () }
-      println(headlineJson(results, tiers))
-      System.out.flush()
-    }
 
     // Persist the rotation cursor AT EACH STAGE, not only at the end
     // (review r18): a hard kill mid-sweep — the very failure mode
@@ -332,8 +329,8 @@ object Bench {
 
     // ---- STAGE 0 flush: seq-pass medians, BEFORE the rescue pass. On a
     // badly degraded box even the rescue pass can outlive the driver's
-    // wall clock — this flush guarantees a parseable line exists the
-    // moment the timed sequential reps are in.
+    // wall clock — this flush guarantees BENCH_LAST.json holds the
+    // timed sequential reps the moment they are in.
     writeCursor()
     var results = computeResults()
     emit(results, Seq.empty, Seq.empty)
@@ -518,7 +515,12 @@ object Bench {
     }
     if (remeasureTruncated) budgetNotes += "remeasure_truncated"
     results = computeResults()
-    emit(results, remeasured.toSeq, Seq(scaleTier, skewTier, spotTier))
+    val tiers = Seq(scaleTier, skewTier, spotTier)
+    emit(results, remeasured.toSeq, tiers)
+    // before stop(), so a failing stop cannot swallow the headline (Spark
+    // logs to stderr, so it is still the last stdout line)
+    println(headlineJson(results, tiers))
+    System.out.flush()
     spark.stop()
   }
 }

@@ -90,7 +90,7 @@ object ChangelogJoin {
     * ≥ 9103 followed by exactly this 7-byte tail — and the pinned
     * fixtures are additionally replayed in-spec (RestoreCompatSpec), so a
     * collision would fail loudly there, not corrupt silently. */
-  private[changelog] final class JoinStateCodec(
+  private[graft] final class JoinStateCodec(
       lType: StructType, rType: StructType) extends Serializable {
     import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
     import org.apache.spark.sql.catalyst.expressions.UnsafeRow
@@ -160,12 +160,10 @@ object ChangelogJoin {
     /** Both sides' live payload rows, in live-map iteration order; the
       * caller rebuilds the keyed maps from the payloads' key slots. */
     def decode(bytes: Array[Byte]): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
-      val m = JoinStateCodec.Magic
-      if (bytes.length > m.length &&
-          java.util.Arrays.equals(bytes, 0, m.length, m, 0, m.length)) {
+      if (JoinStateCodec.isV2(bytes)) {
+        val m = JoinStateCodec.Magic.length
         val in = new java.io.DataInputStream(
-          new java.io.ByteArrayInputStream(bytes, m.length,
-            bytes.length - m.length))
+          new java.io.ByteArrayInputStream(bytes, m, bytes.length - m))
         (readSide(in, lDes, lType.length), readSide(in, rDes, rType.length))
       } else {
         val (l, r) = kryo.deserialize[
@@ -176,10 +174,21 @@ object ChangelogJoin {
     }
   }
 
-  private object JoinStateCodec {
+  private[graft] object JoinStateCodec {
     val Magic: Array[Byte] = Array(
       0x8F.toByte, 'G'.toByte, 'J'.toByte, 'S'.toByte, '2'.toByte,
       0xE3.toByte, 0x71.toByte, 0xAC.toByte)
+
+    /** The blob is in the v2 layout: it begins with [[Magic]]. */
+    def isV2(bytes: Array[Byte]): Boolean =
+      bytes.length > Magic.length &&
+        java.util.Arrays.equals(bytes, 0, Magic.length, Magic, 0, Magic.length)
+
+    /** A join side's stored payload: its input's columns less the
+      * changelog's `__rowkind` and `__seq`. */
+    def payload(input: StructType): StructType =
+      StructType(input.filterNot(f =>
+        f.name == RowKind.kindCol || f.name == RowKind.seqCol))
   }
 
   def apply(
@@ -234,9 +243,10 @@ object ChangelogJoin {
     val padLeft = joinType == "left" || joinType == "full"
     val padRight = joinType == "right" || joinType == "full"
 
-    val metaCols = Set(RowKind.kindCol, RowKind.seqCol)
-    val lPayF = left.schema.fields.filterNot(f => metaCols(f.name))
-    val rPayF = right.schema.fields.filterNot(f => metaCols(f.name))
+    val lType = JoinStateCodec.payload(left.schema)
+    val rType = JoinStateCodec.payload(right.schema)
+    val lPayF = lType.fields
+    val rPayF = rType.fields
     val clash = lPayF.map(_.name).toSet.intersect(rPayF.map(_.name).toSet)
     require(clash.isEmpty, s"column name clash across sides: $clash")
     // mismatched key types would only surface later as an opaque
@@ -247,8 +257,6 @@ object ChangelogJoin {
       s"join key types differ: $leftJoinKey is $lJkType but " +
         s"$rightJoinKey is $rJkType — cast one side explicitly")
 
-    val lType = StructType(lPayF)
-    val rType = StructType(rPayF)
     // outer variants pad a payload with nulls — force nullability
     val lPayOut =
       if (padRight) lPayF.map(_.copy(nullable = true)) else lPayF

@@ -5,11 +5,11 @@ import org.apache.spark.sql.SparkSession
 
 /** Hadoop-FileSystem path helpers for the changelog sinks.
   *
-  * The read/write side of [[UpsertSink]] / [[RowLevelOps]] accepts any
-  * Hadoop-resolvable path (hdfs://, s3a://, file:/), so the bookkeeping
-  * side must too — `java.io.File` silently no-ops on non-local URIs,
-  * which would leave a fully-deleted bucket directory in place and
-  * resurrect its keys on the next merge (ADVICE r3).
+  * The read/write side of [[UpsertSink]] accepts any Hadoop-resolvable
+  * path (hdfs://, s3a://, file:/), so the bookkeeping side must too —
+  * `java.io.File` silently no-ops on non-local URIs, which would leave a
+  * fully-deleted bucket directory in place and resurrect its keys on the
+  * next merge (ADVICE r3).
   */
 private[graft] object FsOps {
 
@@ -68,13 +68,4 @@ private[graft] object FsOps {
   def current(spark: SparkSession, dest: String): Option[String] =
     Seq(dest, dest + ".old").find(p => childNames(spark, p).exists(n =>
       !n.startsWith(".") && (!n.startsWith("_") || n.contains("="))))
-
-  /** Total bytes of the path's DIRECT children (metadata-only listing —
-    * no data read); 0 if absent. Sizing signal for the unbucketed-store
-    * warning in [[UpsertSink]]. */
-  def sizeBytes(spark: SparkSession, path: String): Long = {
-    val (fs, p) = resolve(spark, path)
-    if (!fs.exists(p)) 0L
-    else fs.listStatus(p).map(_.getLen).sum
-  }
 }

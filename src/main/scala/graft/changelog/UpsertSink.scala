@@ -1,7 +1,6 @@
 package graft.changelog
 
-import graft.GraftSession.ScopedStart
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Changelog-aware streaming SINK: materializes a changelog stream into a
@@ -9,33 +8,50 @@ import org.apache.spark.sql.functions._
   * the reference's Sink + SinkUpsertMaterializer pair
   * (StreamExecSink.java:137, SinkUpsertMaterializer.java:64).
   *
-  * Per micro-batch, one MERGE for both store layouts:
-  * {{{
-  *   stored LEFT ANTI (keys of the batch's non -U rows)
-  *     ∪ UpsertMaterialize(batch)
-  * }}}
-  * — stored rows the batch does not touch, plus the batch's keep-last
-  * image per key (keys whose last change is `-D` drop out). A key whose
-  * only batch row is a `-U` keeps its stored row, exactly as
-  * [[UpsertMaterialize]] over the whole changelog would. Stored rows
-  * carry no seq: `__seq` orders changes within one batch only. Spark's
-  * own size-based join selection broadcasts the batch's key set when it
-  * is small (the stored side is then a map-side pass that never
-  * shuffles) and sort-merges it when it is not.
+  * One store layout: rows are hash-bucketed into `__bucket=N/`
+  * directories, N = `pmod(hash(keys), buckets)`, with `buckets` the
+  * sink's `'distribution-buckets'`, else [[DefaultBuckets]]. A store that
+  * starts on flat parquet is re-laid out once, before its first MERGE
+  * ([[resolveBuckets]]).
   *
-  * Idempotent under micro-batch replay: re-applying a batch reaches the
-  * same state because materialization is keyed keep-last, not an
-  * increment. At scale the overwrite becomes a MERGE INTO on a table
-  * format with transactional commit (Delta/Iceberg — not on this
-  * build's classpath); the changelog→final-state semantics are identical.
+  * Every write to the store is one touched-bucket rewrite: read only the
+  * buckets a change touches, write `f` of them by dynamic partition
+  * overwrite, and remove the touched buckets `f` leaves empty. It has
+  * three entries:
+  *   - the per-micro-batch MERGE ([[applyBatch]]):
+  *     {{{
+  *       stored LEFT ANTI (keys of the batch's non -U rows)
+  *         ∪ UpsertMaterialize(batch)
+  *     }}}
+  *     — stored rows the batch does not touch, plus the batch's keep-last
+  *     image per key (keys whose last change is `-D` drop out). A key
+  *     whose only batch row is a `-U` keeps its stored row, exactly as
+  *     [[UpsertMaterialize]] over the whole changelog would. Stored rows
+  *     carry no seq: `__seq` orders changes within one batch only. Spark's
+  *     own size-based join selection broadcasts the batch's key set when
+  *     it is small (the stored side is then a map-side pass that never
+  *     shuffles) and sort-merges it when it is not;
+  *   - a batch SQL `INSERT` into the store ([[insert]]): the same MERGE
+  *     over the query's rows as `+I` changes, so they upsert by key;
+  *   - SQL `DELETE` / `UPDATE` on the store ([[rewriteWhere]]) — the sink
+  *     abilities the reference models as SupportsRowLevelDelete /
+  *     SupportsRowLevelUpdate: the buckets holding a row the statement's
+  *     condition selects.
+  *
+  * Micro-batch replay: re-applying a batch over a whole store reaches the
+  * same state, because materialization is keyed keep-last, not an
+  * increment. A crash inside the write is not covered: Spark's
+  * dynamic-overwrite commit (`HadoopMapReduceCommitProtocol.commitJob`)
+  * replaces the touched buckets one at a time, each by delete-then-rename,
+  * so a crash between the two loses that bucket's stored rows, and the
+  * replayed batch rewrites only its own keys. A table format with
+  * transactional commit (Delta/Iceberg — not on this build's classpath)
+  * closes that gap; the changelog→final-state semantics are identical.
   */
 object UpsertSink {
 
-  private val UnbucketedWarnBytes = 1L << 30
-  private val warnedUnbucketed =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Default bucket count for NEW upsert stores (VERDICT r18 task 5). */
+  /** Bucket count of a store whose sink declares no
+    * `'distribution-buckets'`. */
   val DefaultBuckets = 64
 
   private val BucketCol = "__bucket"
@@ -44,58 +60,101 @@ object UpsertSink {
   def isBucketed(spark: SparkSession, tablePath: String): Boolean =
     FsOps.childNames(spark, tablePath).exists(_.startsWith(BucketCol + "="))
 
-  /** Bucket-layout decision for a PK sink, made ONCE at query start: an
-    * explicit `'distribution-buckets'` declaration always wins; without
-    * one, a NEW (empty) store defaults to the hash-bucketed layout
-    * ([[DefaultBuckets]] buckets) so per-batch MERGE I/O is proportional
-    * to the touched fraction of the table from day one — the whole-table
-    * rewrite was the at-scale default failure shape (VERDICT r18
-    * what's-wrong #3). An EXISTING store that already holds unbucketed
-    * parquet files keeps its flat layout (a bucketed MERGE looks only
-    * under `__bucket=` dirs and would silently orphan the flat files);
-    * [[FsOps.current]] reads the `.old` aside-dir too, so a crash
-    * mid-swap cannot flip a store's layout on restart. */
+  private def withBucket(df: DataFrame, keyCols: Seq[String], n: Int) =
+    df.withColumn(BucketCol, pmod(hash(keyCols.map(col): _*), lit(n)))
+
+  /** A store's bucket count, resolved once per query: `declared`
+    * (the sink's `'distribution-buckets'`), else [[DefaultBuckets]]. A
+    * path holding flat parquet — a PRIMARY KEY table filled by a batch
+    * `INSERT`, a store written before buckets were the default, or the
+    * `.old` dir of a crashed swap, which [[FsOps.current]] reads — is
+    * re-laid out into those buckets here, once, through the crash-safe
+    * [[FsOps.replace]]: the MERGE reads only `__bucket=` dirs and would
+    * orphan flat files. */
   def resolveBuckets(
       spark: SparkSession,
       tablePath: String,
-      declared: Option[Int]): Option[Int] =
-    declared.orElse {
-      val flat = FsOps.current(spark, tablePath).exists(!isBucketed(spark, _))
-      if (flat) None else Some(DefaultBuckets)
-    }
+      keyCols: Seq[String],
+      declared: Option[Int]): Int = {
+    val n = declared.getOrElse(DefaultBuckets)
+    FsOps.current(spark, tablePath).filterNot(isBucketed(spark, _))
+      .foreach { flat =>
+        val rows = withBucket(spark.read.parquet(flat), keyCols, n)
+        FsOps.replace(spark, tablePath)(
+          rows.write.mode("overwrite").partitionBy(BucketCol).parquet)
+      }
+    n
+  }
 
   /** Read an upsert store back as its LOGICAL table: the internal
-    * `__bucket` layout column (present when the store is hash-bucketed —
-    * the default for new stores) is dropped, flat stores read as-is. */
+    * `__bucket` layout column is dropped; a table with no such column
+    * (a whole-result sink) reads as-is. */
   def readTable(spark: SparkSession, tablePath: String): DataFrame = {
     val df = spark.read.parquet(tablePath)
     if (df.columns.contains(BucketCol)) df.drop(BucketCol) else df
   }
 
-  /** Apply one changelog micro-batch to the stored table: a flat store
-    * (`buckets = None`, rewritten wholly through a crash-safe swap) or
-    * one hash-bucketed into `__bucket = pmod(hash(keys), n)` directories
-    * (only the buckets the batch touches are read and rewritten). */
+  /** Apply one changelog micro-batch to the store, bucketed into
+    * `buckets` (from [[resolveBuckets]]): only the buckets the batch
+    * touches are read and rewritten. */
   def applyBatch(
       spark: SparkSession,
       tablePath: String,
       batch0: DataFrame,
       keyCols: Seq[String],
-      buckets: Option[Int]): Unit = {
-    val batch = buckets.fold(batch0)(n => batch0.withColumn(
-      BucketCol, pmod(hash(keyCols.map(col): _*), lit(n))))
+      buckets: Int): Unit = {
+    val batch = withBucket(batch0, keyCols, buckets)
     // inside foreachBatch the batch DataFrame is a plan, not rows: every
     // action re-executes the micro-batch's whole incremental plan (source
     // read, shuffles, stateful operators), and the MERGE reads the batch
-    // twice — persist it for the duration (guide §5). Each route's first
-    // action materializes it, so the MERGE's join selection sees its real
-    // size, and skips a no-data micro-batch (watermark-advance trigger),
-    // which changes nothing (guide §1.2: measured 0.5-0.9 s per batch).
+    // twice — persist it for the duration (guide §5). The first action
+    // materializes it, so the MERGE's join selection sees its real size,
+    // and skips a no-data micro-batch (watermark-advance trigger), which
+    // changes nothing (guide §1.2: measured 0.5-0.9 s per batch).
     batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      if (buckets.isEmpty) mergeFlat(spark, tablePath, batch, keyCols)
-      else mergeBuckets(spark, tablePath, batch, keyCols)
+      // one pass answers which buckets the batch touches and which of
+      // them could EMPTY (only a bucket receiving a -D can; the common
+      // all-upsert batch skips that bookkeeping)
+      val info = batch.groupBy(col(BucketCol))
+        .agg(max(col(RowKind.kindCol) === lit(RowKind.Delete)))
+        .collect()
+      if (info.isEmpty) ()
+      else if (!isBucketed(spark, tablePath))
+        UpsertMaterialize(batch, keyCols)
+          .write.mode("overwrite").partitionBy(BucketCol).parquet(tablePath)
+      else rewrite(spark, tablePath, info.map(_.getInt(0)),
+        info.filter(_.getBoolean(1)).map(_.getInt(0)))(
+        merge(_, batch, keyCols))
     } finally batch.unpersist(blocking = false)
+  }
+
+  /** A batch `INSERT` of `rows` (the store's columns) into a bucketed
+    * store: each row replaces the stored row of its key; among rows of
+    * one key, the last the query yields wins. Flat files written beside
+    * the buckets would not be read. */
+  def insert(
+      spark: SparkSession,
+      tablePath: String,
+      rows: DataFrame,
+      keyCols: Seq[String],
+      declared: Option[Int]): Unit =
+    applyBatch(spark, tablePath,
+      rows.withColumn(RowKind.kindCol, lit(RowKind.Insert))
+        .withColumn(RowKind.seqCol, monotonically_increasing_id()),
+      keyCols, resolveBuckets(spark, tablePath, keyCols, declared))
+
+  /** SQL `DELETE` / `UPDATE` on the store: `f` rewrites the buckets that
+    * hold a row where `cond` holds (one scan finds them: a condition is
+    * not generally bucket-prunable). `f` must keep every row's key, since
+    * a row's bucket is its key's hash. */
+  def rewriteWhere(
+      spark: SparkSession,
+      tablePath: String,
+      cond: Column)(f: DataFrame => DataFrame): Unit = {
+    val touched = spark.read.parquet(tablePath).where(cond)
+      .select(col(BucketCol)).distinct().collect().map(_.getInt(0))
+    rewrite(spark, tablePath, touched, touched)(f)
   }
 
   /** The MERGE: stored rows whose key the batch does not change, plus the
@@ -113,86 +172,33 @@ object UpsertSink {
       .unionByName(UpsertMaterialize(batch, keyCols))
   }
 
-  private def mergeFlat(
+  /** The touched-bucket rewrite: `f` of the stored rows of the `touched`
+    * buckets replaces them by dynamic partition overwrite, so per-write
+    * I/O is proportional to the touched fraction of the store, not its
+    * size. A bucket `f` leaves no rows in is absent from the written data,
+    * and dynamic overwrite leaves it as it was: a bucket of `emptiable`
+    * whose file listing did not change across the write is removed — a
+    * METADATA diff, not a Spark job (the overwrite gives every bucket it
+    * writes fresh UUID part names). File count stays bounded: a touched
+    * bucket is rewritten wholly, so its files never exceed the writing
+    * tasks of one rewrite. */
+  private def rewrite(
       spark: SparkSession,
       tablePath: String,
-      batch: DataFrame,
-      keyCols: Seq[String]): Unit = {
-    if (batch.count() == 0) return
-    // scale steering (metadata-only check, once per path): the flat
-    // MERGE rewrites the WHOLE store per micro-batch — right at modest
-    // sizes, a scale-killer past ~1 GiB, where the bucketed layout
-    // ('distribution-buckets' on the sink) rewrites only touched buckets.
-    // The already-warned check comes FIRST (review r18): sizeBytes is a
-    // full listStatus.
-    if (!warnedUnbucketed.contains(tablePath) &&
-        FsOps.sizeBytes(spark, tablePath) > UnbucketedWarnBytes &&
-        warnedUnbucketed.add(tablePath))
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"upsert store $tablePath exceeds 1 GiB with no bucketing — " +
-          "each micro-batch rewrites it wholly; declare " +
-          "'distribution-buckets' on the sink for touched-bucket MERGE I/O")
-    val merged = FsOps.current(spark, tablePath)
-      .fold(UpsertMaterialize(batch, keyCols))(p =>
-        merge(spark.read.parquet(p), batch, keyCols))
-    FsOps.replace(spark, tablePath)(merged.write.mode("overwrite").parquet)
-  }
-
-  /** Touched-bucket MERGE (dynamic partition overwrite): per-batch I/O is
-    * proportional to the touched fraction of the table, not its size. A
-    * bucket whose keys are all deleted is removed explicitly (dynamic
-    * overwrite skips partitions absent from the written data). File
-    * count stays bounded: every touched bucket is rewritten wholly per
-    * batch, so its files never exceed the writing tasks of one batch. */
-  private def mergeBuckets(
-      spark: SparkSession,
-      tablePath: String,
-      batch: DataFrame,
-      keyCols: Seq[String]): Unit = {
-    // one pass answers which buckets the batch touches and which of them
-    // could EMPTY (only a bucket receiving a -D can; the common all-upsert
-    // batch skips that bookkeeping)
-    val info = batch.groupBy(col(BucketCol))
-      .agg(max(col(RowKind.kindCol) === lit(RowKind.Delete)))
-      .collect()
-    if (info.isEmpty) return
-    if (!isBucketed(spark, tablePath)) {
-      UpsertMaterialize(batch, keyCols)
-        .write.mode("overwrite").partitionBy(BucketCol).parquet(tablePath)
-      return
-    }
-    val stored = spark.read.parquet(tablePath)
-      .where(col(BucketCol).isin(info.map(_.get(0)): _*))
-    val suspects = info.filter(_.getBoolean(1)).map(_.getInt(0))
-    // emptied-bucket detection is a METADATA diff, not a Spark job: a
-    // dynamic partition overwrite replaces the files of every bucket the
-    // written data contains (fresh UUID part names) and leaves row-less
-    // buckets untouched — so a suspect bucket whose file listing is
-    // byte-identical across the write received no surviving rows
+      touched: Seq[Int],
+      emptiable: Seq[Int])(f: DataFrame => DataFrame): Unit = {
+    if (touched.isEmpty) return
     def files(b: Int): Set[String] =
       FsOps.childNames(spark, s"$tablePath/$BucketCol=$b")
         .filterNot(_.startsWith("_")).toSet
-    val namesBefore = suspects.map(b => b -> files(b)).toMap
-    merge(stored, batch, keyCols).write.mode("overwrite")
+    val before = emptiable.map(b => b -> files(b))
+    f(spark.read.parquet(tablePath).where(col(BucketCol).isin(touched: _*)))
+      .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(BucketCol).parquet(tablePath)
-    suspects.foreach { b =>
-      if (files(b) == namesBefore(b))
+    before.foreach { case (b, names) =>
+      if (files(b) == names)
         FsOps.deleteRecursive(spark, s"$tablePath/$BucketCol=$b")
     }
   }
-
-  /** Start a streaming upsert sink for a changelog-emitting query. */
-  def writeUpsert(
-      changelog: DataFrame,
-      tablePath: String,
-      keyCols: Seq[String],
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    changelog.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(batch.sparkSession, tablePath, batch, keyCols, None)
-      }
-      .startScoped(changelog.sparkSession)
 }

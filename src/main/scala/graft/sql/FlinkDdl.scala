@@ -501,16 +501,16 @@ object FlinkDdl {
     *  - `DELETE FROM t WHERE cond` — when the table is PARTITIONED and
     *    `cond` references only partition columns, matching partition
     *    directories are DROPPED outright (metadata-scale, no rewrite);
-    *    otherwise kept rows are rewritten to a temp dir that atomically
-    *    swaps in (write I/O proportional to the table, as for any
-    *    rewriting row-level sink on a non-transactional format).
-    *  - `UPDATE t SET c = e[, …] [WHERE cond]` — rewrite-and-swap of one
+    *    otherwise the kept rows are rewritten.
+    *  - `UPDATE t SET c = e[, …] [WHERE cond]` — a rewrite through one
     *    projection that reads every assignment and `cond` off the old row
-    *    ([[graft.changelog.RowLevelOps.assign]]).
+    *    ([[assign]]).
     *  - `TRUNCATE TABLE t` — removes the table's files.
-    * A hash-bucketed upsert store (the default layout of a PK sink) takes
-    * [[graft.changelog.RowLevelOps]] instead: touched buckets rewrite in
-    * place, so the store keeps the layout its streaming MERGE writes.
+    * A rewrite makes one storage choice: a hash-bucketed upsert store
+    * (the layout of every streaming PK sink) rewrites only the buckets
+    * holding a row `cond` selects, in place, through
+    * [[graft.changelog.UpsertSink.rewriteWhere]], so it keeps its layout;
+    * any other table is rewritten whole through [[rewriteSwap]].
     */
   private def executeRowLevel(
       spark: SparkSession,
@@ -527,6 +527,15 @@ object FlinkDdl {
       s
     }
     def restFrom(i: Int): String = stmt.substring(toks(i).start)
+    def rewrite(s: TableSpec, cond: Column, movesKey: Boolean)(
+        f: DataFrame => DataFrame): Unit =
+      if (graft.changelog.UpsertSink.isBucketed(spark, s.path)) {
+        // a row's bucket is the hash of its key: moving keys would
+        // strand rows in the wrong bucket
+        require(!movesKey, s"UPDATE ${s.name}: a bucketed upsert store " +
+          s"cannot reassign its PRIMARY KEY [${s.primaryKey.mkString(", ")}]")
+        graft.changelog.UpsertSink.rewriteWhere(spark, s.path, cond)(f)
+      } else rewriteSwap(spark, s, f)
 
     toks.head.up match {
       case "TRUNCATE" =>
@@ -541,29 +550,28 @@ object FlinkDdl {
           return
         }
         val condText = rewriteExpr(restFrom(p.i))
-        if (graft.changelog.UpsertSink.isBucketed(spark, s.path)) {
-          graft.changelog.RowLevelOps.delete(spark, s.path, expr(condText))
-          return
-        }
+        val cond = expr(condText)
         val partKeys = s.options.get("partition-keys")
           .map(_.split(",").map(_.trim).toSeq).getOrElse(Nil)
         val condRefs = spark.sessionState.sqlParser
           .parseExpression(condText).references.map(_.name).toSeq
+        // partition-drop fast path (an upsert store is laid out in
+        // buckets, not partitions): list matching partition tuples from
+        // the partition columns only (metadata-scale), drop their dirs
         if (partKeys.nonEmpty &&
-            condRefs.forall(r => partKeys.exists(_.equalsIgnoreCase(r)))) {
-          // partition-drop fast path: list matching partition tuples from
-          // the partition columns only (metadata-scale), drop their dirs
+            condRefs.forall(r => partKeys.exists(_.equalsIgnoreCase(r))) &&
+            !graft.changelog.UpsertSink.isBucketed(spark, s.path)) {
           spark.read.format(s.format).load(s.path)
             .select(partKeys.map(col): _*).distinct()
-            .where(expr(condText))
+            .where(cond)
             .collect().foreach { r =>
               val rel = partKeys.zipWithIndex.map { case (k, i) =>
                 s"$k=${String.valueOf(r.get(i))}" }.mkString("/")
               graft.changelog.FsOps
                 .deleteRecursive(spark, s"${s.path}/$rel")
             }
-        } else rewriteSwap(spark, s,
-          _.where(!coalesce(expr(condText), lit(false))))
+        } else rewrite(s, cond, movesKey = false)(
+          _.where(!coalesce(cond, lit(false))))
 
       case "UPDATE" =>
         p.eat("UPDATE")
@@ -590,19 +598,29 @@ object FlinkDdl {
         val cond =
           if (p.opt("WHERE")) expr(rewriteExpr(restFrom(p.i))) else lit(true)
         val assignments = assigns.result()
-        if (graft.changelog.UpsertSink.isBucketed(spark, s.path)) {
-          // a row's bucket is the hash of its key: moving keys would
-          // strand rows in the wrong bucket
-          require(!assignments.keys.exists(a =>
-              s.primaryKey.exists(_.equalsIgnoreCase(a))),
-            s"UPDATE ${s.name}: a bucketed upsert store cannot reassign " +
-              s"its PRIMARY KEY [${s.primaryKey.mkString(", ")}]")
-          graft.changelog.RowLevelOps.update(spark, s.path, cond, assignments)
-          return
-        }
-        rewriteSwap(spark, s,
-          graft.changelog.RowLevelOps.assign(_, cond, assignments))
+        rewrite(s, cond, movesKey = assignments.keys.exists(a =>
+          s.primaryKey.exists(_.equalsIgnoreCase(a))))(
+          assign(_, cond, assignments))
     }
+  }
+
+  /** `SET c = e, … WHERE cond` over `df` as ONE projection: `cond` and
+    * every assignment read the row as it was before the statement. (A
+    * chain of per-column rewrites would test `cond` against, and feed
+    * later assignments, the values earlier ones already wrote.) */
+  private def assign(
+      df: DataFrame,
+      cond: Column,
+      assignments: Map[String, Column]): DataFrame = {
+    def target(c: String) = assignments.collectFirst {
+      case (a, e) if a.equalsIgnoreCase(c) => e }
+    assignments.keys.foreach(a =>
+      require(df.columns.exists(_.equalsIgnoreCase(a)),
+        s"UPDATE assigns unknown column $a; columns: " +
+          df.columns.mkString(", ")))
+    val hit = coalesce(cond, lit(false))
+    df.select(df.columns.map(c => target(c).fold(col(c))(e =>
+      when(hit, e).otherwise(col(c)).as(c))): _*)
   }
 
   /** Rewrite a filesystem table through `transform` into a staging
@@ -2614,7 +2632,27 @@ object FlinkDdl {
       df: DataFrame,
       overwrite: Boolean): Unit = {
     val aligned = alignToSink(spec, df)
+    // a dynamic partition overwrite replaces only the partitions written
+    def partitionOverwrite = overwrite &&
+      spec.options.contains("partition-keys") &&
+      spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
+        .exists(_.equalsIgnoreCase("dynamic"))
     spec.connector match {
+      case "filesystem"
+          if (!overwrite || partitionOverwrite) &&
+            graft.changelog.UpsertSink.isBucketed(spark, spec.path) =>
+        // the upsert store a streaming INSERT left: the rows upsert into
+        // its buckets (flat files beside them would not be read); a whole
+        // OVERWRITE below replaces it with flat files, which the next
+        // streaming INSERT re-lays out
+        require(!overwrite, s"table ${spec.name}: INSERT OVERWRITE of " +
+          "single partitions is not supported on an upsert store; " +
+          "overwrite the whole table")
+        require(spec.primaryKey.nonEmpty, s"table ${spec.name} holds an " +
+          "upsert store, hash-bucketed by its PRIMARY KEY; declare that " +
+          "PRIMARY KEY to INSERT INTO it")
+        graft.changelog.UpsertSink.insert(spark, spec.path, aligned,
+          spec.primaryKey, bucketCount(spec))
       case "filesystem" =>
         // sink.parallelism (FactoryUtil.SINK_PARALLELISM) sizes the write
         // when no DISTRIBUTED clause took over the layout

@@ -19,8 +19,9 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
   *
   *   - the checkpoint: `'sink.checkpoint-dir'`, else a fresh temp dir;
   *   - the upsert target: a parquet filesystem sink with a PRIMARY KEY,
-  *     its bucket layout resolved once at query start, and the per-batch
-  *     [[UpsertSink.applyBatch]] MERGE;
+  *     its bucket count resolved (and a flat store re-laid out) once,
+  *     by the first MERGE, and the per-batch [[UpsertSink.applyBatch]]
+  *     MERGE;
   *   - the replace target: crash-safe truncate-replace in the declared
   *     format;
   *   - the update-mode tier: MERGE on the PRIMARY KEY when it is exactly
@@ -56,7 +57,9 @@ private[sql] object StreamSink {
   /** The upsert target for the changes `producer` emits: the sink must be
     * a filesystem table with a PRIMARY KEY (the reference's error shape
     * otherwise) stored as parquet (the MERGE reads the table back). The
-    * bucket layout resolves here, once per query start. Returns the
+    * bucket count resolves once, on the first MERGE, so a tier that
+    * falls back to whole-result replace never re-lays out the store
+    * ([[startUpdating]]). Returns the
     * per-batch MERGE of a changelog micro-batch (the sink's columns plus
     * `__rowkind` and `__seq`). */
   def upsertTarget(
@@ -74,8 +77,9 @@ private[sql] object StreamSink {
       s"Table sink '${spec.name}': upsert materialization of $producer " +
         s"is parquet-backed; declared format '${spec.format}' cannot " +
         "store the merge state — declare 'format'='parquet'")
-    val buckets = UpsertSink.resolveBuckets(spark, spec.path,
-      FlinkDdl.bucketCount(spec))
+    val declared = FlinkDdl.bucketCount(spec)
+    lazy val buckets = UpsertSink.resolveBuckets(spark, spec.path,
+      spec.primaryKey, declared)
     log => UpsertSink.applyBatch(
       log.sparkSession, spec.path, log, spec.primaryKey, buckets)
   }

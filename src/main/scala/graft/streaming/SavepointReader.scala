@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.changelog.ChangelogJoin.JoinStateCodec
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -23,9 +24,12 @@ import org.apache.spark.sql.types._
   *     arms timeouts, else absent) + `state_repr`, a deterministic
   *     canonical rendering (maps sorted by key) of the decoded object.
   *     [[Savepoint.changelogJoinState]] additionally decodes the
-  *     changelog-join family's `(left, right)` side maps into one row
+  *     changelog-join family's `(left, right)` side rows into one row
   *     per live stored row: key columns + `side` ("left"/"right") +
-  *     `upsert_key` + `row_values`.
+  *     `upsert_key` + `row_values`. A changelog-join blob in the v2
+  *     layout (UnsafeRow bytes behind [[JoinStateCodec.Magic]]) does
+  *     not say what its rows hold, so both readers take the join's
+  *     input schemas and decode it through the operator's own codec.
   *
   * Scale: reads go through Spark's `statestore` DSv2 source — one task
   * per state partition, no driver materialization; the kryo decode runs
@@ -136,8 +140,12 @@ object SavepointReader {
 
     /** `flatMapGroupsWithState` state — key columns + `timeout_ms` (only
       * when the operator arms timeouts) + `state_repr` (canonical
-      * rendering of the kryo-decoded state object). */
-    def groupState(operatorId: Int = 0): DataFrame = {
+      * rendering of the decoded state object). `join` holds the
+      * (left, right) input schemas of a changelog join, which its v2
+      * blobs need; other blobs are kryo-decoded. */
+    def groupState(
+        operatorId: Int = 0,
+        join: Option[(StructType, StructType)] = None): DataFrame = {
       val raw = keyedState(operatorId)
       val hasTimeout = valueFields(raw).contains("timeoutTimestamp")
       val cols =
@@ -146,8 +154,14 @@ object SavepointReader {
             Seq(col("value.timeoutTimestamp").as("timeout_ms")) else Nil) :+
           col("value.groupState.value").as("__blob")
       val picked = raw.select(cols: _*)
+      val codec = join.map { case (l, r) => joinCodec(l, r) }
       val reprUdf = udf((b: Array[Byte]) =>
-        if (b == null) null else Decode.render(Decode.obj(b)))
+        if (b == null) null
+        else if (JoinStateCodec.isV2(b)) Decode.render(codec.getOrElse(
+          throw new IllegalArgumentException(s"operator $operatorId " +
+            "holds v2 changelog-join state: pass the join's input " +
+            "schemas")).decode(b))
+        else Decode.render(Decode.obj(b)))
       picked.withColumn("state_repr", reprUdf(col("__blob"))).drop("__blob")
     }
 
@@ -166,10 +180,21 @@ object SavepointReader {
           timestamp_millis(col("__win_start") + lit(windowSizeMs)))
     }
 
-    /** Changelog-join family state (`(left, right)` upsertKey→row maps):
-      * one row per live stored row — key columns + `side` + `upsert_key`
-      * + `row_values` (each value canonically rendered). */
-    def changelogJoinState(operatorId: Int = 0): DataFrame = {
+    /** Changelog-join family state: one row per live stored row — key
+      * columns + `side` + `upsert_key` + `row_values` (each value
+      * canonically rendered). `left`/`right` are the join's input schemas
+      * and `leftKey`/`rightKey` its upsert keys, as given to
+      * [[graft.changelog.ChangelogJoin]]; blobs of either state format
+      * decode through the operator's codec. */
+    def changelogJoinState(
+        left: StructType,
+        right: StructType,
+        leftKey: String,
+        rightKey: String,
+        operatorId: Int = 0): DataFrame = {
+      val codec = joinCodec(left, right)
+      val lk = JoinStateCodec.payload(left).fieldIndex(leftKey)
+      val rk = JoinStateCodec.payload(right).fieldIndex(rightKey)
       val raw = keyedState(operatorId)
       val kt = keyType(raw)
       val outSchema = StructType(kt.fields.toSeq ++ Seq(
@@ -183,18 +208,19 @@ object SavepointReader {
           if (blob == null) Seq.empty[Row] // key with no live state object
           else {
           val keyVals = r.getStruct(0).toSeq
-          val (l, rr) = Decode.obj(blob)
-            .asInstanceOf[(Map[Any, Seq[Any]], Map[Any, Seq[Any]])]
-          def rows(side: String, m: Map[Any, Seq[Any]]) =
-            m.toSeq.map { case (uk, vals) =>
-              Row.fromSeq(keyVals ++ Seq(side, Decode.render(uk),
-                vals.map(Decode.render)))
-            }
-          rows("left", l) ++ rows("right", rr)
+          val (l, rr) = codec.decode(blob)
+          def rows(side: String, k: Int, live: Seq[Seq[Any]]) =
+            live.map(vals => Row.fromSeq(keyVals ++ Seq(side,
+              Decode.render(vals(k)), vals.map(Decode.render))))
+          rows("left", lk, l) ++ rows("right", rk, rr)
           }
         }(enc)
         .toDF(outSchema.fieldNames.toSeq: _*)
     }
+
+    private def joinCodec(left: StructType, right: StructType) =
+      new JoinStateCodec(
+        JoinStateCodec.payload(left), JoinStateCodec.payload(right))
 
     /** The statestore source reports snapshot loads to the session's
       * StateStoreCoordinator endpoint, which only exists once a streaming

@@ -125,9 +125,12 @@ class ChangelogSpec extends SparkSpecBase {
       .toString + "/t"
     val ckpt = java.nio.file.Files.createTempDirectory("graft-upsert-ck-")
       .toString
-    val q = UpsertSink.writeUpsert(
-      ChangelogNormalize(df, Seq("k"), "kind", "__seq"),
-      table, Seq("k"), ckpt)
+    val buckets = UpsertSink.resolveBuckets(spark, table, Seq("k"), None)
+    val q = ChangelogNormalize(df, Seq("k"), "kind", "__seq").writeStream
+      .outputMode("append").option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        UpsertSink.applyBatch(spark, table, batch, Seq("k"), buckets)
+      }.start()
     try {
       val (a, b) = feed.splitAt(feed.length / 2)
       input.addData(a); q.processAllAvailable()
@@ -1204,7 +1207,7 @@ class ChangelogSpec extends SparkSpecBase {
     // batch 1: keys 1..40 at v=k*1
     val b1 = (1L to 40L).map(k => (k, k * 1.0, 1L, RowKind.Insert))
       .toDF("k", "v", RowKind.seqCol, RowKind.kindCol)
-    UpsertSink.applyBatch(spark, table, b1, Seq("k"), Some(buckets))
+    UpsertSink.applyBatch(spark, table, b1, Seq("k"), buckets)
 
     // pick a key and record its bucket dir's file set; then update a key
     // from a DIFFERENT bucket and assert the first bucket's files are
@@ -1222,7 +1225,7 @@ class ChangelogSpec extends SparkSpecBase {
 
     val b2 = Seq((otherKey, 999.0, 2L, RowKind.UpdateAfter))
       .toDF("k", "v", RowKind.seqCol, RowKind.kindCol)
-    UpsertSink.applyBatch(spark, table, b2, Seq("k"), Some(buckets))
+    UpsertSink.applyBatch(spark, table, b2, Seq("k"), buckets)
     assert(filesOf(bucketOf(k1)) == before,
       "untouched bucket was rewritten")
 
@@ -1236,15 +1239,14 @@ class ChangelogSpec extends SparkSpecBase {
     val victims = (1L to 40L).filter(k => bucketOf(k) == victim)
     val b3 = victims.map(k => (k, 0.0, 3L, RowKind.Delete))
       .toDF("k", "v", RowKind.seqCol, RowKind.kindCol)
-    UpsertSink.applyBatch(spark, table, b3, Seq("k"), Some(buckets))
+    UpsertSink.applyBatch(spark, table, b3, Seq("k"), buckets)
     assert(!new java.io.File(table, s"__bucket=$victim").exists(),
       "emptied bucket dir not removed")
     val after = spark.read.parquet(table).select("k").as[Long].collect().toSet
     assert(after == (1L to 40L).toSet -- victims)
   }
 
-  test("upsert MERGE matches the UpsertMaterialize oracle, both " +
-      "layouts and joins") {
+  test("upsert MERGE matches the UpsertMaterialize oracle, both joins") {
     import org.apache.spark.sql.catalyst.optimizer.BuildRight
     import org.apache.spark.sql.catalyst.plans.LeftAnti
     import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
@@ -1253,8 +1255,7 @@ class ChangelogSpec extends SparkSpecBase {
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
     // The oracle is the changelog's own final state: after every batch
     // the store must equal UpsertMaterialize over ALL batches so far,
-    // whichever layout holds it and whichever join Spark picks for the
-    // MERGE's key set.
+    // whichever join Spark picks for the MERGE's key set.
     val base = java.nio.file.Files.createTempDirectory("graft-merge-")
     val buckets = 8
     def batchDf(rows: Seq[(Option[Long], Double, Long, String)]) =
@@ -1302,21 +1303,18 @@ class ChangelogSpec extends SparkSpecBase {
         else markers.add(qe.logical.toString)
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    // replay every batch into both layouts; returns the MERGE plans
+    // replay every batch into a store; returns the MERGE plans
     def replay(tag: String): Seq[SparkPlan] = {
       import scala.jdk.CollectionConverters._
       mergePlans.clear()
-      val layouts = Seq(None, Some(buckets))
+      val t = s"$base/$tag"
       batches.indices.foreach { i =>
         val want = rows(UpsertMaterialize(
           batches.take(i + 1).map(batchDf).reduce(_ union _), Seq("k")))
-        layouts.foreach { l =>
-          val t = s"$base/$tag-${l.fold("flat")(n => s"b$n")}"
-          UpsertSink.applyBatch(spark, t, batchDf(batches(i)), Seq("k"), l)
-          assert(rows(UpsertSink.readTable(spark, t)) == want,
-            s"$tag ${l.fold("flat")(_ => "bucketed")} store diverged " +
-              s"from the oracle after batch ${i + 1}")
-        }
+        UpsertSink.applyBatch(
+          spark, t, batchDf(batches(i)), Seq("k"), buckets)
+        assert(rows(UpsertSink.readTable(spark, t)) == want,
+          s"$tag store diverged from the oracle after batch ${i + 1}")
       }
       val marker = s"merge-plans-$tag"
       spark.range(1).select(lit(marker)).collect()
@@ -1325,7 +1323,7 @@ class ChangelogSpec extends SparkSpecBase {
       // file-count bound: every touched bucket is rewritten wholly per
       // batch, so per-bucket files never compound across batches
       (0 until buckets).foreach { b =>
-        val n = Option(new java.io.File(s"$base/$tag-b$buckets/__bucket=$b")
+        val n = Option(new java.io.File(s"$t/__bucket=$b")
           .listFiles()).getOrElse(Array.empty)
           .count(_.getName.endsWith(".parquet"))
         assert(n <= 16, s"bucket $b holds $n files — small-files regression")
@@ -1358,32 +1356,53 @@ class ChangelogSpec extends SparkSpecBase {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  test("RowLevelOps update/delete rewrite only touched buckets") {
+  test("UpsertSink DELETE / UPDATE rewrite only touched buckets") {
     val table = java.nio.file.Files.createTempDirectory("graft-rl-")
       .toString + "/t"
     val b0 = (1L to 30L).map(k => (k, k * 1.0, 1L, RowKind.Insert))
       .toDF("k", "v", RowKind.seqCol, RowKind.kindCol)
-    UpsertSink.applyBatch(spark, table, b0, Seq("k"), Some(4))
-
-    // UPDATE v = v * 10 WHERE k <= 3
-    val nUpd = RowLevelOps.update(spark, table,
-      col("k") <= 3, Map("v" -> (col("v") * 10)))
-    assert(nUpd == 3)
-    val afterUpd = spark.read.parquet(table).select("k", "v")
+    UpsertSink.applyBatch(spark, table, b0, Seq("k"), 4)
+    def bucketOf(k: Long): Int =
+      Seq(k).toDF("k").select(pmod(hash(col("k")), lit(4))).head().getInt(0)
+    def filesOf(b: Int): Set[String] =
+      Option(new java.io.File(table, s"__bucket=$b").list())
+        .map(_.toSet).getOrElse(Set.empty)
+    def state() = spark.read.parquet(table).select("k", "v")
       .as[(Long, Double)].collect().toMap
-    assert(afterUpd(1L) == 10.0 && afterUpd(2L) == 20.0 &&
-      afterUpd(3L) == 30.0 && afterUpd(10L) == 10.0)
-    assert(afterUpd.size == 30)
+    // every statement below touches only key 1's bucket: another
+    // bucket must keep its exact file set throughout
+    val hot = bucketOf(1L)
+    val hotKeys = (1L to 30L).filter(bucketOf(_) == hot)
+    val cold = (0 until 4).find(_ != hot).get
+    val coldFiles = filesOf(cold)
+    assert(coldFiles.nonEmpty)
 
-    // DELETE WHERE k > 25
-    val nDel = RowLevelOps.delete(spark, table, col("k") > 25)
-    assert(nDel == 5)
-    val afterDel = spark.read.parquet(table).select("k")
-      .as[Long].collect().toSet
-    assert(afterDel == (1L to 25L).toSet)
+    // UPDATE v = v * 10 WHERE k = 1
+    val hotFiles = filesOf(hot)
+    UpsertSink.rewriteWhere(spark, table, col("k") === 1)(
+      _.withColumn("v", when(col("k") === 1, col("v") * 10)
+        .otherwise(col("v"))))
+    assert(state() == (1L to 30L).map(k =>
+      k -> (if (k == 1L) 10.0 else k * 1.0)).toMap)
+    assert(filesOf(hot) != hotFiles, "the touched bucket was not rewritten")
+    assert(filesOf(cold) == coldFiles, "UPDATE rewrote an untouched bucket")
+
+    // DELETE every other key of the hot bucket: key 1 survives in it
+    val others = col("k").isin(hotKeys.filter(_ != 1L): _*)
+    UpsertSink.rewriteWhere(spark, table, others)(_.where(!others))
+    assert(state().keySet == (1L to 30L).toSet -- hotKeys + 1L)
+    assert(filesOf(cold) == coldFiles, "DELETE rewrote an untouched bucket")
+
+    // DELETE key 1 -> the emptied bucket's dir disappears
+    UpsertSink.rewriteWhere(spark, table, col("k") === 1)(
+      _.where(col("k") =!= 1))
+    assert(!new java.io.File(table, s"__bucket=$hot").exists(),
+      "emptied bucket dir not removed")
+    assert(state().keySet == (1L to 30L).toSet -- hotKeys)
+    assert(filesOf(cold) == coldFiles, "DELETE rewrote an untouched bucket")
 
     // DELETE everything -> all bucket dirs removed
-    RowLevelOps.delete(spark, table, lit(true))
+    UpsertSink.rewriteWhere(spark, table, lit(true))(_.where(lit(false)))
     val dirs = Option(new java.io.File(table).listFiles())
       .getOrElse(Array.empty).filter(_.getName.startsWith("__bucket="))
     assert(dirs.isEmpty)

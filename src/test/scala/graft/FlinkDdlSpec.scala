@@ -2281,6 +2281,114 @@ class FlinkDdlSpec extends SparkSpecBase {
     } finally qs.foreach(_.stop())
   }
 
+  test("runStreaming into a batch-filled PK table buckets it; DML keeps " +
+      "the layout") {
+    import spark.implicits._
+    import graft.changelog.UpsertSink
+    val dir = tmpDir()
+    new java.io.File(s"$dir/src").mkdirs()
+    val sink =
+      s"""CREATE TABLE agg (k BIGINT, n BIGINT,
+         |  PRIMARY KEY (k) NOT ENFORCED)
+         |  WITH ('connector'='filesystem', 'path'='$dir/snk',
+         |        'format'='parquet', 'sink.checkpoint-dir'='$dir/ck')"""
+        .stripMargin
+    def state(): Map[Long, Long] = UpsertSink.readTable(spark, s"$dir/snk")
+      .select("k", "n").as[(Long, Long)].collect().toMap
+    def bucketed(): Boolean = UpsertSink.isBucketed(spark, s"$dir/snk") &&
+      !new java.io.File(s"$dir/snk").list().exists(_.endsWith(".parquet"))
+    // a batch INSERT fills the PRIMARY KEY table as flat parquet
+    FlinkDdl.runScript(spark,
+      s"$sink;\nINSERT INTO agg VALUES (1, 10), (2, 20), (3, 30)")
+    assert(!UpsertSink.isBucketed(spark, s"$dir/snk"))
+    val qs = FlinkDdl.runStreaming(spark,
+      s"""CREATE TABLE src (k BIGINT, v BIGINT)
+         |  WITH ('connector'='filesystem', 'path'='$dir/src',
+         |        'format'='parquet');
+         |$sink;
+         |INSERT INTO agg
+         |SELECT k, COUNT(*) AS n FROM src GROUP BY k""".stripMargin)
+    try {
+      Seq((2L, 0L), (4L, 0L)).toDF("k", "v")
+        .write.mode("append").parquet(s"$dir/src")
+      qs.head.processAllAvailable()
+      // the stream merges over the batch rows: key 2 is replaced, keys
+      // 1 and 3 survive, key 4 is new
+      assert(state() == Map(1L -> 10L, 2L -> 1L, 3L -> 30L, 4L -> 1L))
+      assert(bucketed(), "the streaming MERGE must leave the store bucketed")
+    } finally qs.foreach(_.stop())
+    // a later batch INSERT upserts into the buckets: key 4 is replaced,
+    // key 5 is new, and no flat file lands beside the buckets
+    FlinkDdl.runScript(spark,
+      s"$sink;\nINSERT INTO agg VALUES (4, 40), (5, 50)")
+    assert(state() ==
+      Map(1L -> 10L, 2L -> 1L, 3L -> 30L, 4L -> 40L, 5L -> 50L))
+    assert(bucketed(), "a batch INSERT must keep the bucketed layout")
+    FlinkDdl.runScript(spark,
+      s"""$sink;
+         |DELETE FROM agg WHERE k = 1;
+         |UPDATE agg SET n = 0 WHERE k = 3""".stripMargin)
+    assert(state() == Map(2L -> 1L, 3L -> 0L, 4L -> 40L, 5L -> 50L))
+    assert(bucketed(), "row-level DML must keep the bucketed layout")
+  }
+
+  test("a single-partition INSERT OVERWRITE on a bucketed upsert store " +
+      "fails and leaves the store as it was") {
+    import spark.implicits._
+    import graft.changelog.UpsertSink
+    val dir = tmpDir()
+    val ddl =
+      s"""CREATE TABLE t (k BIGINT, n BIGINT, tag STRING,
+         |  PRIMARY KEY (k) NOT ENFORCED) PARTITIONED BY (tag)
+         |  WITH ('connector'='filesystem', 'path'='$dir/t',
+         |        'format'='parquet')""".stripMargin
+    FlinkDdl.runScript(spark,
+      s"$ddl;\nINSERT INTO t VALUES (1, 10, 'a'), (2, 20, 'b')")
+    // the layout a streaming INSERT leaves (its first MERGE re-lays out)
+    UpsertSink.resolveBuckets(spark, s"$dir/t", Seq("k"), None)
+    def state() = UpsertSink.readTable(spark, s"$dir/t")
+      .select("k", "n", "tag").as[(Long, Long, String)].collect().toSet
+    val e = intercept[IllegalArgumentException](FlinkDdl.runScript(spark,
+      s"$ddl;\nINSERT OVERWRITE t PARTITION (tag='a') VALUES (3, 30)"))
+    assert(e.getMessage.contains("single partitions"), e.getMessage)
+    assert(state() == Set((1L, 10L, "a"), (2L, 20L, "b")))
+    assert(UpsertSink.isBucketed(spark, s"$dir/t"))
+  }
+
+  test("runStreaming: a PK sink that falls back to whole-result replace " +
+      "keeps its flat store") {
+    import spark.implicits._
+    import graft.changelog.UpsertSink
+    val dir = tmpDir()
+    new java.io.File(s"$dir/src").mkdirs()
+    // PRIMARY KEY n is not the GROUP BY key k: every batch replaces the
+    // whole result, so nothing may re-lay the store out into buckets
+    val sink =
+      s"""CREATE TABLE agg (k BIGINT, n BIGINT,
+         |  PRIMARY KEY (n) NOT ENFORCED)
+         |  WITH ('connector'='filesystem', 'path'='$dir/snk',
+         |        'format'='parquet', 'sink.checkpoint-dir'='$dir/ck')"""
+        .stripMargin
+    FlinkDdl.runScript(spark, s"$sink;\nINSERT INTO agg VALUES (1, 10)")
+    val qs = FlinkDdl.runStreaming(spark,
+      s"""CREATE TABLE src (k BIGINT, v BIGINT)
+         |  WITH ('connector'='filesystem', 'path'='$dir/src',
+         |        'format'='parquet');
+         |$sink;
+         |INSERT INTO agg
+         |SELECT k, COUNT(*) AS n FROM src GROUP BY k""".stripMargin)
+    try {
+      assert(!UpsertSink.isBucketed(spark, s"$dir/snk"),
+        "query start must not re-lay out a store it will replace")
+      Seq((2L, 0L), (2L, 1L)).toDF("k", "v")
+        .write.mode("append").parquet(s"$dir/src")
+      qs.head.processAllAvailable()
+      assert(!UpsertSink.isBucketed(spark, s"$dir/snk"))
+      assert(spark.read.parquet(s"$dir/snk").select("k", "n")
+        .as[(Long, Long)].collect().toSeq == Seq((2L, 2L)))
+    } finally qs.foreach(_.stop())
+  }
+
   test("withArrivalSeq raises actionably past the 2^20 per-partition " +
       "ordering bound; stays exact under it") {
     import spark.implicits._
@@ -2465,7 +2573,7 @@ class FlinkDdlSpec extends SparkSpecBase {
       rows.toDF("k", "v", "w")
         .withColumn(RowKind.kindCol, lit(RowKind.Insert))
         .withColumn(RowKind.seqCol, lit(1L)),
-      Seq("k"), Some(4))
+      Seq("k"), 4)
     FlinkDdl.runScript(spark,
       s"""${table("bkt", ", PRIMARY KEY (k) NOT ENFORCED")};
          |${update.format("bkt")}""".stripMargin)

@@ -36,8 +36,13 @@ class SavepointReaderSpec extends SparkSpecBase {
             .asInstanceOf[StructType].fieldNames.toSet
           if (vf.contains("groupState") && n > 0) {
             // the shared flatMapGroupsWithState layout decodes to key
-            // cols + optional timeout_ms + canonical state_repr
-            val gs = sp.groupState(op.operatorId)
+            // cols + optional timeout_ms + canonical state_repr; a
+            // changelog join's v2 blobs decode with its input schemas
+            val join = sc.schemas match {
+              case Seq(l, r) => Some((l, r))
+              case _ => None
+            }
+            val gs = sp.groupState(op.operatorId, join)
             val reprs = gs.select(col("state_repr")).collect()
             assert(reprs.nonEmpty && reprs.forall(_.getString(0) != null),
               s"${sc.name}/op${op.operatorId}: undecodable state")
@@ -170,7 +175,7 @@ class SavepointReaderSpec extends SparkSpecBase {
       s"new left row must join the BOOTSTRAPPED right row: $emitted")
 
     val sp = SavepointReader.read(spark, ckpt)
-    val state = sp.changelogJoinState()
+    val state = sp.changelogJoinState(lSchema, rSchema, "l_id", "r_id")
       .select("__jk", "side", "upsert_key", "row_values")
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2),

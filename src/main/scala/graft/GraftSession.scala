@@ -53,14 +53,17 @@ object GraftSession {
       // deployment (or an A/B measurement) can re-tune any scale-dependent
       // setting without a rebuild. Local defaults above stay the bench
       // contract.
-      .config(
-        sys.env.get("SPARK_GRAFT_CONF").toSeq
-          .flatMap(_.split(";"))
-          .map(_.trim).filter(_.contains("="))
-          .map { kv =>
-            val i = kv.indexOf('=')
-            kv.take(i).trim -> kv.drop(i + 1).trim
-          }.toMap)
+      .config(parseConf(sys.env.get("SPARK_GRAFT_CONF")))
+
+  /** `$SPARK_GRAFT_CONF`: semicolon-separated `key=value` pairs (empty
+    * entries skipped). An entry that is not `key=value` fails naming the
+    * variable. */
+  private[graft] def parseConf(raw: Option[String]): Map[String, String] =
+    raw.toSeq.flatMap(_.split(";")).map(_.trim).filter(_.nonEmpty).map { kv =>
+      val i = kv.indexOf('=')
+      require(i > 0, s"SPARK_GRAFT_CONF: entry '$kv' is not key=value")
+      kv.take(i).trim -> kv.drop(i + 1).trim
+    }.toMap
 
   /** State-store partition count for STREAMING queries (r19, guide §2.2).
     *
@@ -83,7 +86,14 @@ object GraftSession {
     * comparable across its core-count runs (constant, not derived from
     * the core count). */
   def streamShufflePartitions: Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS").map(_.toInt).getOrElse(8)
+    parseStreamPartitions(sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS"))
+
+  /** `$SPARK_GRAFT_STREAM_PARTITIONS`, else 8; a value that is not a
+    * positive integer fails naming the variable. */
+  private[graft] def parseStreamPartitions(raw: Option[String]): Int =
+    raw.fold(8)(v => v.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException("SPARK_GRAFT_STREAM_PARTITIONS " +
+        s"must be a positive integer, got '$v'")))
 
   /** Run `start` (a streaming-query `.start()` call) with
     * `spark.sql.shuffle.partitions` scoped to [[streamShufflePartitions]].

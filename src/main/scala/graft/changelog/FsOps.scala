@@ -1,6 +1,6 @@
 package graft.changelog
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Hadoop-FileSystem path helpers for the changelog sinks.
@@ -8,8 +8,10 @@ import org.apache.spark.sql.SparkSession
   * The read/write side of [[UpsertSink]] accepts any Hadoop-resolvable
   * path (hdfs://, s3a://, file:/), so the bookkeeping side must too —
   * `java.io.File` silently no-ops on non-local URIs, which would leave a
-  * fully-deleted bucket directory in place and resurrect its keys on the
-  * next merge (ADVICE r3).
+  * superseded file in place (ADVICE r3). The upsert store commits through
+  * its own version log; [[replace]] / [[current]] serve the tables that
+  * are rewritten whole (a whole-result sink, the rank tier's candidate
+  * store, a row-level rewrite of a plain table).
   */
 private[graft] object FsOps {
 
@@ -23,12 +25,21 @@ private[graft] object FsOps {
     fs.exists(p)
   }
 
-  /** Names of direct children; empty if the path does not exist. */
-  def childNames(spark: SparkSession, path: String): Seq[String] = {
+  /** The fully qualified form of `path` (scheme and authority). */
+  def qualified(spark: SparkSession, path: String): Path = {
     val (fs, p) = resolve(spark, path)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
+    fs.makeQualified(p)
   }
+
+  /** Statuses of the direct children; empty if the path does not exist. */
+  def list(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val (fs, p) = resolve(spark, path)
+    if (!fs.exists(p)) Seq.empty else fs.listStatus(p).toSeq
+  }
+
+  /** Names of direct children; empty if the path does not exist. */
+  def childNames(spark: SparkSession, path: String): Seq[String] =
+    list(spark, path).map(_.getPath.getName)
 
   def deleteRecursive(spark: SparkSession, path: String): Unit = {
     val (fs, p) = resolve(spark, path)
@@ -36,10 +47,12 @@ private[graft] object FsOps {
     ()
   }
 
+  /** Move `from` to `to`, creating `to`'s parent dir if needed. */
   def rename(spark: SparkSession, from: String, to: String): Unit = {
     val (fs, p) = resolve(spark, from)
-    fs.rename(p, new Path(to))
-    ()
+    val dest = new Path(to)
+    fs.mkdirs(dest.getParent)
+    require(fs.rename(p, dest), s"could not move $from to $to")
   }
 
   /** Replace the contents of `dest` with what `write` puts at the staging

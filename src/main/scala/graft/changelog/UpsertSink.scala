@@ -1,23 +1,37 @@
 package graft.changelog
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.io.{InputStream, OutputStream}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, GraftPlans, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, LogicalRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.streaming.checkpointing.HDFSMetadataLog
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.json4s.{Formats, NoTypeHints}
+import org.json4s.jackson.Serialization
 
 /** Changelog-aware streaming SINK: materializes a changelog stream into a
   * parquet-backed table via `foreachBatch` MERGE — the engine-side half of
   * the reference's Sink + SinkUpsertMaterializer pair
   * (StreamExecSink.java:137, SinkUpsertMaterializer.java:64).
   *
-  * One store layout: rows are hash-bucketed into `__bucket=N/`
-  * directories, N = `pmod(hash(keys), buckets)`, with `buckets` the
-  * sink's `'distribution-buckets'`, else [[DefaultBuckets]]. A store that
-  * starts on flat parquet is re-laid out once, before its first MERGE
-  * ([[resolveBuckets]]).
+  * A store is its version log plus the files the log names. The log
+  * (`_graft_log/`, an `HDFSMetadataLog`) writes each version atomically
+  * and refuses a version id that is already there; a [[Version]] holds the
+  * key columns, the row schema, the live files of each bucket and the last
+  * batch id each streaming writer committed. Rows are hash-bucketed into
+  * `__bucket=N/` directories, N = `pmod(hash(keys), buckets)`.
   *
-  * Every write to the store is one touched-bucket rewrite: read only the
-  * buckets a change touches, write `f` of them by dynamic partition
-  * overwrite, and remove the touched buckets `f` leaves empty. It has
-  * three entries:
+  * Every write to the store is one touched-bucket rewrite ([[commit]]):
+  * read only the buckets a change touches (from the version's file list,
+  * never a directory listing), write their new content under fresh file
+  * names, commit the next version, and only then delete the files it
+  * superseded. It has three entries:
   *   - the per-micro-batch MERGE ([[applyBatch]]):
   *     {{{
   *       stored LEFT ANTI (keys of the batch's non -U rows)
@@ -38,72 +52,228 @@ import org.apache.spark.sql.functions._
   *     SupportsRowLevelUpdate: the buckets holding a row the statement's
   *     condition selects.
   *
-  * Micro-batch replay: re-applying a batch over a whole store reaches the
-  * same state, because materialization is keyed keep-last, not an
-  * increment. A crash inside the write is not covered: Spark's
-  * dynamic-overwrite commit (`HadoopMapReduceCommitProtocol.commitJob`)
-  * replaces the touched buckets one at a time, each by delete-then-rename,
-  * so a crash between the two loses that bucket's stored rows, and the
-  * replayed batch rewrites only its own keys. A table format with
-  * transactional commit (Delta/Iceberg — not on this build's classpath)
-  * closes that gap; the changelog→final-state semantics are identical.
+  * Bucket count: the log records it, so it follows the store. A store
+  * whose sink declares no `'distribution-buckets'` starts at 1 bucket and
+  * doubles, by one re-layout commit, when its largest bucket exceeds
+  * `spark.sql.files.maxPartitionBytes` (one read task's worth). A declared
+  * count that differs from the recorded one is an explicit re-layout
+  * commit. A path with no log (flat parquet, or a store written before the
+  * log) is read once and committed as version 0.
+  *
+  * Crash safety, the idempotent-sink argument of Structured Streaming: a
+  * crash before the commit leaves only files no version names (readers
+  * never see them; the next write sweeps them away), a crash after it
+  * leaves superseded files that the next write deletes, and a replayed
+  * micro-batch whose id its writer already committed is a no-op. Readers
+  * ([[readTable]]) take the latest version's files; a reader that took a
+  * version just before a commit can find a superseded file gone
+  * (`FILE_NOT_EXIST`) and must retry.
   */
 object UpsertSink {
 
-  /** Bucket count of a store whose sink declares no
-    * `'distribution-buckets'`. */
-  val DefaultBuckets = 64
-
   private val BucketCol = "__bucket"
+  private val LogDir = "_graft_log"
+  private val StagingDir = "_graft_staging"
 
-  /** The store at `tablePath` uses the hash-bucketed layout. */
-  def isBucketed(spark: SparkSession, tablePath: String): Boolean =
-    FsOps.childNames(spark, tablePath).exists(_.startsWith(BucketCol + "="))
+  /** A file of a store version: its path under the store, and size. */
+  private[changelog] final case class StoreFile(path: String, size: Long)
 
-  private def withBucket(df: DataFrame, keyCols: Seq[String], n: Int) =
-    df.withColumn(BucketCol, pmod(hash(keyCols.map(col): _*), lit(n)))
+  /** One committed version of a store: its key columns, row schema (as
+    * JSON), live files per bucket (the bucket count is `files.size`), and
+    * the last batch id each streaming writer (query id) committed. */
+  private[changelog] final case class Version(
+      keys: Seq[String],
+      schema: String,
+      files: Seq[Seq[StoreFile]],
+      writers: Map[String, Long]) {
+    def buckets: Int = files.size
+    def live: Set[String] = files.flatten.map(_.path).toSet
+    def rowType: StructType =
+      DataType.fromJson(schema).asInstanceOf[StructType]
+  }
 
-  /** A store's bucket count, resolved once per query: `declared`
-    * (the sink's `'distribution-buckets'`), else [[DefaultBuckets]]. A
-    * path holding flat parquet — a PRIMARY KEY table filled by a batch
-    * `INSERT`, a store written before buckets were the default, or the
-    * `.old` dir of a crashed swap, which [[FsOps.current]] reads — is
-    * re-laid out into those buckets here, once, through the crash-safe
-    * [[FsOps.replace]]: the MERGE reads only `__bucket=` dirs and would
-    * orphan flat files. */
+  /** The store at `path` as of version `id` (-1: nothing committed). */
+  private final case class Store(
+      spark: SparkSession, path: String, id: Long, v: Version) {
+    def staging: String = s"$path/$StagingDir"
+    def log: VersionLog = new VersionLog(spark, s"$path/$LogDir")
+  }
+
+  private class VersionLog(spark: SparkSession, path: String)
+      extends HDFSMetadataLog[Version](spark, path) {
+    private implicit val formats: Formats = Serialization.formats(NoTypeHints)
+
+    override def serialize(v: Version, out: OutputStream): Unit =
+      out.write(s"v1\n${Serialization.write(v)}".getBytes(UTF_8))
+
+    override def deserialize(in: InputStream): Version = {
+      val text = new String(in.readAllBytes(), UTF_8)
+      val nl = text.indexOf('\n')
+      require(text.take(nl) == "v1", s"store log $path: unsupported " +
+        s"version line '${text.take(nl max 0)}'")
+      Serialization.read[Version](text.drop(nl + 1))
+    }
+  }
+
+  /** The files of one store version as a [[FileIndex]], as Delta's
+    * `TahoeFileIndex` is to its log: a read takes its files from the
+    * version, so it never lists the store or starts Spark's
+    * parallel-listing job. */
+  private class VersionIndex(root: Path, files: Seq[StoreFile])
+      extends FileIndex {
+    private val statuses = files.map(f => FileStatusWithMetadata(
+      new FileStatus(f.size, false, 0, 0, 0, new Path(root, f.path))))
+    override def rootPaths: Seq[Path] = Seq(root)
+    override def listFiles(
+        partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty, statuses))
+    override def inputFiles: Array[String] =
+      statuses.map(_.getPath.toString).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = files.map(_.size).sum
+    override def partitionSchema: StructType = new StructType()
+  }
+
+  /** Test seam at the two points a crash of [[commit]] leaves the store
+    * in: "written" (new files in place, no version committed) and
+    * "committed" (version committed, superseded files not deleted). */
+  private[graft] var crashPoint: String => Unit = _ => ()
+
+  private def bucketOf(keyCols: Seq[String], n: Int): Column =
+    pmod(hash(keyCols.map(col): _*), lit(n))
+
+  /** The path holds a store with a version log. */
+  def isStore(spark: SparkSession, tablePath: String): Boolean =
+    FsOps.exists(spark, s"$tablePath/$LogDir")
+
+  private def latest(spark: SparkSession, path: String): Option[Store] =
+    if (!isStore(spark, path)) None
+    else new VersionLog(spark, s"$path/$LogDir").getLatest()
+      .map { case (id, v) => Store(spark, path, id, v) }
+
+  /** The rows of `buckets` of the store's version. */
+  private def scan(s: Store, buckets: Seq[Int]): DataFrame = {
+    val index = new VersionIndex(FsOps.qualified(s.spark, s.path),
+      buckets.flatMap(s.v.files(_)))
+    GraftPlans.ofRows(s.spark, LogicalRelation(HadoopFsRelation(index,
+      new StructType(), s.v.rowType, None, new ParquetFileFormat,
+      Map.empty)(s.spark)))
+  }
+
+  /** Read an upsert store back as its LOGICAL table: the latest
+    * version's files. A path with no log (a whole-result sink, or a store
+    * not written since the log) is read from its files, less the
+    * `__bucket` layout column. */
+  def readTable(spark: SparkSession, tablePath: String): DataFrame =
+    latest(spark, tablePath).fold {
+      val df = spark.read.parquet(tablePath)
+      if (df.columns.contains(BucketCol)) df.drop(BucketCol) else df
+    }(s => scan(s, s.v.files.indices))
+
+  private def taken(s: Store) = new IllegalStateException(
+    s"upsert store ${s.path}: version ${s.id + 1} was committed by " +
+      "another writer; one writer per store")
+
+  /** Open the store for a write keyed on `keyCols` (empty: the recorded
+    * keys): sweep what a crashed write left, commit a path with no log as
+    * version 0, and re-lay out to a `declared` count that differs from
+    * the recorded one. */
+  private def open(
+      spark: SparkSession,
+      path: String,
+      keyCols: Seq[String],
+      declared: Option[Int]): Store = {
+    val fresh = Store(spark, path, -1,
+      Version(keyCols, "", Seq(Nil), Map.empty))
+    val s = latest(spark, path).getOrElse(fresh)
+    require(keyCols.isEmpty ||
+      s.v.keys.map(_.toLowerCase) == keyCols.map(_.toLowerCase),
+      s"upsert store $path is keyed on [${s.v.keys.mkString(", ")}], " +
+        s"not [${keyCols.mkString(", ")}]")
+    require(s.v.keys.nonEmpty, s"$path holds no upsert store")
+    if (FsOps.exists(spark, s.staging)) recover(s)
+    val opened = if (s.id < 0) migrate(s, declared.getOrElse(1)) else s
+    declared.filter(_ != opened.v.buckets).fold(opened)(relayout(opened, _))
+  }
+
+  /** A write that died before its clean-up left its staging dir: delete
+    * every file in the bucket dirs that the version does not name (files
+    * of a write never committed, or superseded files not yet deleted). A
+    * recovery step, so it may list the store. */
+  private def recover(s: Store): Unit = {
+    val live = s.v.live
+    FsOps.list(s.spark, s.path)
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith(BucketCol))
+      .foreach { d =>
+        FsOps.list(s.spark, d.getPath.toString).filter(isData)
+          .filterNot(f => live(s"${d.getPath.getName}/${f.getPath.getName}"))
+          .foreach(f => FsOps.deleteRecursive(s.spark, f.getPath.toString))
+      }
+    FsOps.deleteRecursive(s.spark, s.staging)
+  }
+
+  private def isData(f: FileStatus): Boolean =
+    f.isFile && !f.getPath.getName.startsWith("_") &&
+      !f.getPath.getName.startsWith(".")
+
+  /** A path with no log: its files are read once and committed as
+    * version 0 — as they lie, in one bucket (flat parquet, or a store
+    * bucketed before the log), or, when directories carry other columns
+    * (a PARTITIONED BY table), rewritten into `n` buckets. */
+  private def migrate(s: Store, n: Int): Store = {
+    val df =
+      if (!FsOps.exists(s.spark, s.path)) None
+      else try Some(s.spark.read.parquet(s.path)) catch {
+        case e: AnalysisException
+            if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
+      }
+    val empty = s.copy(v = s.v.copy(files = Seq.fill(n)(Nil)))
+    df.fold(empty) { df =>
+      val rel = df.queryExecution.analyzed.collectFirst {
+        case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r
+      }.get
+      val root = FsOps.qualified(s.spark, s.path).toString + "/"
+      val old = Seq(rel.location.listFiles(Nil, Nil).flatMap(_.files).map(f =>
+        StoreFile(f.getPath.toString.stripPrefix(root), f.getLen)))
+      if (rel.partitionSchema.fieldNames.forall(_ == BucketCol)) {
+        val v0 = s.v.copy(schema = rel.dataSchema.json, files = old)
+        if (!s.log.add(0, v0)) throw taken(s)
+        s.copy(id = 0, v = v0)
+      } else commit(s.copy(v = s.v.copy(files = old)), 0 until n, n,
+        df.drop(BucketCol), Map.empty)
+    }
+  }
+
+  /** Rewrite the whole store into `n` buckets: one commit. */
+  private def relayout(s: Store, n: Int): Store =
+    if (s.v.live.isEmpty) s.copy(v = s.v.copy(files = Seq.fill(n)(Nil)))
+    else commit(s, 0 until n, n, scan(s, s.v.files.indices), s.v.writers)
+
+  /** Open the store at `tablePath` keyed on `keyCols` ([[open]]) and
+    * return its bucket count. */
   def resolveBuckets(
       spark: SparkSession,
       tablePath: String,
       keyCols: Seq[String],
-      declared: Option[Int]): Int = {
-    val n = declared.getOrElse(DefaultBuckets)
-    FsOps.current(spark, tablePath).filterNot(isBucketed(spark, _))
-      .foreach { flat =>
-        val rows = withBucket(spark.read.parquet(flat), keyCols, n)
-        FsOps.replace(spark, tablePath)(
-          rows.write.mode("overwrite").partitionBy(BucketCol).parquet)
-      }
-    n
-  }
+      declared: Option[Int]): Int =
+    open(spark, tablePath, keyCols, declared).v.buckets
 
-  /** Read an upsert store back as its LOGICAL table: the internal
-    * `__bucket` layout column is dropped; a table with no such column
-    * (a whole-result sink) reads as-is. */
-  def readTable(spark: SparkSession, tablePath: String): DataFrame = {
-    val df = spark.read.parquet(tablePath)
-    if (df.columns.contains(BucketCol)) df.drop(BucketCol) else df
-  }
-
-  /** Apply one changelog micro-batch to the store, bucketed into
-    * `buckets` (from [[resolveBuckets]]): only the buckets the batch
-    * touches are read and rewritten. */
+  /** Apply one changelog micro-batch to the store: only the buckets the
+    * batch touches are read and rewritten. `declared` is the sink's
+    * `'distribution-buckets'`; `batchId` (writer, id) makes a replay of a
+    * batch the writer already committed a no-op. */
   def applyBatch(
       spark: SparkSession,
       tablePath: String,
       batch0: DataFrame,
       keyCols: Seq[String],
-      buckets: Int): Unit = {
-    val batch = withBucket(batch0, keyCols, buckets)
+      declared: Option[Int],
+      batchId: Option[(String, Long)] = None): Unit = {
+    val s = open(spark, tablePath, keyCols, declared)
+    if (batchId.exists { case (w, id) => s.v.writers.get(w).exists(_ >= id) })
+      return
+    val batch = batch0.withColumn(BucketCol, bucketOf(keyCols, s.v.buckets))
     // inside foreachBatch the batch DataFrame is a plan, not rows: every
     // action re-executes the micro-batch's whole incremental plan (source
     // read, shuffles, stateful operators), and the MERGE reads the batch
@@ -113,26 +283,27 @@ object UpsertSink {
     // changes nothing (guide §1.2: measured 0.5-0.9 s per batch).
     batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // one pass answers which buckets the batch touches and which of
-      // them could EMPTY (only a bucket receiving a -D can; the common
-      // all-upsert batch skips that bookkeeping)
-      val info = batch.groupBy(col(BucketCol))
-        .agg(max(col(RowKind.kindCol) === lit(RowKind.Delete)))
-        .collect()
-      if (info.isEmpty) ()
-      else if (!isBucketed(spark, tablePath))
-        UpsertMaterialize(batch, keyCols)
-          .write.mode("overwrite").partitionBy(BucketCol).parquet(tablePath)
-      else rewrite(spark, tablePath, info.map(_.getInt(0)),
-        info.filter(_.getBoolean(1)).map(_.getInt(0)))(
-        merge(_, batch, keyCols))
+      val touched = batch.select(BucketCol).distinct().collect()
+        .map(_.getInt(0)).toSeq
+      if (touched.nonEmpty) {
+        val changes = batch.drop(BucketCol)
+        val rows =
+          if (touched.forall(s.v.files(_).isEmpty))
+            UpsertMaterialize(changes, keyCols)
+          else merge(scan(s, touched), changes, keyCols)
+        val next = commit(s, touched, s.v.buckets, rows,
+          s.v.writers ++ batchId)
+        val largest = next.v.files.map(_.map(_.size).sum).max
+        if (declared.isEmpty &&
+            largest > spark.sessionState.conf.filesMaxPartitionBytes)
+          relayout(next, 2 * next.v.buckets)
+      }
     } finally batch.unpersist(blocking = false)
   }
 
-  /** A batch `INSERT` of `rows` (the store's columns) into a bucketed
-    * store: each row replaces the stored row of its key; among rows of
-    * one key, the last the query yields wins. Flat files written beside
-    * the buckets would not be read. */
+  /** A batch `INSERT` of `rows` (the store's columns) into the store:
+    * each row replaces the stored row of its key; among rows of one key,
+    * the last the query yields wins. */
   def insert(
       spark: SparkSession,
       tablePath: String,
@@ -142,7 +313,7 @@ object UpsertSink {
     applyBatch(spark, tablePath,
       rows.withColumn(RowKind.kindCol, lit(RowKind.Insert))
         .withColumn(RowKind.seqCol, monotonically_increasing_id()),
-      keyCols, resolveBuckets(spark, tablePath, keyCols, declared))
+      keyCols, declared)
 
   /** SQL `DELETE` / `UPDATE` on the store: `f` rewrites the buckets that
     * hold a row where `cond` holds (one scan finds them: a condition is
@@ -152,9 +323,12 @@ object UpsertSink {
       spark: SparkSession,
       tablePath: String,
       cond: Column)(f: DataFrame => DataFrame): Unit = {
-    val touched = spark.read.parquet(tablePath).where(cond)
-      .select(col(BucketCol)).distinct().collect().map(_.getInt(0))
-    rewrite(spark, tablePath, touched, touched)(f)
+    val s = open(spark, tablePath, Nil, None)
+    val touched = scan(s, s.v.files.indices).where(cond)
+      .select(bucketOf(s.v.keys, s.v.buckets)).distinct().collect()
+      .map(_.getInt(0)).toSeq
+    if (touched.nonEmpty)
+      commit(s, touched, s.v.buckets, f(scan(s, touched)), s.v.writers)
   }
 
   /** The MERGE: stored rows whose key the batch does not change, plus the
@@ -172,33 +346,56 @@ object UpsertSink {
       .unionByName(UpsertMaterialize(batch, keyCols))
   }
 
-  /** The touched-bucket rewrite: `f` of the stored rows of the `touched`
-    * buckets replaces them by dynamic partition overwrite, so per-write
-    * I/O is proportional to the touched fraction of the store, not its
-    * size. A bucket `f` leaves no rows in is absent from the written data,
-    * and dynamic overwrite leaves it as it was: a bucket of `emptiable`
-    * whose file listing did not change across the write is removed — a
-    * METADATA diff, not a Spark job (the overwrite gives every bucket it
-    * writes fresh UUID part names). File count stays bounded: a touched
-    * bucket is rewritten wholly, so its files never exceed the writing
-    * tasks of one rewrite. */
-  private def rewrite(
-      spark: SparkSession,
-      tablePath: String,
+  /** The touched-bucket rewrite: `rows` become the whole content of the
+    * `touched` buckets of an `n`-bucket layout (all of them when `n`
+    * changes), as version `s.id + 1`. The rows are written to a staging
+    * dir and their files moved under fresh names into the `__bucket=N/`
+    * dirs; the version is committed; only then are the files it
+    * supersedes deleted, with the bucket dirs they leave empty. Per-write
+    * I/O is proportional to the touched fraction of the store, and a
+    * touched bucket's files never exceed the writing tasks of one
+    * rewrite. */
+  private def commit(
+      s: Store,
       touched: Seq[Int],
-      emptiable: Seq[Int])(f: DataFrame => DataFrame): Unit = {
-    if (touched.isEmpty) return
-    def files(b: Int): Set[String] =
-      FsOps.childNames(spark, s"$tablePath/$BucketCol=$b")
-        .filterNot(_.startsWith("_")).toSet
-    val before = emptiable.map(b => b -> files(b))
-    f(spark.read.parquet(tablePath).where(col(BucketCol).isin(touched: _*)))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(BucketCol).parquet(tablePath)
-    before.foreach { case (b, names) =>
-      if (files(b) == names)
-        FsOps.deleteRecursive(spark, s"$tablePath/$BucketCol=$b")
+      n: Int,
+      rows: DataFrame,
+      writers: Map[String, Long]): Store = {
+    val spark = s.spark
+    require(n == s.v.buckets || touched.size == n)
+    rows.withColumn(BucketCol, bucketOf(s.v.keys, n))
+      .write.mode("overwrite").partitionBy(BucketCol).parquet(s.staging)
+    val written = FsOps.list(spark, s.staging)
+      .filter(_.getPath.getName.startsWith(BucketCol)).map { d =>
+        val dir = d.getPath.getName
+        dir.stripPrefix(BucketCol + "=").toInt ->
+          FsOps.list(spark, d.getPath.toString).filter(isData).map { f =>
+            val file = s"$dir/${f.getPath.getName}"
+            FsOps.rename(spark, f.getPath.toString, s"${s.path}/$file")
+            StoreFile(file, f.getLen)
+          }
+      }.toMap
+    val next = Version(s.v.keys, rows.schema.json, (0 until n).map(b =>
+      if (touched.contains(b)) written.getOrElse(b, Nil) else s.v.files(b)),
+      writers)
+    crashPoint("written")
+    val log = s.log
+    if (!log.add(s.id + 1, next)) {
+      written.values.flatten
+        .foreach(f => FsOps.deleteRecursive(spark, s"${s.path}/${f.path}"))
+      throw taken(s)
     }
+    crashPoint("committed")
+    val live = next.live
+    def dir(f: String) = f.take(f.lastIndexOf('/') max 0)
+    val gone = s.v.live -- live
+    gone.foreach(f => FsOps.deleteRecursive(spark, s"${s.path}/$f"))
+    (gone.map(dir) -- live.map(dir) - "")
+      .foreach(d => FsOps.deleteRecursive(spark, s"${s.path}/$d"))
+    FsOps.deleteRecursive(spark, s.staging)
+    // recovery needs the latest version; the one before it stays for a
+    // reader that listed the log just before this commit
+    log.purge(s.id)
+    Store(spark, s.path, s.id + 1, next)
   }
 }

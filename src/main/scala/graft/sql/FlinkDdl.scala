@@ -506,11 +506,11 @@ object FlinkDdl {
     *    projection that reads every assignment and `cond` off the old row
     *    ([[assign]]).
     *  - `TRUNCATE TABLE t` — removes the table's files.
-    * A rewrite makes one storage choice: a hash-bucketed upsert store
-    * (the layout of every streaming PK sink) rewrites only the buckets
-    * holding a row `cond` selects, in place, through
-    * [[graft.changelog.UpsertSink.rewriteWhere]], so it keeps its layout;
-    * any other table is rewritten whole through [[rewriteSwap]].
+    * A rewrite makes one storage choice: an upsert store (what every
+    * streaming PK sink writes) rewrites only the buckets holding a row
+    * `cond` selects, as one commit of its version log, through
+    * [[graft.changelog.UpsertSink.rewriteWhere]]; any other table is
+    * rewritten whole through [[rewriteSwap]].
     */
   private def executeRowLevel(
       spark: SparkSession,
@@ -529,7 +529,7 @@ object FlinkDdl {
     def restFrom(i: Int): String = stmt.substring(toks(i).start)
     def rewrite(s: TableSpec, cond: Column, movesKey: Boolean)(
         f: DataFrame => DataFrame): Unit =
-      if (graft.changelog.UpsertSink.isBucketed(spark, s.path)) {
+      if (graft.changelog.UpsertSink.isStore(spark, s.path)) {
         // a row's bucket is the hash of its key: moving keys would
         // strand rows in the wrong bucket
         require(!movesKey, s"UPDATE ${s.name}: a bucketed upsert store " +
@@ -560,7 +560,7 @@ object FlinkDdl {
         // the partition columns only (metadata-scale), drop their dirs
         if (partKeys.nonEmpty &&
             condRefs.forall(r => partKeys.exists(_.equalsIgnoreCase(r))) &&
-            !graft.changelog.UpsertSink.isBucketed(spark, s.path)) {
+            !graft.changelog.UpsertSink.isStore(spark, s.path)) {
           spark.read.format(s.format).load(s.path)
             .select(partKeys.map(col): _*).distinct()
             .where(cond)
@@ -2108,6 +2108,11 @@ object FlinkDdl {
           StreamingCdc.withArrivalSeq(StreamingCdc.decodeBatch(
             spark.read.text(spec.path), fmt, physical)),
           spec.primaryKey)
+      case "parquet" if spec.primaryKey.nonEmpty &&
+          graft.changelog.UpsertSink.isStore(spark, spec.path) =>
+        // an upsert store reads its latest version's files, never a
+        // listing of its directory
+        graft.changelog.UpsertSink.readTable(spark, spec.path)
       case "parquet" | "orc" | "avro" =>
         // self-describing formats: trust the files, project to declaration
         // (avro resolves through graft.sources.AvroSource)
@@ -2533,7 +2538,7 @@ object FlinkDdl {
   private def startStreamSink(
       spec: TableSpec,
       aligned: DataFrame): StreamSink.Started = {
-    def upsert() = StreamSink.upsertTarget(aligned.sparkSession, spec,
+    def upsert() = StreamSink.upsertTarget(spec,
       "an updating query (e.g. an unwindowed aggregate)")
     (spec.connector, changelogMode(aligned)) match {
       case ("filesystem", "update") =>
@@ -2640,11 +2645,11 @@ object FlinkDdl {
     spec.connector match {
       case "filesystem"
           if (!overwrite || partitionOverwrite) &&
-            graft.changelog.UpsertSink.isBucketed(spark, spec.path) =>
+            graft.changelog.UpsertSink.isStore(spark, spec.path) =>
         // the upsert store a streaming INSERT left: the rows upsert into
-        // its buckets (flat files beside them would not be read); a whole
-        // OVERWRITE below replaces it with flat files, which the next
-        // streaming INSERT re-lays out
+        // it as one commit (files its log does not name are not read); a
+        // whole OVERWRITE below replaces it, log and all, with flat files,
+        // which the next write to the store commits as its version 0
         require(!overwrite, s"table ${spec.name}: INSERT OVERWRITE of " +
           "single partitions is not supported on an upsert store; " +
           "overwrite the whole table")

@@ -5,6 +5,7 @@ import graft.changelog.{FsOps, RowKind, UpsertSink}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Cast, ExprId, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
@@ -18,10 +19,10 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
   * changelog; this object owns:
   *
   *   - the checkpoint: `'sink.checkpoint-dir'`, else a fresh temp dir;
-  *   - the upsert target: a parquet filesystem sink with a PRIMARY KEY,
-  *     its bucket count resolved (and a flat store re-laid out) once,
-  *     by the first MERGE, and the per-batch [[UpsertSink.applyBatch]]
-  *     MERGE;
+  *   - the upsert target: a parquet filesystem sink with a PRIMARY KEY
+  *     and the per-batch [[UpsertSink.applyBatch]] MERGE, which commits
+  *     one version of the store's log per micro-batch and skips a
+  *     replayed batch its query already committed;
   *   - the replace target: crash-safe truncate-replace in the declared
   *     format;
   *   - the update-mode tier: MERGE on the PRIMARY KEY when it is exactly
@@ -56,16 +57,17 @@ private[sql] object StreamSink {
 
   /** The upsert target for the changes `producer` emits: the sink must be
     * a filesystem table with a PRIMARY KEY (the reference's error shape
-    * otherwise) stored as parquet (the MERGE reads the table back). The
-    * bucket count resolves once, on the first MERGE, so a tier that
-    * falls back to whole-result replace never re-lays out the store
-    * ([[startUpdating]]). Returns the
-    * per-batch MERGE of a changelog micro-batch (the sink's columns plus
-    * `__rowkind` and `__seq`). */
+    * otherwise) stored as parquet (the MERGE reads the table back).
+    * Returns the per-batch MERGE of a changelog micro-batch (the sink's
+    * columns plus `__rowkind` and `__seq`) and its batch id. The store
+    * records the last batch id of each query (its id, stable across
+    * restarts from one checkpoint), so a micro-batch replayed after a
+    * crash is a no-op. Nothing touches the store before the first MERGE,
+    * so a tier that falls back to whole-result replace leaves it as it
+    * is ([[startUpdating]]). */
   def upsertTarget(
-      spark: SparkSession,
       spec: FlinkDdl.TableSpec,
-      producer: String): DataFrame => Unit = {
+      producer: String): (DataFrame, Long) => Unit = {
     require(spec.connector == "filesystem",
       s"Table sink '${spec.name}': the changes produced by $producer " +
         s"need a filesystem sink, not '${spec.connector}'")
@@ -78,10 +80,12 @@ private[sql] object StreamSink {
         s"is parquet-backed; declared format '${spec.format}' cannot " +
         "store the merge state — declare 'format'='parquet'")
     val declared = FlinkDdl.bucketCount(spec)
-    lazy val buckets = UpsertSink.resolveBuckets(spark, spec.path,
-      spec.primaryKey, declared)
-    log => UpsertSink.applyBatch(
-      log.sparkSession, spec.path, log, spec.primaryKey, buckets)
+    (log, batchId) => {
+      val spark = log.sparkSession
+      UpsertSink.applyBatch(spark, spec.path, log, spec.primaryKey,
+        declared, Option(spark.sparkContext.getLocalProperty(
+          StreamExecution.QUERY_ID_KEY)).map(_ -> batchId))
+    }
   }
 
   /** Crash-safe truncate-replace of the table at `path` by `df`. */
@@ -115,7 +119,7 @@ private[sql] object StreamSink {
   def startUpdating(
       spec: FlinkDdl.TableSpec,
       df: DataFrame,
-      merge: DataFrame => Unit,
+      merge: (DataFrame, Long) => Unit,
       live: Column,
       hidden: Option[String]): Started = {
     val grouping = groupingPassThroughNames(df.queryExecution.analyzed) --
@@ -132,7 +136,7 @@ private[sql] object StreamSink {
         .withColumn(RowKind.seqCol, lit(batchId + 1L))
       val changes = hidden.fold(log)(log.drop)
       FlinkDdl.onMergeBatch.foreach(f => f(spec.name, changes.count()))
-      merge(changes)
+      merge(changes, batchId)
     }
   }
 

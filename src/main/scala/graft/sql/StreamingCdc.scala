@@ -158,15 +158,15 @@ object StreamingCdc {
       spec: FlinkDdl.TableSpec,
       compiled: DataFrame,
       sources: Seq[FlinkDdl.TableSpec] = Seq.empty): StreamSink.Started = {
-    val merge = StreamSink.upsertTarget(spark, spec, "a CDC-format source")
+    val merge = StreamSink.upsertTarget(spec, "a CDC-format source")
     val analyzed = compiled.queryExecution.analyzed
     // an append-mode changelog: each micro-batch, made a log by `toLog`,
     // MERGEs on the sink's PRIMARY KEY
     def startChangelog(changelog: DataFrame)(
         toLog: DataFrame => DataFrame): StreamSink.Started =
       StreamSink.startSink(spec, FlinkDdl.alignToSink(spec, changelog,
-        Seq(RowKind.kindCol, RowKind.seqCol)), "append") { (batch, _) =>
-        merge(toLog(batch))
+        Seq(RowKind.kindCol, RowKind.seqCol)), "append") { (batch, id) =>
+        merge(toLog(batch), id)
       }
 
     // Top-level aggregate (optionally under an attribute-only Project the
@@ -296,7 +296,7 @@ object StreamingCdc {
       agg: Aggregate,
       outer: Option[Project],
       sign: Attribute,
-      merge: DataFrame => Unit): StreamSink.Started = {
+      merge: (DataFrame, Long) => Unit): StreamSink.Started = {
     val rewritten = rewriteAggregate(agg, sign)
     val plan = outer match {
       case Some(p) =>

@@ -125,11 +125,11 @@ class ChangelogSpec extends SparkSpecBase {
       .toString + "/t"
     val ckpt = java.nio.file.Files.createTempDirectory("graft-upsert-ck-")
       .toString
-    val buckets = UpsertSink.resolveBuckets(spark, table, Seq("k"), None)
     val q = ChangelogNormalize(df, Seq("k"), "kind", "__seq").writeStream
       .outputMode("append").option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        UpsertSink.applyBatch(spark, table, batch, Seq("k"), buckets)
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+        UpsertSink.applyBatch(spark, table, batch, Seq("k"), None,
+          Some("q" -> id))
       }.start()
     try {
       val (a, b) = feed.splitAt(feed.length / 2)
@@ -1207,7 +1207,7 @@ class ChangelogSpec extends SparkSpecBase {
     // batch 1: keys 1..40 at v=k*1
     val b1 = (1L to 40L).map(k => (k, k * 1.0, 1L, RowKind.Insert))
       .toDF("k", "v", RowKind.seqCol, RowKind.kindCol)
-    UpsertSink.applyBatch(spark, table, b1, Seq("k"), buckets)
+    UpsertSink.applyBatch(spark, table, b1, Seq("k"), Some(buckets))
 
     // pick a key and record its bucket dir's file set; then update a key
     // from a DIFFERENT bucket and assert the first bucket's files are
@@ -1225,7 +1225,7 @@ class ChangelogSpec extends SparkSpecBase {
 
     val b2 = Seq((otherKey, 999.0, 2L, RowKind.UpdateAfter))
       .toDF("k", "v", RowKind.seqCol, RowKind.kindCol)
-    UpsertSink.applyBatch(spark, table, b2, Seq("k"), buckets)
+    UpsertSink.applyBatch(spark, table, b2, Seq("k"), Some(buckets))
     assert(filesOf(bucketOf(k1)) == before,
       "untouched bucket was rewritten")
 
@@ -1239,7 +1239,7 @@ class ChangelogSpec extends SparkSpecBase {
     val victims = (1L to 40L).filter(k => bucketOf(k) == victim)
     val b3 = victims.map(k => (k, 0.0, 3L, RowKind.Delete))
       .toDF("k", "v", RowKind.seqCol, RowKind.kindCol)
-    UpsertSink.applyBatch(spark, table, b3, Seq("k"), buckets)
+    UpsertSink.applyBatch(spark, table, b3, Seq("k"), Some(buckets))
     assert(!new java.io.File(table, s"__bucket=$victim").exists(),
       "emptied bucket dir not removed")
     val after = spark.read.parquet(table).select("k").as[Long].collect().toSet
@@ -1312,7 +1312,7 @@ class ChangelogSpec extends SparkSpecBase {
         val want = rows(UpsertMaterialize(
           batches.take(i + 1).map(batchDf).reduce(_ union _), Seq("k")))
         UpsertSink.applyBatch(
-          spark, t, batchDf(batches(i)), Seq("k"), buckets)
+          spark, t, batchDf(batches(i)), Seq("k"), Some(buckets))
         assert(rows(UpsertSink.readTable(spark, t)) == want,
           s"$tag store diverged from the oracle after batch ${i + 1}")
       }
@@ -1361,7 +1361,7 @@ class ChangelogSpec extends SparkSpecBase {
       .toString + "/t"
     val b0 = (1L to 30L).map(k => (k, k * 1.0, 1L, RowKind.Insert))
       .toDF("k", "v", RowKind.seqCol, RowKind.kindCol)
-    UpsertSink.applyBatch(spark, table, b0, Seq("k"), 4)
+    UpsertSink.applyBatch(spark, table, b0, Seq("k"), Some(4))
     def bucketOf(k: Long): Int =
       Seq(k).toDF("k").select(pmod(hash(col("k")), lit(4))).head().getInt(0)
     def filesOf(b: Int): Set[String] =
@@ -1406,6 +1406,186 @@ class ChangelogSpec extends SparkSpecBase {
     val dirs = Option(new java.io.File(table).listFiles())
       .getOrElse(Array.empty).filter(_.getName.startsWith("__bucket="))
     assert(dirs.isEmpty)
+  }
+
+  // the store's version log, seen from outside: committed version ids
+  private def versions(table: String): Seq[Long] =
+    Option(new java.io.File(table, "_graft_log").list()).getOrElse(Array())
+      .flatMap(_.toLongOption).sorted.toSeq
+
+  private def changes(rows: Seq[(Long, Double, Long, String)]) =
+    rows.toDF("k", "v", RowKind.seqCol, RowKind.kindCol)
+
+  private def keyed(df: org.apache.spark.sql.DataFrame) =
+    df.select("k", "v").as[(Long, Double)].collect().toSeq.sorted
+
+  test("UpsertSink failure points replay to the UpsertMaterialize oracle") {
+    val table = java.nio.file.Files.createTempDirectory("graft-crash-")
+      .toString + "/t"
+    val batches = Seq(
+      (1L to 30L).map(k => (k, k * 1.0, 1L, RowKind.Insert)),
+      (1L to 10L).map(k => (k, k * 2.0, 2L, RowKind.UpdateAfter)) ++
+        Seq((11L, 0.0, 3L, RowKind.Delete), (31L, 31.0, 4L, RowKind.Insert)),
+      (5L to 15L).map(k => (k, k * 3.0, 5L, RowKind.UpdateAfter)) :+
+        ((20L, 0.0, 6L, RowKind.Delete)),
+      Seq((1L, 0.0, 7L, RowKind.Delete), (40L, 40.0, 8L, RowKind.Insert)))
+    def oracle(n: Int) = keyed(UpsertMaterialize(
+      batches.take(n).map(changes).reduce(_ union _), Seq("k")))
+    def apply(i: Int, crash: Option[String] = None): Unit = {
+      val err = new IllegalStateException("crash")
+      UpsertSink.crashPoint = p => if (crash.contains(p)) throw err
+      try UpsertSink.applyBatch(spark, table, changes(batches(i)), Seq("k"),
+        Some(4), Some("w" -> i.toLong))
+      catch { case e: IllegalStateException if e eq err => }
+      finally UpsertSink.crashPoint = _ => ()
+    }
+    def plain() = keyed(spark.read.parquet(table))
+
+    apply(0)
+    assert(keyed(UpsertSink.readTable(spark, table)) == oracle(1))
+
+    // new files written, no version committed: readers see the last
+    // version; the replayed batch commits and sweeps the orphans
+    apply(1, crash = Some("written"))
+    assert(versions(table).last == 0L)
+    assert(keyed(UpsertSink.readTable(spark, table)) == oracle(1))
+    apply(1)
+    assert(keyed(UpsertSink.readTable(spark, table)) == oracle(2))
+    assert(plain() == oracle(2), "an uncommitted write's files survived")
+
+    // version committed, superseded files never deleted: readers see
+    // that version; the next commit removes the orphans
+    apply(2, crash = Some("committed"))
+    assert(keyed(UpsertSink.readTable(spark, table)) == oracle(3))
+    assert(plain() != oracle(3), "the crash left no superseded file")
+    apply(3)
+    assert(keyed(UpsertSink.readTable(spark, table)) == oracle(4))
+    assert(plain() == oracle(4), "superseded files survived a commit")
+
+    // a replayed batch id leaves the store unchanged and adds no version
+    val before = versions(table)
+    UpsertSink.applyBatch(spark, table,
+      changes(Seq((2L, -9.0, 9L, RowKind.UpdateAfter))), Seq("k"), Some(4),
+      Some("w" -> 3L))
+    assert(versions(table) == before)
+    assert(keyed(UpsertSink.readTable(spark, table)) == oracle(4))
+    // the same id from another writer is a new batch
+    UpsertSink.applyBatch(spark, table,
+      changes(Seq((2L, -9.0, 9L, RowKind.UpdateAfter))), Seq("k"), Some(4),
+      Some("other" -> 3L))
+    assert(keyed(UpsertSink.readTable(spark, table)).toMap.apply(2L) == -9.0)
+    assert(versions(table).last == before.last + 1)
+
+    // a commit whose version id another writer took in the meantime fails
+    // naming the store; the other writer's version stands
+    UpsertSink.crashPoint = {
+      case "written" =>
+        UpsertSink.crashPoint = _ => ()
+        UpsertSink.applyBatch(spark, table,
+          changes(Seq((4L, -4.0, 11L, RowKind.UpdateAfter))), Seq("k"),
+          Some(4))
+      case _ =>
+    }
+    val e = try intercept[IllegalStateException](UpsertSink.applyBatch(
+      spark, table, changes(Seq((3L, -3.0, 10L, RowKind.UpdateAfter))),
+      Seq("k"), Some(4)))
+    finally UpsertSink.crashPoint = _ => ()
+    assert(e.getMessage.contains(table) &&
+      e.getMessage.contains("another writer"), e.getMessage)
+    val raced = keyed(UpsertSink.readTable(spark, table))
+    assert(raced.toMap.apply(4L) == -4.0 && raced.toMap.apply(3L) != -3.0)
+    assert(plain() == raced)
+  }
+
+  test("UpsertSink: a changed 'distribution-buckets' re-lays the store " +
+      "out instead of duplicating keys") {
+    val table = java.nio.file.Files.createTempDirectory("graft-relayout-")
+      .toString + "/t"
+    val first = (1L to 20L).map(k => (k, k * 1.0, 1L, RowKind.Insert))
+    val second = (1L to 20L).map(k => (k, k * 2.0, 2L, RowKind.UpdateAfter))
+    UpsertSink.applyBatch(spark, table, changes(first), Seq("k"), Some(8))
+    UpsertSink.applyBatch(spark, table, changes(second), Seq("k"), Some(4))
+    val got = keyed(UpsertSink.readTable(spark, table))
+    assert(got.size == 20, s"keys duplicated: $got")
+    assert(got == keyed(UpsertMaterialize(
+      changes(first).union(changes(second)), Seq("k"))))
+    assert(UpsertSink.resolveBuckets(spark, table, Seq("k"), None) == 4)
+    assert(new java.io.File(table).list()
+      .filter(_.startsWith("__bucket=")).forall(_.stripPrefix(
+        "__bucket=").toInt < 4), "a bucket dir of the old layout survived")
+  }
+
+  test("UpsertSink: an undeclared store starts at one bucket and splits " +
+      "past spark.sql.files.maxPartitionBytes") {
+    val table = java.nio.file.Files.createTempDirectory("graft-split-")
+      .toString + "/t"
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    val batches = (0 until 4).map(i => (1L to 400L).filter(_ % 4 == i)
+      .map(k => (k, k * 1.5 + i, i.toLong, RowKind.Insert)) ++
+      (1L to 50L).map(k => (k, k * 7.0 + i, i + 100L, RowKind.UpdateAfter)))
+    spark.conf.set(key, "4096")
+    try {
+      val counts = batches.indices.map { i =>
+        UpsertSink.applyBatch(spark, table, changes(batches(i)), Seq("k"),
+          None)
+        val got = keyed(UpsertSink.readTable(spark, table))
+        assert(got.map(_._1).distinct.size == got.size,
+          s"a key appears twice after batch ${i + 1}")
+        assert(got == keyed(UpsertMaterialize(
+          batches.take(i + 1).map(changes).reduce(_ union _), Seq("k"))))
+        UpsertSink.resolveBuckets(spark, table, Seq("k"), None)
+      }
+      assert(counts.head >= 1 && counts.last > 1 && counts == counts.sorted,
+        s"bucket counts per batch: $counts")
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val fresh = java.nio.file.Files.createTempDirectory("graft-one-")
+      .toString + "/t"
+    UpsertSink.applyBatch(spark, fresh, changes(batches.head), Seq("k"), None)
+    assert(UpsertSink.resolveBuckets(spark, fresh, Seq("k"), None) == 1)
+    assert(new java.io.File(fresh).list().filter(_.startsWith("__bucket"))
+      .toSeq == Seq("__bucket=0"))
+  }
+
+  test("UpsertSink: a reader polling during MERGEs sees whole versions") {
+    val table = java.nio.file.Files.createTempDirectory("graft-poll-")
+      .toString + "/t"
+    val keys = 1L to 40L
+    def round(i: Int) = changes(keys.map(k =>
+      (k, i.toDouble, i.toLong, RowKind.UpdateAfter)))
+    UpsertSink.applyBatch(spark, table, round(0), Seq("k"), Some(4))
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val good = new java.util.concurrent.atomic.AtomicInteger()
+    val missing = new java.util.concurrent.atomic.AtomicInteger()
+    val bad = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val reader = new Thread(() => while (!stop.get()) {
+      try {
+        val got = keyed(UpsertSink.readTable(spark, table))
+        if (got.map(_._1) == keys && got.map(_._2).distinct.size == 1)
+          good.incrementAndGet()
+        else bad.add(s"partial store: $got")
+      } catch {
+        // the version this read took lost a superseded file to the next
+        // commit (a known race): Spark reports FILE_NOT_EXIST, or, when
+        // the file goes mid-read, NO_HINT over a NoSuchFileException
+        case e: Exception if Iterator.iterate[Throwable](e)(_.getCause)
+            .takeWhile(_ != null).exists(c =>
+              c.isInstanceOf[java.io.FileNotFoundException] ||
+                c.isInstanceOf[java.nio.file.NoSuchFileException] ||
+                String.valueOf(c.getMessage).contains("FILE_NOT_EXIST")) =>
+          missing.incrementAndGet()
+        case e: Exception => bad.add(e.toString)
+      }
+    })
+    reader.start()
+    try (1 to 24).foreach(i =>
+      UpsertSink.applyBatch(spark, table, round(i), Seq("k"), Some(4)))
+    finally { stop.set(true); reader.join() }
+    assert(bad.isEmpty, bad.toArray.take(3).mkString("\n"))
+    assert(good.get() > 0, s"no read succeeded (${missing.get()} missed)")
+    info(s"${good.get()} whole reads, ${missing.get()} lost a file")
+    assert(keyed(UpsertSink.readTable(spark, table)).map(_._2).toSet ==
+      Set(24.0))
   }
 
   test("RetractableAgg: retractions exactly cancel accumulations") {

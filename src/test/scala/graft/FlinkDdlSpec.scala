@@ -2180,16 +2180,15 @@ class FlinkDdlSpec extends SparkSpecBase {
     } finally qs.foreach(_.stop())
   }
 
-  test("runStreaming: a PK sink without 'distribution-buckets' defaults " +
-      "to the bucketed layout; a batch rewrites only touched buckets") {
+  test("runStreaming: a PK sink with 'distribution-buckets' lays out that " +
+      "many buckets; a batch rewrites only touched buckets") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col => fcol, hash, pmod, lit => flit}
     val dir = tmpDir()
     new java.io.File(s"$dir/src").mkdirs()
-    // VERDICT r18 task 5: the whole-table rewrite was the at-scale
-    // default failure shape — new upsert stores now lay out hash-bucketed
-    // (64) unless declared otherwise, so per-batch MERGE I/O stays
-    // proportional to the touched buckets from day one.
+    // a store sized by its declared count keeps per-batch MERGE I/O
+    // proportional to the touched buckets (an undeclared store starts at
+    // one bucket and splits by size: ChangelogSpec)
     val qs = FlinkDdl.runStreaming(spark,
       s"""CREATE TABLE src (k BIGINT, v BIGINT)
          |  WITH ('connector'='filesystem', 'path'='$dir/src',
@@ -2197,7 +2196,8 @@ class FlinkDdlSpec extends SparkSpecBase {
          |CREATE TABLE agg (k BIGINT, n BIGINT,
          |  PRIMARY KEY (k) NOT ENFORCED)
          |  WITH ('connector'='filesystem', 'path'='$dir/snk',
-         |        'format'='parquet', 'sink.checkpoint-dir'='$dir/ck');
+         |        'format'='parquet', 'sink.checkpoint-dir'='$dir/ck',
+         |        'distribution-buckets'='64');
          |INSERT INTO agg
          |SELECT k, COUNT(*) AS n FROM src GROUP BY k""".stripMargin)
     def bucketOf(k: Long): Int =
@@ -2216,7 +2216,15 @@ class FlinkDdlSpec extends SparkSpecBase {
       arrive((k1, 1L), (k2, 1L))
       assert(new java.io.File(s"$dir/snk").list()
         .exists(_.startsWith("__bucket=")),
-        "a new default-configured PK sink must lay out bucketed")
+        "a PK sink must lay out bucketed")
+      assert(graft.changelog.UpsertSink.resolveBuckets(spark, s"$dir/snk",
+        Seq("k"), None) == 64, "the log must record the declared count")
+      // the version records the query as a writer, so a replayed
+      // micro-batch of it is a no-op
+      val latest = new java.io.File(s"$dir/snk/_graft_log").listFiles()
+        .filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toLong)
+      val entry = new String(java.nio.file.Files.readAllBytes(latest.toPath))
+      assert(entry.contains(s"\"${qs.head.id}\":"), entry)
       val before = filesOf(bucketOf(k1))
       assert(before.nonEmpty)
       // second batch touches only k2's bucket: k1's bucket dir must keep
@@ -2269,7 +2277,7 @@ class FlinkDdlSpec extends SparkSpecBase {
            |DELETE FROM by_k WHERE k = 'b';
            |UPDATE by_k SET sv = -1 WHERE k = 'a'""".stripMargin)
       assert(state() == Map("a" -> ((1L, -1L)), "c" -> ((1L, 3L))))
-      assert(graft.changelog.UpsertSink.isBucketed(spark, s"$dir/snk") &&
+      assert(graft.changelog.UpsertSink.isStore(spark, s"$dir/snk") &&
         !new java.io.File(s"$dir/snk").list().exists(_.endsWith(".parquet")),
         "row-level DML must keep the bucketed layout")
       // the next batch touches only c: a must survive it
@@ -2295,12 +2303,12 @@ class FlinkDdlSpec extends SparkSpecBase {
         .stripMargin
     def state(): Map[Long, Long] = UpsertSink.readTable(spark, s"$dir/snk")
       .select("k", "n").as[(Long, Long)].collect().toMap
-    def bucketed(): Boolean = UpsertSink.isBucketed(spark, s"$dir/snk") &&
+    def bucketed(): Boolean = UpsertSink.isStore(spark, s"$dir/snk") &&
       !new java.io.File(s"$dir/snk").list().exists(_.endsWith(".parquet"))
     // a batch INSERT fills the PRIMARY KEY table as flat parquet
     FlinkDdl.runScript(spark,
       s"$sink;\nINSERT INTO agg VALUES (1, 10), (2, 20), (3, 30)")
-    assert(!UpsertSink.isBucketed(spark, s"$dir/snk"))
+    assert(!UpsertSink.isStore(spark, s"$dir/snk"))
     val qs = FlinkDdl.runStreaming(spark,
       s"""CREATE TABLE src (k BIGINT, v BIGINT)
          |  WITH ('connector'='filesystem', 'path'='$dir/src',
@@ -2352,7 +2360,7 @@ class FlinkDdlSpec extends SparkSpecBase {
       s"$ddl;\nINSERT OVERWRITE t PARTITION (tag='a') VALUES (3, 30)"))
     assert(e.getMessage.contains("single partitions"), e.getMessage)
     assert(state() == Set((1L, 10L, "a"), (2L, 20L, "b")))
-    assert(UpsertSink.isBucketed(spark, s"$dir/t"))
+    assert(UpsertSink.isStore(spark, s"$dir/t"))
   }
 
   test("runStreaming: a PK sink that falls back to whole-result replace " +
@@ -2378,12 +2386,12 @@ class FlinkDdlSpec extends SparkSpecBase {
          |INSERT INTO agg
          |SELECT k, COUNT(*) AS n FROM src GROUP BY k""".stripMargin)
     try {
-      assert(!UpsertSink.isBucketed(spark, s"$dir/snk"),
+      assert(!UpsertSink.isStore(spark, s"$dir/snk"),
         "query start must not re-lay out a store it will replace")
       Seq((2L, 0L), (2L, 1L)).toDF("k", "v")
         .write.mode("append").parquet(s"$dir/src")
       qs.head.processAllAvailable()
-      assert(!UpsertSink.isBucketed(spark, s"$dir/snk"))
+      assert(!UpsertSink.isStore(spark, s"$dir/snk"))
       assert(spark.read.parquet(s"$dir/snk").select("k", "n")
         .as[(Long, Long)].collect().toSeq == Seq((2L, 2L)))
     } finally qs.foreach(_.stop())
@@ -2573,11 +2581,11 @@ class FlinkDdlSpec extends SparkSpecBase {
       rows.toDF("k", "v", "w")
         .withColumn(RowKind.kindCol, lit(RowKind.Insert))
         .withColumn(RowKind.seqCol, lit(1L)),
-      Seq("k"), 4)
+      Seq("k"), Some(4))
     FlinkDdl.runScript(spark,
       s"""${table("bkt", ", PRIMARY KEY (k) NOT ENFORCED")};
          |${update.format("bkt")}""".stripMargin)
-    assert(UpsertSink.isBucketed(spark, s"$dir/bkt"))
+    assert(UpsertSink.isStore(spark, s"$dir/bkt"))
     val bkt = UpsertSink.readTable(spark, s"$dir/bkt")
       .select("k", "v", "w").as[(Long, Long, Long)].collect().toSet
     assert(bkt == want, s"bucketed: $bkt")

@@ -16,6 +16,25 @@ class RobustnessSpec extends SparkSpecBase {
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft_rb").toString
 
+  test("a bad tuning value fails with a message naming its variable") {
+    assert(GraftSession.parseStreamPartitions(None) == 8)
+    assert(GraftSession.parseStreamPartitions(Some(" 16 ")) == 16)
+    for (bad <- Seq("x", "0", "-2", "1.5", "")) {
+      val e = intercept[IllegalArgumentException](
+        GraftSession.parseStreamPartitions(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_STREAM_PARTITIONS") &&
+        e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+    assert(GraftSession.parseConf(None) == Map.empty)
+    assert(GraftSession.parseConf(Some(" a.b = 1 ;; c=x=y; ")) ==
+      Map("a.b" -> "1", "c" -> "x=y"))
+    for (bad <- Seq("a.b=1;oops", "=1")) {
+      val e = intercept[IllegalArgumentException](
+        GraftSession.parseConf(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CONF"), e.getMessage)
+    }
+  }
+
   test("string literals carrying ';' and keywords pass through intact") {
     val r = FlinkDdl.run(spark,
       "SELECT 'a;b' AS s, 'END' AS e, 'CASE' AS c FROM g LIMIT 1",

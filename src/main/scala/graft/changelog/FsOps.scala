@@ -74,11 +74,14 @@ private[graft] object FsOps {
     deleteRecursive(spark, old)
   }
 
+  /** A name a parquet read sees (Spark's rule: `_`/`.`-prefixed names
+    * are metadata, `k=v` partition dirs are data). */
+  def visible(name: String): Boolean =
+    !name.startsWith(".") && (!name.startsWith("_") || name.contains("="))
+
   /** Where the state [[replace]] last committed to `dest` lives: `dest`,
     * else `dest.old` (a crash between the two renames); None when neither
-    * holds data files (Spark's rule: `_`/`.`-prefixed names are metadata,
-    * `k=v` partition dirs are data). */
+    * holds data files. */
   def current(spark: SparkSession, dest: String): Option[String] =
-    Seq(dest, dest + ".old").find(p => childNames(spark, p).exists(n =>
-      !n.startsWith(".") && (!n.startsWith("_") || n.contains("="))))
+    Seq(dest, dest + ".old").find(p => childNames(spark, p).exists(visible))
 }

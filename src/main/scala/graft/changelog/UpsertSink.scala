@@ -53,21 +53,31 @@ import org.json4s.jackson.Serialization
   *     condition selects.
   *
   * Bucket count: the log records it, so it follows the store. A store
-  * whose sink declares no `'distribution-buckets'` starts at 1 bucket and
-  * doubles, by one re-layout commit, when its largest bucket exceeds
-  * `spark.sql.files.maxPartitionBytes` (one read task's worth). A declared
-  * count that differs from the recorded one is an explicit re-layout
-  * commit. A path with no log (flat parquet, or a store written before the
-  * log) is read once and committed as version 0.
+  * whose sink declares no `'distribution-buckets'` starts at 1 bucket. A
+  * rewrite of t of its n buckets costs about t × (store bytes / n + a
+  * fixed cost per bucket), the fixed cost being its files, tasks and
+  * moves, priced as Spark prices a file: `spark.sql.files.openCostInBytes`
+  * bytes. Once a bucket holds more than that, each batch is weighed
+  * against the finer count that would bring every bucket back under it
+  * (the least power-of-two multiple): when the buckets the batch touches
+  * at that count cost less, that write re-lays the store out into it. A
+  * sparse batch (few keys, few buckets touched) so gets buckets of about
+  * the fixed cost's size, and a dense one (a key in most buckets, which
+  * rewrites the whole store at any count) keeps the count, since more
+  * buckets would only add fixed costs. Measured on stores of 2–500 MB
+  * in `plans/r06/README.md`. A declared count that differs from the
+  * recorded one is an explicit re-layout commit. A path with no log (flat
+  * parquet, or a store written before the log) is read once and committed
+  * as version 0.
   *
   * Crash safety, the idempotent-sink argument of Structured Streaming: a
   * crash before the commit leaves only files no version names (readers
   * never see them; the next write sweeps them away), a crash after it
   * leaves superseded files that the next write deletes, and a replayed
-  * micro-batch whose id its writer already committed is a no-op. Readers
-  * ([[readTable]]) take the latest version's files; a reader that took a
-  * version just before a commit can find a superseded file gone
-  * (`FILE_NOT_EXIST`) and must retry.
+  * micro-batch whose id its writer already committed is a no-op. The log
+  * keeps only the latest version. Readers ([[readTable]]) take its files;
+  * a reader that took a version just before a commit can find its entry
+  * or a superseded file gone (`FILE_NOT_EXIST`) and must retry.
   */
 object UpsertSink {
 
@@ -198,24 +208,34 @@ object UpsertSink {
   }
 
   /** A write that died before its clean-up left its staging dir: delete
-    * every file in the bucket dirs that the version does not name (files
-    * of a write never committed, or superseded files not yet deleted). A
+    * every file a plain parquet read of the store would see that the
+    * version does not name (files of a write never committed, or
+    * superseded files not yet deleted, at the root, in `k=v/` dirs of a
+    * migrated table or in bucket dirs), with the dirs that hold no live
+    * file. With no version committed, the path's own pre-log files are its
+    * data, so only the bucket dirs the crashed write made are swept. A
     * recovery step, so it may list the store. */
   private def recover(s: Store): Unit = {
     val live = s.v.live
-    FsOps.list(s.spark, s.path)
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith(BucketCol))
-      .foreach { d =>
-        FsOps.list(s.spark, d.getPath.toString).filter(isData)
-          .filterNot(f => live(s"${d.getPath.getName}/${f.getPath.getName}"))
-          .foreach(f => FsOps.deleteRecursive(s.spark, f.getPath.toString))
+    val liveDirs = live.flatMap(_.split('/').inits.drop(1)
+      .map(_.mkString("/")).filter(_.nonEmpty))
+    def sweep(dir: String, rel: String, top: FileStatus => Boolean): Unit =
+      FsOps.list(s.spark, dir).filter(visible).filter(top).foreach { f =>
+        val p = rel + f.getPath.getName
+        if (f.isDirectory && liveDirs(p))
+          sweep(f.getPath.toString, p + "/", _ => true)
+        else if (f.isDirectory || !live(p))
+          FsOps.deleteRecursive(s.spark, f.getPath.toString)
       }
+    sweep(s.path, "", f => s.id >= 0 ||
+      (f.isDirectory && f.getPath.getName.startsWith(BucketCol + "=")))
     FsOps.deleteRecursive(s.spark, s.staging)
   }
 
-  private def isData(f: FileStatus): Boolean =
-    f.isFile && !f.getPath.getName.startsWith("_") &&
-      !f.getPath.getName.startsWith(".")
+  private def visible(f: FileStatus): Boolean =
+    FsOps.visible(f.getPath.getName)
+
+  private def isData(f: FileStatus): Boolean = f.isFile && visible(f)
 
   /** A path with no log: its files are read once and committed as
     * version 0 — as they lie, in one bucket (flat parquet, or a store
@@ -250,15 +270,6 @@ object UpsertSink {
     if (s.v.live.isEmpty) s.copy(v = s.v.copy(files = Seq.fill(n)(Nil)))
     else commit(s, 0 until n, n, scan(s, s.v.files.indices), s.v.writers)
 
-  /** Open the store at `tablePath` keyed on `keyCols` ([[open]]) and
-    * return its bucket count. */
-  def resolveBuckets(
-      spark: SparkSession,
-      tablePath: String,
-      keyCols: Seq[String],
-      declared: Option[Int]): Int =
-    open(spark, tablePath, keyCols, declared).v.buckets
-
   /** Apply one changelog micro-batch to the store: only the buckets the
     * batch touches are read and rewritten. `declared` is the sink's
     * `'distribution-buckets'`; `batchId` (writer, id) makes a replay of a
@@ -273,7 +284,13 @@ object UpsertSink {
     val s = open(spark, tablePath, keyCols, declared)
     if (batchId.exists { case (w, id) => s.v.writers.get(w).exists(_ >= id) })
       return
-    val batch = batch0.withColumn(BucketCol, bucketOf(keyCols, s.v.buckets))
+    val n = s.v.buckets
+    val perFile = spark.sessionState.conf.filesOpenCostInBytes
+    // bucket the batch at the count an undeclared store would split to
+    // (the bucket-count rule above); n divides it, so the same ids mod n
+    // are the batch's buckets at n
+    val fine = if (declared.isEmpty) splitCount(s, perFile) else n
+    val batch = batch0.withColumn(BucketCol, bucketOf(keyCols, fine))
     // inside foreachBatch the batch DataFrame is a plan, not rows: every
     // action re-executes the micro-batch's whole incremental plan (source
     // read, shuffles, stateful operators), and the MERGE reads the batch
@@ -283,22 +300,32 @@ object UpsertSink {
     // changes nothing (guide §1.2: measured 0.5-0.9 s per batch).
     batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val touched = batch.select(BucketCol).distinct().collect()
+      val hit = batch.select(BucketCol).distinct().collect()
         .map(_.getInt(0)).toSeq
+      val touched = hit.map(_ % n).distinct
       if (touched.nonEmpty) {
         val changes = batch.drop(BucketCol)
-        val rows =
+        val writers = s.v.writers ++ batchId
+        val bytes = s.v.files.flatten.map(_.size).sum.toDouble
+        def cost(t: Int, m: Int) = t * (bytes / m + perFile)
+        if (fine > n && cost(hit.size, fine) < cost(touched.size, n))
+          commit(s, 0 until fine, fine,
+            merge(scan(s, s.v.files.indices), changes, keyCols), writers)
+        else commit(s, touched, n,
           if (touched.forall(s.v.files(_).isEmpty))
             UpsertMaterialize(changes, keyCols)
-          else merge(scan(s, touched), changes, keyCols)
-        val next = commit(s, touched, s.v.buckets, rows,
-          s.v.writers ++ batchId)
-        val largest = next.v.files.map(_.map(_.size).sum).max
-        if (declared.isEmpty &&
-            largest > spark.sessionState.conf.filesMaxPartitionBytes)
-          relayout(next, 2 * next.v.buckets)
+          else merge(scan(s, touched), changes, keyCols), writers)
       }
     } finally batch.unpersist(blocking = false)
+  }
+
+  /** The least power-of-two multiple of the store's bucket count that
+    * brings its largest bucket under `most` bytes. */
+  private def splitCount(s: Store, most: Long): Int = {
+    val largest = s.v.files.map(_.map(_.size).sum).max
+    if (largest <= most) s.v.buckets
+    else s.v.buckets * 2 *
+      java.lang.Long.highestOneBit((largest + most - 1) / most - 1).toInt
   }
 
   /** A batch `INSERT` of `rows` (the store's columns) into the store:
@@ -363,7 +390,10 @@ object UpsertSink {
       writers: Map[String, Long]): Store = {
     val spark = s.spark
     require(n == s.v.buckets || touched.size == n)
-    rows.withColumn(BucketCol, bucketOf(s.v.keys, n))
+    val out = rows.withColumn(BucketCol, bucketOf(s.v.keys, n))
+    // a re-layout rewrites every bucket: cluster its rows by bucket, so
+    // each bucket gets one file, not one per writing task
+    (if (n == s.v.buckets) out else out.repartition(col(BucketCol)))
       .write.mode("overwrite").partitionBy(BucketCol).parquet(s.staging)
     val written = FsOps.list(spark, s.staging)
       .filter(_.getPath.getName.startsWith(BucketCol)).map { d =>
@@ -393,9 +423,9 @@ object UpsertSink {
     (gone.map(dir) -- live.map(dir) - "")
       .foreach(d => FsOps.deleteRecursive(spark, s"${s.path}/$d"))
     FsOps.deleteRecursive(spark, s.staging)
-    // recovery needs the latest version; the one before it stays for a
-    // reader that listed the log just before this commit
-    log.purge(s.id)
+    // recovery needs only the latest version: the files of the one before
+    // it are gone, so its entry can serve no reader
+    log.purge(s.id + 1)
     Store(spark, s.path, s.id + 1, next)
   }
 }

@@ -1408,10 +1408,7 @@ class ChangelogSpec extends SparkSpecBase {
     assert(dirs.isEmpty)
   }
 
-  // the store's version log, seen from outside: committed version ids
-  private def versions(table: String): Seq[Long] =
-    Option(new java.io.File(table, "_graft_log").list()).getOrElse(Array())
-      .flatMap(_.toLongOption).sorted.toSeq
+  import StoreLog.versions
 
   private def changes(rows: Seq[(Long, Double, Long, String)]) =
     rows.toDF("k", "v", RowKind.seqCol, RowKind.kindCol)
@@ -1497,6 +1494,48 @@ class ChangelogSpec extends SparkSpecBase {
     assert(plain() == raced)
   }
 
+  test("UpsertSink: a crash in the first write to a flat or partitioned " +
+      "path leaves a plain read exact after the next commit") {
+    def rows(ks: Seq[Long], v: Double, seq: Long, kind: String) =
+      ks.map(k => (k, k * v, k % 3, seq, kind))
+        .toDF("k", "v", "p", RowKind.seqCol, RowKind.kindCol)
+    val initial = rows(1L to 30L, 1.0, 0L, RowKind.Insert)
+    val batches = Seq(rows(1L to 10L, 2.0, 1L, RowKind.UpdateAfter),
+      rows(5L to 15L, 3.0, 2L, RowKind.UpdateAfter)
+        .union(rows(Seq(20L), 0.0, 3L, RowKind.Delete)))
+    def full(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "v", "p").as[(Long, Double, Long)].collect().toSeq.sorted
+    val oracle = full(UpsertMaterialize(
+      (initial +: batches).reduce(_ union _), Seq("k")))
+    for (partitioned <- Seq(false, true); point <- Seq("written", "committed")) {
+      val table = java.nio.file.Files.createTempDirectory("graft-migrate-")
+        .toString + "/t"
+      val w = initial.drop(RowKind.seqCol, RowKind.kindCol).write
+      (if (partitioned) w.partitionBy("p") else w).parquet(table)
+      def apply(i: Int, crash: Option[String] = None): Unit = {
+        val err = new IllegalStateException("crash")
+        UpsertSink.crashPoint = p => if (crash.contains(p)) throw err
+        try UpsertSink.applyBatch(spark, table, batches(i), Seq("k"), None,
+          Some("w" -> i.toLong))
+        catch { case e: IllegalStateException if e eq err => }
+        finally UpsertSink.crashPoint = _ => ()
+      }
+      val what = s"partitioned=$partitioned, crash at $point"
+      // the first write commits the path as version 0 (a partitioned
+      // table's by a rewrite into buckets) and then MERGEs: crash in it,
+      // replay it, and write once more
+      apply(0, crash = Some(point))
+      apply(0)
+      apply(1)
+      assert(full(UpsertSink.readTable(spark, table)) == oracle, what)
+      assert(full(spark.read.parquet(table)) == oracle,
+        s"$what: a plain read sees a file no version names")
+      assert(new java.io.File(table).list().forall(n =>
+        n.startsWith("_") || n.startsWith(".") || n.startsWith("__bucket=")),
+        s"$what: ${new java.io.File(table).list().toSeq}")
+    }
+  }
+
   test("UpsertSink: a changed 'distribution-buckets' re-lays the store " +
       "out instead of duplicating keys") {
     val table = java.nio.file.Files.createTempDirectory("graft-relayout-")
@@ -1509,23 +1548,27 @@ class ChangelogSpec extends SparkSpecBase {
     assert(got.size == 20, s"keys duplicated: $got")
     assert(got == keyed(UpsertMaterialize(
       changes(first).union(changes(second)), Seq("k"))))
-    assert(UpsertSink.resolveBuckets(spark, table, Seq("k"), None) == 4)
+    assert(StoreLog.buckets(table) == 4)
     assert(new java.io.File(table).list()
       .filter(_.startsWith("__bucket=")).forall(_.stripPrefix(
         "__bucket=").toInt < 4), "a bucket dir of the old layout survived")
   }
 
   test("UpsertSink: an undeclared store starts at one bucket and splits " +
-      "past spark.sql.files.maxPartitionBytes") {
-    val table = java.nio.file.Files.createTempDirectory("graft-split-")
+      "past spark.sql.files.openCostInBytes for sparse batches only") {
+    def dir(name: String) = java.nio.file.Files.createTempDirectory(name)
       .toString + "/t"
-    val key = "spark.sql.files.maxPartitionBytes"
+    val key = "spark.sql.files.openCostInBytes"
     val prev = spark.conf.getOption(key)
-    val batches = (0 until 4).map(i => (1L to 400L).filter(_ % 4 == i)
-      .map(k => (k, k * 1.5 + i, i.toLong, RowKind.Insert)) ++
-      (1L to 50L).map(k => (k, k * 7.0 + i, i + 100L, RowKind.UpdateAfter)))
-    spark.conf.set(key, "4096")
+    val fill = (1L to 400L).map(k => (k, k * 1.5, 0L, RowKind.Insert))
+    // sparse: 3 keys each, one of them new; dense: every key
+    val sparse = (1 to 4).map(i => Seq(i.toLong, 100L + i, 400L + i)
+      .map(k => (k, k * 7.0 + i, i.toLong, RowKind.UpdateAfter)))
+    val dense = (1L to 400L).map(k => (k, k * 3.0, 9L, RowKind.UpdateAfter))
+    spark.conf.set(key, "1024")
     try {
+      val table = dir("graft-split-")
+      val batches = fill +: sparse
       val counts = batches.indices.map { i =>
         UpsertSink.applyBatch(spark, table, changes(batches(i)), Seq("k"),
           None)
@@ -1534,15 +1577,32 @@ class ChangelogSpec extends SparkSpecBase {
           s"a key appears twice after batch ${i + 1}")
         assert(got == keyed(UpsertMaterialize(
           batches.take(i + 1).map(changes).reduce(_ union _), Seq("k"))))
-        UpsertSink.resolveBuckets(spark, table, Seq("k"), None)
+        if (i == 1) {
+          // the split rewrote every bucket, clustered: one file each
+          val layout = new java.io.File(table).listFiles()
+            .filter(_.getName.startsWith("__bucket="))
+            .map(_.list().count(_.endsWith(".parquet")))
+          assert(layout.length == StoreLog.buckets(table) &&
+            layout.forall(_ == 1), layout.toSeq)
+        }
+        StoreLog.buckets(table)
       }
-      assert(counts.head >= 1 && counts.last > 1 && counts == counts.sorted,
+      assert(counts.head == 1 && counts(1) > 1 && counts == counts.sorted,
         s"bucket counts per batch: $counts")
+
+      // a batch that touches every key rewrites the whole store at any
+      // count, so more buckets would only add files: the store stays put
+      val whole = dir("graft-dense-")
+      UpsertSink.applyBatch(spark, whole, changes(fill), Seq("k"), None)
+      UpsertSink.applyBatch(spark, whole, changes(dense), Seq("k"), None)
+      assert(StoreLog.buckets(whole) == 1)
+      assert(keyed(UpsertSink.readTable(spark, whole)) ==
+        keyed(UpsertMaterialize(changes(fill).union(changes(dense)),
+          Seq("k"))))
     } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    val fresh = java.nio.file.Files.createTempDirectory("graft-one-")
-      .toString + "/t"
-    UpsertSink.applyBatch(spark, fresh, changes(batches.head), Seq("k"), None)
-    assert(UpsertSink.resolveBuckets(spark, fresh, Seq("k"), None) == 1)
+    val fresh = dir("graft-one-")
+    UpsertSink.applyBatch(spark, fresh, changes(fill), Seq("k"), None)
+    assert(StoreLog.buckets(fresh) == 1)
     assert(new java.io.File(fresh).list().filter(_.startsWith("__bucket"))
       .toSeq == Seq("__bucket=0"))
   }
@@ -1935,5 +1995,31 @@ class ChangelogSpec extends SparkSpecBase {
       .where(col(RowKind.kindCol) =!= RowKind.Delete)
       .select("lk").as[Long].collect().toSet
     assert(lks == Set(1L), s"unexpected emitted keys: $lks")
+  }
+}
+
+/** A store's version log seen from outside: its `_graft_log/` entries
+  * (a "v1" line, then the version as JSON). */
+object StoreLog {
+  private def entries(table: String): Seq[java.io.File] =
+    Option(new java.io.File(table, "_graft_log").listFiles()).toSeq.flatten
+      .filter(_.getName.toLongOption.nonEmpty).sortBy(_.getName.toLong)
+
+  /** Ids of the versions the log keeps. */
+  def versions(table: String): Seq[Long] =
+    entries(table).map(_.getName.toLong)
+
+  /** The latest version's entry. */
+  def latest(table: String): String =
+    new String(java.nio.file.Files.readAllBytes(entries(table).last.toPath))
+
+  /** The bucket count the latest version records. */
+  def buckets(table: String): Int = {
+    val json = org.json4s.jackson.JsonMethods.parse(
+      latest(table).dropWhile(_ != '\n'))
+    (json \ "files") match {
+      case org.json4s.JArray(files) => files.size
+      case _ => sys.error(s"$table: no file list in ${latest(table)}")
+    }
   }
 }

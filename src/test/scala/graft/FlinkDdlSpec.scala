@@ -2217,13 +2217,11 @@ class FlinkDdlSpec extends SparkSpecBase {
       assert(new java.io.File(s"$dir/snk").list()
         .exists(_.startsWith("__bucket=")),
         "a PK sink must lay out bucketed")
-      assert(graft.changelog.UpsertSink.resolveBuckets(spark, s"$dir/snk",
-        Seq("k"), None) == 64, "the log must record the declared count")
+      assert(StoreLog.buckets(s"$dir/snk") == 64,
+        "the log must record the declared count")
       // the version records the query as a writer, so a replayed
       // micro-batch of it is a no-op
-      val latest = new java.io.File(s"$dir/snk/_graft_log").listFiles()
-        .filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toLong)
-      val entry = new String(java.nio.file.Files.readAllBytes(latest.toPath))
+      val entry = StoreLog.latest(s"$dir/snk")
       assert(entry.contains(s"\"${qs.head.id}\":"), entry)
       val before = filesOf(bucketOf(k1))
       assert(before.nonEmpty)
@@ -2353,7 +2351,8 @@ class FlinkDdlSpec extends SparkSpecBase {
     FlinkDdl.runScript(spark,
       s"$ddl;\nINSERT INTO t VALUES (1, 10, 'a'), (2, 20, 'b')")
     // the layout a streaming INSERT leaves (its first MERGE re-lays out)
-    UpsertSink.resolveBuckets(spark, s"$dir/t", Seq("k"), None)
+    UpsertSink.insert(spark, s"$dir/t", Seq((1L, 10L, "a")).toDF("k", "n",
+      "tag"), Seq("k"), None)
     def state() = UpsertSink.readTable(spark, s"$dir/t")
       .select("k", "n", "tag").as[(Long, Long, String)].collect().toSet
     val e = intercept[IllegalArgumentException](FlinkDdl.runScript(spark,

@@ -617,18 +617,11 @@ object DropUpdateBefore {
 object UpsertMaterialize {
 
   def apply(changelog: DataFrame, keyCols: Seq[String]): DataFrame =
-    lastImage(changelog, keyCols)
-      .where(col(RowKind.kindCol) =!= RowKind.Delete)
-      .drop(RowKind.kindCol, RowKind.seqCol)
-
-  /** Last change image per key with the kind column RETAINED (`-U`
-    * stripped) — the per-batch MERGE input for incremental sinks, which
-    * apply +/- semantics themselves (a trailing `-D` must DELETE from
-    * the target, which [[apply]]'s dropped rows can't express). */
-  def lastImage(changelog: DataFrame, keyCols: Seq[String]): DataFrame =
     graft.operators.Dedup
       .keepLast(
         changelog.where(col(RowKind.kindCol) =!= RowKind.UpdateBefore),
         keyCols.map(col),
         Seq(col(RowKind.seqCol)))
+      .where(col(RowKind.kindCol) =!= RowKind.Delete)
+      .drop(RowKind.kindCol, RowKind.seqCol)
 }

@@ -4,9 +4,10 @@ import java.io.{InputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, GraftPlans, SparkSession}
+import org.apache.spark.SparkThrowable
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, GraftPlans, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Expression, Literal, Murmur3Hash, Pmod}
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.streaming.checkpointing.HDFSMetadataLog
@@ -75,9 +76,12 @@ import org.json4s.jackson.Serialization
   * never see them; the next write sweeps them away), a crash after it
   * leaves superseded files that the next write deletes, and a replayed
   * micro-batch whose id its writer already committed is a no-op. The log
-  * keeps only the latest version. Readers ([[readTable]]) take its files;
-  * a reader that took a version just before a commit can find its entry
-  * or a superseded file gone (`FILE_NOT_EXIST`) and must retry.
+  * keeps only the latest version, and readers take its files. A reader
+  * that took a version just before a commit can find its entry
+  * (`BATCH_METADATA_NOT_FOUND`) or a superseded file (`FILE_NOT_EXIST`)
+  * gone. A point [[lookup]] retries on the newer version; [[readTable]]
+  * returns a lazy DataFrame, so its callers meet such a failure when they
+  * run it and must retry themselves.
   */
 object UpsertSink {
 
@@ -180,6 +184,50 @@ object UpsertSink {
       val df = spark.read.parquet(tablePath)
       if (df.columns.contains(BucketCol)) df.drop(BucketCol) else df
     }(s => scan(s, s.v.files.indices))
+
+  /** Point lookup of the row whose key columns, cast to string, equal
+    * `key` in the latest version (None: no such row, or no store yet).
+    * The key parts are cast to the recorded key types and hashed on the
+    * driver, so the read opens only that bucket's files. A read that
+    * lost its log entry or a file to a commit made since it began
+    * retries on the newer version. */
+  def lookup(spark: SparkSession, tablePath: String, key: Seq[String])
+      : Option[Row] = {
+    def latestId =
+      if (!isStore(spark, tablePath)) None
+      else new VersionLog(spark, s"$tablePath/$LogDir").getLatestBatchId()
+    val began = latestId
+    try latest(spark, tablePath).flatMap(probe(_, key)) catch {
+      case e: Exception if raced(e) && latestId != began =>
+        lookup(spark, tablePath, key)
+    }
+  }
+
+  private def probe(s: Store, key: Seq[String]): Option[Row] =
+    if (key.size != s.v.keys.size) None
+    else {
+      val row = s.v.rowType
+      val types = s.v.keys.map(k =>
+        row.find(_.name.equalsIgnoreCase(k)).get.dataType)
+      val tz = Option(s.spark.sessionState.conf.sessionLocalTimeZone)
+      val typed = key.zip(types).map { case (p, t) =>
+        Cast(Literal(p), t, tz, EvalMode.TRY) }
+      val b = Pmod(new Murmur3Hash(typed), Literal(s.v.buckets)).eval()
+        .asInstanceOf[Int]
+      if (s.v.files(b).isEmpty) None
+      else scan(s, Seq(b)).where(s.v.keys.zip(key).map { case (k, p) =>
+        col(k).cast("string") === p }.reduce(_ && _)).collect().headOption
+    }
+
+  /** The read lost its version's log entry or one of its files. */
+  private def raced(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case _: java.nio.file.NoSuchFileException |
+          _: java.io.FileNotFoundException => true
+      case t: SparkThrowable => Set("FAILED_READ_FILE.FILE_NOT_EXIST",
+        "BATCH_METADATA_NOT_FOUND")(String.valueOf(t.getCondition))
+      case _ => false
+    }
 
   private def taken(s: Store) = new IllegalStateException(
     s"upsert store ${s.path}: version ${s.id + 1} was committed by " +

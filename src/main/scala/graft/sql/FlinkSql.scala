@@ -1,6 +1,7 @@
 package graft.sql
 
 import java.util.concurrent.atomic.AtomicInteger
+import scala.collection.mutable.ArrayBuffer
 
 import graft.operators.{AfterMatchSkip, CepNfa, PatternStep, Sessionize, Windows}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -46,6 +47,17 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
 object FlinkSql {
 
   private val viewCounter = new AtomicInteger(0)
+
+  /** The temp views the [[compile]] call running on this thread made. */
+  private val callViews = new ThreadLocal[ArrayBuffer[String]]
+
+  /** Register `df` as a fresh temp view of the statement being compiled. */
+  private def tempView(df: DataFrame): String = {
+    val view = s"__graft_sql_${viewCounter.incrementAndGet()}"
+    df.createOrReplaceTempView(view)
+    callViews.get += view
+    view
+  }
 
   /** Per-session compiled-statement cache (VERDICT r15 #4: the SQL text
     * entry's tokenize→rewrite→temp-view→analyze pipeline is a fixed
@@ -135,6 +147,23 @@ object FlinkSql {
       text: String,
       tables: Map[String, DataFrame],
       models: Map[String, graft.ml.ModelProvider]): DataFrame = {
+    val outer = callViews.get
+    val views = ArrayBuffer.empty[String]
+    callViews.set(views)
+    // analysis is eager, so the returned DataFrame holds its views' plans
+    // and they can go: only this call's, as another thread may be
+    // compiling on the same session
+    try translate(spark, text, tables, models) finally {
+      callViews.set(outer)
+      views.foreach(spark.sessionState.catalog.dropTempView)
+    }
+  }
+
+  private def translate(
+      spark: SparkSession,
+      text: String,
+      tables: Map[String, DataFrame],
+      models: Map[String, graft.ml.ModelProvider]): DataFrame = {
     tables.foreach { case (n, df) => df.createOrReplaceTempView(n) }
     // several Flink FROM items (e.g. a window JOIN of two TVFs, or a TVF
     // feeding MATCH_RECOGNIZE) rewrite one at a time until none remain
@@ -178,8 +207,7 @@ object FlinkSql {
           val p = new P(toks, cur)
           p.i = start
           val (df, endTok) = fn(spark, p, Ctx(tables, models))
-          val view = s"__graft_sql_${viewCounter.incrementAndGet()}"
-          df.createOrReplaceTempView(view)
+          val view = tempView(df)
           cur = cur.substring(0, toks(start).start) + view +
             cur.substring(endTok)
           guard += 1
@@ -1137,8 +1165,7 @@ object FlinkSql {
       val dd =
         if (hasWm) proj.dropDuplicatesWithinWatermark(keys.toSeq)
         else proj.dropDuplicates(keys.toSeq)
-      val view = s"__graft_sql_${viewCounter.incrementAndGet()}"
-      dd.withColumn(rnAlias, lit(1)).createOrReplaceTempView(view)
+      val view = tempView(dd.withColumn(rnAlias, lit(1)))
       Some(text.substring(0, toks(selStart).start) + view + " " +
         text.substring(toks(aliasEnd - 1).end))
     } catch {
@@ -1928,8 +1955,7 @@ object FlinkSql {
           if (leftOuter) "left" else "inner")
           .drop("__lookup_k")
     }
-    val view = s"__graft_sql_${viewCounter.incrementAndGet()}"
-    joined.createOrReplaceTempView(view)
+    val view = tempView(joined)
 
     // splice the FROM … ON segment, then rewrite build-alias references
     // (`b.c` → `asof_c`) in the SAME query block: SQL identifiers are
@@ -2068,8 +2094,7 @@ object FlinkSql {
     } else None
 
     val windowed = assignWindows(src, base, tsCol, args, partitionKey)
-    val view = s"__graft_sql_${viewCounter.incrementAndGet()}"
-    windowed.createOrReplaceTempView(view)
+    val view = tempView(windowed)
 
     // splice call sites (descending offsets), then the FROM table
     val repls = calls.map { c =>

@@ -30,7 +30,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
   *   - the append writer: the sink's files, bucketed and partitioned as
   *     declared.
   */
-private[sql] object StreamSink {
+private[graft] object StreamSink {
 
   type Started = (StreamingQuery, String)
 
@@ -79,14 +79,20 @@ private[sql] object StreamSink {
       s"Table sink '${spec.name}': upsert materialization of $producer " +
         s"is parquet-backed; declared format '${spec.format}' cannot " +
         "store the merge state — declare 'format'='parquet'")
-    val declared = FlinkDdl.bucketCount(spec)
+    upsert(spec.path, spec.primaryKey, FlinkDdl.bucketCount(spec))
+  }
+
+  /** Each micro-batch (a changelog) is applied to the upsert store at
+    * `path`, tagged with its query id and batch id, so a replay of a
+    * batch the query already committed is a no-op. */
+  def upsert(path: String, keys: Seq[String], declared: Option[Int])
+      : (DataFrame, Long) => Unit =
     (log, batchId) => {
       val spark = log.sparkSession
-      UpsertSink.applyBatch(spark, spec.path, log, spec.primaryKey,
-        declared, Option(spark.sparkContext.getLocalProperty(
+      UpsertSink.applyBatch(spark, path, log, keys, declared,
+        Option(spark.sparkContext.getLocalProperty(
           StreamExecution.QUERY_ID_KEY)).map(_ -> batchId))
     }
-  }
 
   /** Crash-safe truncate-replace of the table at `path` by `df`. */
   def replace(df: DataFrame, path: String, format: String): Unit =

@@ -11,8 +11,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Delta vs the reference (documented): the reference serves point
   * lookups against LIVE state over RPC; Spark's state source reads a
   * checkpoint snapshot — ad-hoc inspection / debugging / state
-  * migration, not a live serving path. For live serving, materialize the
-  * changelog to a table with [[graft.changelog.UpsertSink]] instead.
+  * migration, not a live serving path. Live point lookups are
+  * [[StateServer]]'s: it serves a changelog's rows by key from a
+  * [[graft.changelog.UpsertSink]] store kept under the query's
+  * checkpoint, so they too survive a restart.
   */
 object StateQuery {
 

@@ -1648,6 +1648,47 @@ class ChangelogSpec extends SparkSpecBase {
       Set(24.0))
   }
 
+  test("UpsertSink.lookup: a point read polling during MERGEs retries " +
+      "on the newer version") {
+    val table = java.nio.file.Files.createTempDirectory("graft-look-")
+      .toString + "/t"
+    val keys = 1L to 40L
+    def round(i: Int) = changes(keys.map(k =>
+      (k, i.toDouble, i.toLong, RowKind.UpdateAfter)))
+    assert(UpsertSink.lookup(spark, table, Seq("1")).isEmpty)
+    UpsertSink.applyBatch(spark, table, round(0), Seq("k"), Some(4))
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val good = new java.util.concurrent.atomic.AtomicInteger()
+    val bad = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val reader = new Thread(() => {
+      val rnd = new scala.util.Random(3)
+      var seen = 0.0
+      while (!stop.get()) {
+        val k = keys(rnd.nextInt(keys.size))
+        try UpsertSink.lookup(spark, table, Seq(k.toString)) match {
+          // one reader never goes back to an older version
+          case Some(r) if r.getAs[Long]("k") == k &&
+              r.getAs[Double]("v") >= seen =>
+            seen = r.getAs[Double]("v")
+            good.incrementAndGet()
+          case other => bad.add(s"key $k after $seen: $other")
+        } catch { case e: Exception => bad.add(e.toString) }
+      }
+    })
+    reader.start()
+    try (1 to 24).foreach(i =>
+      UpsertSink.applyBatch(spark, table, round(i), Seq("k"), Some(4)))
+    finally { stop.set(true); reader.join() }
+    assert(bad.isEmpty, bad.toArray.take(3).mkString("\n"))
+    assert(good.get() > 0)
+    info(s"${good.get()} lookups, none failed")
+    keys.foreach(k => assert(UpsertSink.lookup(spark, table, Seq(k.toString))
+      .map(_.getAs[Double]("v")).contains(24.0)))
+    // a key that is absent, not of the key type, or of the wrong arity
+    Seq(Seq("41"), Seq("x"), Seq("1", "2")).foreach(k =>
+      assert(UpsertSink.lookup(spark, table, k).isEmpty, k))
+  }
+
   test("RetractableAgg: retractions exactly cancel accumulations") {
     import org.apache.spark.sql.functions.lit
     // +I 10, +I 20, -U 10 (retract), +U 30, -D 20 → live = {30}

@@ -42,6 +42,30 @@ class FlinkSqlSpec extends SparkSpecBase {
     assertSame(viaSql, viaDsl)
   }
 
+  test("compiled statements drop their __graft_sql_ temp views") {
+    def graftViews = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("__graft_sql_")).toSeq
+    val tvfs = (1 to 6).map { m =>
+      m -> FlinkSql.sql(spark,
+        s"""SELECT window_start, COUNT(*) AS n
+           |FROM TABLE(TUMBLE(TABLE events, DESCRIPTOR(ts_ns), INTERVAL '$m' MINUTE))
+           |GROUP BY window_start""".stripMargin,
+        Map("events" -> events))
+    }
+    val legacy = FlinkSql.sql(spark,
+      """SELECT TUMBLE_START(ts_ns, INTERVAL '7' MINUTE) AS window_start,
+        |       COUNT(*) AS n
+        |FROM events
+        |GROUP BY TUMBLE(ts_ns, INTERVAL '7' MINUTE)""".stripMargin,
+      Map("events" -> events))
+    assert(graftViews.isEmpty, graftViews)
+    // the views' plans live on in the DataFrames built over them
+    (tvfs :+ (7 -> legacy)).foreach { case (m, df) =>
+      assertSame(df, Windows.withTumble(events, "ts_ns", m * NS_MIN)
+        .groupBy(col("window_start")).agg(count(lit(1)).as("n")))
+    }
+  }
+
   test("TUMBLE SQL text runs on a STREAMING table: stream/batch parity") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._

@@ -1036,37 +1036,76 @@ class StreamingSpec extends SparkSpecBase {
     }
   }
 
-  test("StateServer: heap-bounded registry spills cold keys, serves them back") {
+  private def httpGet(url: String): (Int, String) = {
+    val conn = new java.net.URL(url).openConnection()
+      .asInstanceOf[java.net.HttpURLConnection]
+    val code = conn.getResponseCode
+    val is = if (code >= 400) conn.getErrorStream else conn.getInputStream
+    val body = scala.io.Source.fromInputStream(is).mkString
+    conn.disconnect()
+    (code, body)
+  }
+
+  test("StateServer: state past the old hot bound serves every key, " +
+      "update and delete") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.changelog.RowKind
     val input = MemoryStream[(Long, Double, Long, String)]
     val df = input.toDF().toDF("k", "v", RowKind.seqCol, RowKind.kindCol)
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ssbd-").toString
     val port = 18654
-    // cap the hot tier far below the key count: 100 live keys, 8 in heap
-    val q = StateServer.serve(df, "big", Seq("k"), port, ckpt,
-      maxHotKeys = 8)
+    val q = StateServer.serve(df, "big", Seq("k"), port, ckpt)
     try {
       input.addData((1L to 100L).map(i =>
         (i, i * 1.5, i, RowKind.Insert)))
       q.processAllAvailable()
-      // the heap bound holds; nothing was lost
-      assert(StateServer.hotKeys("big") <= 8, StateServer.hotKeys("big"))
       assert(StateServer.liveKeys("big") == 100L)
-      // a cold (spilled) key reads through with its exact typed value
-      assert(StateServer.lookup("big", Seq("3")).exists(_("v") == 4.5))
-      // update of a spilled key serves the new value; delete 404s even
-      // though an older spill copy exists
+      // any key reads back with its exact typed value
+      Seq(1L, 3L, 64L, 100L).foreach(i => assert(
+        StateServer.lookup("big", Seq(i.toString)).exists(_("v") == i * 1.5),
+        s"key $i"))
+      assert(StateServer.lookup("big", Seq("101")).isEmpty)
+      assert(StateServer.lookup("big", Seq("x")).isEmpty)
+      // update serves the new value; delete 404s
       input.addData(Seq(
         (5L, 99.0, 200L, RowKind.UpdateAfter),
         (6L, 9.0, 201L, RowKind.Delete)))
       q.processAllAvailable()
       assert(StateServer.lookup("big", Seq("5")).exists(_("v") == 99.0))
       assert(StateServer.lookup("big", Seq("6")).isEmpty)
+      assert(StateServer.lookup("big", Seq("3")).exists(_("v") == 4.5))
       assert(StateServer.liveKeys("big") == 99L)
-      assert(StateServer.hotKeys("big") <= 8)
     } finally {
       q.stop()
+      StateServer.stop()
+    }
+  }
+
+  test("StateServer: served state survives a restart from the checkpoint") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import graft.changelog.RowKind
+    val input = MemoryStream[(Long, Double, Long, String)]
+    val df = input.toDF().toDF("k", "v", RowKind.seqCol, RowKind.kindCol)
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ssrs-").toString
+    val port = 18655
+    input.addData((1L to 100L).map(i => (i, i * 1.5, i, RowKind.Insert)))
+    val q1 = StateServer.serve(df, "kept", Seq("k"), port, ckpt)
+    try q1.processAllAvailable() finally {
+      q1.stop()
+      StateServer.stop()
+    }
+    // the same checkpoint, no new input: the resumed query runs no batch
+    val q2 = StateServer.serve(df, "kept", Seq("k"), port, ckpt)
+    try {
+      q2.processAllAvailable()
+      (1L to 100L).foreach { i =>
+        val (c, b) = httpGet(s"http://localhost:$port/state/kept?key=$i")
+        assert(c == 200 && b.contains("\"v\":" + i * 1.5), s"$i: $c $b")
+      }
+      assert(StateServer.lookup("kept", Seq("7")).exists(_("v") == 10.5))
+      assert(StateServer.liveKeys("kept") == 100L)
+    } finally {
+      q2.stop()
       StateServer.stop()
     }
   }

@@ -115,8 +115,5 @@ object JvmFunctions {
       case n => throw new IllegalArgumentException(
         s"$className.eval takes $n parameters; up to 5 supported")
     }
-    // a (re)bound function name changes what an identical statement text
-    // means — compiled statements for this session are no longer valid
-    FlinkSql.invalidateStatements(spark)
   }
 }

@@ -1122,24 +1122,21 @@ class FlinkSqlSpec extends SparkSpecBase {
     import spark.implicits._
     val t1 = Seq((1L, 10.0), (2L, 20.0)).toDF("k", "v")
     val text = "SELECT k, SUM(v) AS s FROM tc GROUP BY k"
+    def rows(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     val a = FlinkSql.sql(spark, text, Map("tc" -> t1))
-    // same text + same table INSTANCE → the exact cached DataFrame
-    assert(FlinkSql.sql(spark, text, Map("tc" -> t1)) eq a, "identity hit")
-    // same text + an equivalent REBUILT input (fresh expression ids) →
-    // still a hit via canonicalized sameResult — the bench-rep pattern
+    assert(rows(a) == Set((1L, 10.0), (2L, 20.0)))
+    assert(rows(FlinkSql.sql(spark, text, Map("tc" -> t1))) == rows(a))
+    // an equivalent REBUILT input (fresh expression ids) reads the same
     val t1b = Seq((1L, 10.0), (2L, 20.0)).toDF("k", "v")
-    assert(FlinkSql.sql(spark, text, Map("tc" -> t1b)) eq a, "sameResult hit")
-    // a DIFFERENT input under the same name must miss and recompute
+    assert(rows(FlinkSql.sql(spark, text, Map("tc" -> t1b))) == rows(a))
+    // a DIFFERENT input under the same name reads its own rows
     val t2 = Seq((1L, 99.0)).toDF("k", "v")
     val b = FlinkSql.sql(spark, text, Map("tc" -> t2))
-    assert(!(b eq a), "different input must miss")
-    assert(b.collect().map(r => (r.getLong(0), r.getDouble(1))).toSet ==
-      Set((1L, 99.0)))
-    // and re-running the ORIGINAL text+input now recomputes too (the
-    // cache holds the latest compile per text) — result stays correct
+    assert(rows(b) == Set((1L, 99.0)))
+    // and re-running the ORIGINAL text+input stays correct
     val a2 = FlinkSql.sql(spark, text, Map("tc" -> t1))
-    assert(a2.collect().map(r => (r.getLong(0), r.getDouble(1))).toSet ==
-      Set((1L, 10.0), (2L, 20.0)))
+    assert(rows(a2) == Set((1L, 10.0), (2L, 20.0)))
   }
 
   test("statement cache: redefining a session function invalidates compiled plans") {
@@ -1149,14 +1146,75 @@ class FlinkSqlSpec extends SparkSpecBase {
     spark.udf.register("cache_inval_fn", (v: Long) => v + 1)
     val a = FlinkSql.sql(spark, text, Map("tci" -> t))
     assert(a.as[Long].collect().toSeq == Seq(4L))
-    // a rebound function name changes what the identical text means —
-    // JvmFunctions funnels its registrations through invalidateStatements;
-    // plain spark.udf.register callers must invalidate themselves
+    // a rebound function name changes what the identical text means;
+    // every call analyzes afresh, so the plain rebinding is seen
     spark.udf.register("cache_inval_fn", (v: Long) => v * 10)
-    FlinkSql.invalidateStatements(spark)
     val b = FlinkSql.sql(spark, text, Map("tci" -> t))
     assert(b.as[Long].collect().toSeq == Seq(30L),
       "stale compiled plan served after function redefinition")
+  }
+
+  test("an identical statement sees a session time-zone change") {
+    import spark.implicits._
+    // 2024-01-01 12:00:00 UTC = 04:00 in Los Angeles (PST)
+    val t = Seq(new java.sql.Timestamp(1704110400000L)).toDF("ts")
+    val text = "SELECT date_format(ts, 'HH') AS h FROM ttz"
+    val key = "spark.sql.session.timeZone"
+    val prev = spark.conf.get(key)
+    try {
+      assert(FlinkSql.sql(spark, text, Map("ttz" -> t))
+        .as[String].collect().toSeq == Seq("12"))
+      spark.conf.set(key, "America/Los_Angeles")
+      assert(FlinkSql.sql(spark, text, Map("ttz" -> t))
+        .as[String].collect().toSeq == Seq("04"))
+    } finally spark.conf.set(key, prev)
+  }
+
+  test("splice: a CTE named like a passed table shadows it") {
+    import spark.implicits._
+    val out = FlinkSql.sql(spark,
+      """WITH sp_cte AS (SELECT v + 10 AS v FROM sp_cte)
+        |SELECT v FROM sp_cte
+        |WHERE v IN (SELECT v FROM sp_cte)""".stripMargin,
+      Map("sp_cte" -> Seq(1).toDF("v")))
+    // the definition reads the passed table; the body reads the CTE
+    assert(out.as[Int].collect().toSeq == Seq(11))
+  }
+
+  test("splice: a passed table shadows a session view, which stays as it was") {
+    import spark.implicits._
+    Seq(1).toDF("v").createOrReplaceTempView("sp_shadow")
+    try {
+      val out = FlinkSql.sql(spark, "SELECT v FROM sp_shadow",
+        Map("sp_shadow" -> Seq(2).toDF("v")))
+      assert(out.as[Int].collect().toSeq == Seq(2))
+      assert(spark.table("sp_shadow").as[Int].collect().toSeq == Seq(1))
+    } finally spark.catalog.dropTempView("sp_shadow")
+  }
+
+  test("splice: a session view not among the passed tables still resolves") {
+    import spark.implicits._
+    Seq((1, "a"), (2, "b")).toDF("k", "s").createOrReplaceTempView("sp_sess")
+    try {
+      val out = FlinkSql.sql(spark,
+        "SELECT p.k, s.s FROM sp_passed p JOIN sp_sess s ON p.k = s.k",
+        Map("sp_passed" -> Seq(2).toDF("k")))
+      assert(out.as[(Int, String)].collect().toSeq == Seq((2, "b")))
+    } finally spark.catalog.dropTempView("sp_sess")
+  }
+
+  test("splice: a window-TVF statement leaves the session's temp views as they were") {
+    def tempViews() = spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet
+    val before = tempViews()
+    val out = FlinkSql.sql(spark,
+      """SELECT window_start, COUNT(*) AS n
+        |FROM TABLE(TUMBLE(TABLE sp_tvf_events, DESCRIPTOR(ts_ns),
+        |  INTERVAL '10' MINUTE))
+        |GROUP BY window_start""".stripMargin,
+      Map("sp_tvf_events" -> events))
+    assert(out.collect().nonEmpty)
+    assert(tempViews() == before)
   }
 
   test("double-quoted alias rewrite: apostrophes and comment starts stay opaque") {

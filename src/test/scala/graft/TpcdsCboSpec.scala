@@ -102,10 +102,6 @@ class TpcdsCboSpec extends SparkSpecBase {
     // join body).
     val joinHeavy = Seq(14, 17, 25, 29, 54, 64, 72, 78, 80, 95)
     def plansFor(broadcastThreshold: Int): Map[Int, String] = {
-      // the statement cache keys on (text, tables) and cannot see conf
-      // changes — without this, the second threshold's "plans" would be
-      // the first threshold's cached DataFrames (review r17)
-      graft.sql.FlinkSql.invalidateStatements(spark)
       Seq("spark.sql.cbo.enabled" -> "true",
         "spark.sql.cbo.joinReorder.enabled" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> broadcastThreshold.toString)
@@ -148,7 +144,6 @@ class TpcdsCboSpec extends SparkSpecBase {
       // difference is the stats.
       def bhj(p: String): Int = "BroadcastHashJoin".r.findAllIn(p).size
       val withStats = plansFor(256 * 1024)
-      graft.sql.FlinkSql.invalidateStatements(spark)
       spark.conf.set("spark.sql.cbo.enabled", "false")
       spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold",

@@ -1,6 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition, FileStatusWithMetadata, InMemoryFileIndex}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
+import org.apache.spark.sql.types.StructType
 
 /** Session factory for the graft engine.
   *
@@ -65,65 +72,99 @@ object GraftSession {
       kv.take(i).trim -> kv.drop(i + 1).trim
     }.toMap
 
-  /** State-store partition count for STREAMING queries (r19, guide §2.2).
-    *
-    * A streaming query pins its shuffle/state partition count from
-    * `spark.sql.shuffle.partitions` at first start (offset-log metadata).
-    * Micro-batch state here is KBs-MBs per query, but every batch pays a
-    * per-partition fixed cost: a state-store delta file write + commit
-    * per partition per stateful operator. At the session default (32)
-    * that fixed cost dominated every streaming pipeline's addBatch time
-    * (profiled via QueryProfile); 8 partitions cut the measured streaming
-    * queries 30-40% with no loss (the stateful stages are I/O-fixed-cost
-    * bound, not compute bound). Batch queries keep the session default —
-    * this value applies ONLY through [[withStreamPartitions]] scopes.
-    *
-    * Scale story: state partitions size to STATE VOLUME and key
-    * cardinality, not to core count — the reference separates operator
-    * parallelism from key-group count the same way. Production deployments
-    * override via `SPARK_GRAFT_STREAM_PARTITIONS` (e.g. hundreds for
-    * multi-GB state); the local default keeps the driver's bench
-    * comparable across its core-count runs (constant, not derived from
-    * the core count). */
-  def streamShufflePartitions: Int =
-    parseStreamPartitions(sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS"))
-
-  /** `$SPARK_GRAFT_STREAM_PARTITIONS`, else 8; a value that is not a
+  /** `$SPARK_GRAFT_STREAM_PARTITIONS`: an explicit partition count for
+    * every new streaming query, else None, which means the count follows
+    * the query's first batch ([[statePartitions]]). A value that is not a
     * positive integer fails naming the variable. */
-  private[graft] def parseStreamPartitions(raw: Option[String]): Int =
-    raw.fold(8)(v => v.trim.toIntOption.filter(_ > 0).getOrElse(
+  private[graft] def parseStreamPartitions(raw: Option[String]): Option[Int] =
+    raw.map(v => v.trim.toIntOption.filter(_ > 0).getOrElse(
       throw new IllegalArgumentException("SPARK_GRAFT_STREAM_PARTITIONS " +
         s"must be a positive integer, got '$v'")))
 
-  /** Run `start` (a streaming-query `.start()` call) with
-    * `spark.sql.shuffle.partitions` scoped to [[streamShufflePartitions]].
+  /** Shuffle and state-store partition count for a new streaming query
+    * over `df`: `$SPARK_GRAFT_STREAM_PARTITIONS` when set, else
+    * [[statePartitions]] of the files its sources hold now.
     *
-    * Race-freedom: `StreamExecution` clones the session (and so the conf)
-    * in its CONSTRUCTOR, which executes synchronously inside
-    * `DataStreamWriter.start()` — by the time this method restores the
-    * session value, the query holds its own pinned copy, and the batch
-    * `DataFrame`s passed to `foreachBatch` run on that clone too (so the
-    * per-batch MERGE jobs inherit the streaming value, as intended). The
-    * session-global set/restore is visible to other threads only for the
-    * duration of the `start()` call itself; the engine's entry points
-    * start queries from the calling thread, never concurrently with a
-    * batch plan compile on the same session. */
-  def withStreamPartitions[T](spark: SparkSession)(start: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, streamShufflePartitions.toString)
-    try start finally spark.conf.set(key, prev)
+    * The count is pinned in the query's offset log at first start, and
+    * AQE never coalesces a stateful shuffle, so the engine chooses it
+    * once. Every micro-batch pays a fixed cost per state partition (a
+    * delta-file write and commit per stateful operator), so KBs of state
+    * in many partitions is coordination, not compute. The count is
+    * Spark's file-scan partition count for the files present at start,
+    * and that count uses the default parallelism: past `cores` ×
+    * `openCostInBytes` of input it is about the core count of the
+    * machine where the query first starts, and a checkpoint keeps that
+    * machine's count wherever it restarts.
+    *
+    * A query whose sources hold no files at start (a datagen/rate
+    * stream, or a directory filled only after the query starts) gets 1,
+    * and keeps 1 for the life of its checkpoint however much state it
+    * later builds; set the variable, or start on a new checkpoint, to
+    * change it. */
+  def streamPartitions(df: DataFrame): Int =
+    parseStreamPartitions(sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS"))
+      .getOrElse(statePartitions(df.sparkSession, sourceFiles(df)))
+
+  /** As many partitions as Spark's own file scan plans for `files`: split
+    * at `FilePartition.maxSplitBytes` and packed by `getFilePartitions`
+    * (`spark.sql.files.maxPartitionBytes`, `openCostInBytes` and the
+    * default parallelism), at least 1. */
+  private[graft] def statePartitions(
+      spark: SparkSession, files: Seq[FileStatus]): Int = {
+    val open = spark.sessionState.conf.filesOpenCostInBytes
+    val split = FilePartition.maxSplitBytes(spark,
+      files.map(_.getLen + open).sum)
+    val pieces = files.flatMap(f => PartitionedFileUtil.splitFiles(
+      FileStatusWithMetadata(f), f.getPath, isSplitable = true, split,
+      InternalRow.empty))
+    FilePartition.getFilePartitions(spark, pieces, split).size max 1
   }
 
-  /** `.startScoped(spark)` — a `DataStreamWriter.start()` under
-    * [[withStreamPartitions]]; the engine's streaming sinks start through
-    * this so their state-store partition count is the streaming value. */
-  implicit class ScopedStart[T](
-      private val w: org.apache.spark.sql.streaming.DataStreamWriter[T]) {
-    def startScoped(spark: SparkSession)
-        : org.apache.spark.sql.streaming.StreamingQuery =
-      withStreamPartitions(spark)(w.start())
+  /** The files a new query over `df` reads in its first batch: every file
+    * its file sources list now, as `FileStreamSource` lists them. Other
+    * sources (rate, memory streams) hold no files. */
+  private def sourceFiles(df: DataFrame): Seq[FileStatus] = {
+    val spark = df.sparkSession
+    df.queryExecution.logical.collect {
+      case StreamingRelation(ds, _, _)
+          if classOf[FileFormat].isAssignableFrom(ds.providingClass) =>
+        val conf = spark.sessionState.newHadoopConfWithOptions(ds.options)
+        val roots = CaseInsensitiveMap(ds.options).get("path").toSeq
+          .map(new Path(_)).flatMap { p =>
+            val fs = p.getFileSystem(conf)
+            Option(fs.globStatus(fs.makeQualified(p))).toSeq.flatten
+          }.map(_.getPath)
+        new InMemoryFileIndex(spark, roots, ds.options, Some(new StructType))
+          .allFiles()
+    }.flatten
   }
+
+  /** Run `start` (a `DataStreamWriter.start()` of a query over `df`) with
+    * the session's `spark.sql.shuffle.partitions` set to
+    * [[streamPartitions]] of `df`, and restore it after.
+    *
+    * `StreamExecution` clones the session, and so its conf, in its
+    * constructor, which runs inside `start()`; the query keeps its own
+    * copy, and the `foreachBatch` MERGE jobs run on that clone too. A
+    * per-session lock spans set, `start()` and restore, so two threads
+    * starting queries on one session each pin their own count and the
+    * session value comes back. Other work on the session sees the
+    * streaming value for the length of a `start()` call. */
+  def withStreamPartitions[T](df: DataFrame)(start: => T): T = {
+    val spark = df.sparkSession
+    val n = streamPartitions(df).toString
+    startLock(spark).synchronized {
+      val key = "spark.sql.shuffle.partitions"
+      val prev = spark.conf.get(key)
+      spark.conf.set(key, n)
+      try start finally spark.conf.set(key, prev)
+    }
+  }
+
+  private val startLocks = new java.util.WeakHashMap[SparkSession, AnyRef]
+
+  private def startLock(spark: SparkSession): AnyRef =
+    startLocks.synchronized(startLocks.computeIfAbsent(spark, _ => new AnyRef))
 
   /** Build (or reuse) a session and register all graft SQL functions. */
   def get(

@@ -41,19 +41,20 @@ object StreamQueries {
           .createTempDirectory("graft_bs_ck").toString
         val inDir = java.nio.file.Files
           .createTempDirectory("graft_bs_in").toString
-        StateBootstrap.writeAggCheckpoint(
-          seedSrc.groupBy("user_id").agg(count(lit(1)).as("cnt")),
-          ckpt, Seq("user_id"),
-          // streaming value (r19): the resumed query adopts this count
-          // from the authored offset log (Spark restart semantics)
-          numShufflePartitions = graft.GraftSession.streamShufflePartitions)
         rest.select("user_id").write.mode("append").parquet(inDir)
-        val name =
-          s"bs_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-        val q = s.readStream
+        val counts = s.readStream
           .schema(StructType(Seq(StructField("user_id", LongType))))
           .parquet(inDir)
           .groupBy("user_id").count()
+        StateBootstrap.writeAggCheckpoint(
+          seedSrc.groupBy("user_id").agg(count(lit(1)).as("cnt")),
+          ckpt, Seq("user_id"),
+          // the resumed query adopts this count from the authored offset
+          // log (Spark restart semantics), sized like a fresh query's
+          numShufflePartitions = graft.GraftSession.streamPartitions(counts))
+        val name =
+          s"bs_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+        val q = counts
           .writeStream.format("memory").queryName(name)
           .outputMode("complete").option("checkpointLocation", ckpt).start()
         try q.processAllAvailable() finally q.stop()

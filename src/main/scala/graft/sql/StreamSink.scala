@@ -1,10 +1,11 @@
 package graft.sql
 
-import graft.GraftSession.ScopedStart
+import graft.GraftSession
 import graft.changelog.{FsOps, RowKind, UpsertSink}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Cast, ExprId, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.execution.streaming.checkpointing.OffsetSeqLog
 import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
@@ -40,14 +41,21 @@ private[graft] object StreamSink {
       java.nio.file.Files
         .createTempDirectory(s"graft_ck_${spec.name}_").toString)
 
-  /** Start `df` in output `mode` under the sink's checkpoint; `sink`
-    * completes the writer (a format, or a per-batch function). Returns
-    * (query, checkpoint). */
+  /** Start `df` in output `mode` under the sink's checkpoint, at the
+    * partition count [[GraftSession.withStreamPartitions]] sizes to its
+    * first batch; `sink` completes the writer (a format, or a per-batch
+    * function). A restart from a checkpoint with an offset-log entry
+    * starts plainly: the log's pinned count wins, so listing the sources
+    * would buy nothing. Returns (query, checkpoint). */
   def startWith(spec: FlinkDdl.TableSpec, df: DataFrame, mode: String)(
       sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Started = {
     val ckpt = checkpointDir(spec)
-    (sink(df.writeStream.outputMode(mode)
-      .option("checkpointLocation", ckpt)).startScoped(df.sparkSession), ckpt)
+    val w = sink(df.writeStream.outputMode(mode)
+      .option("checkpointLocation", ckpt))
+    val resumed =
+      new OffsetSeqLog(df.sparkSession, s"$ckpt/offsets").getLatest().isDefined
+    (if (resumed) w.start()
+     else GraftSession.withStreamPartitions(df)(w.start()), ckpt)
   }
 
   /** Start `df` with `perBatch` run on each micro-batch and its id. */

@@ -1957,6 +1957,60 @@ class FlinkDdlSpec extends SparkSpecBase {
     } finally qs.foreach(_.stop())
   }
 
+  test("runStreaming: a fresh CDC INSERT over a small source pins one " +
+      "state partition and leaves the session's count as it was; a " +
+      "restart keeps the pinned count") {
+    import spark.implicits._
+    assume(sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS").isEmpty,
+      "SPARK_GRAFT_STREAM_PARTITIONS overrides the sized count")
+    val dir = tmpDir()
+    Seq("""{"after":{"id":1,"k":"a","v":1},"op":"c","ts_ms":1}""",
+      """{"after":{"id":2,"k":"a","v":2},"op":"c","ts_ms":1}""",
+      """{"after":{"id":3,"k":"b","v":5},"op":"c","ts_ms":1}""")
+      .toDF("value").coalesce(1).write.text(s"$dir/src")
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    val script =
+      s"""CREATE TABLE changes (
+         |  id BIGINT, k STRING, v BIGINT,
+         |  PRIMARY KEY (id) NOT ENFORCED
+         |) WITH ('connector'='filesystem', 'path'='$dir/src',
+         |        'format'='debezium-json');
+         |CREATE TABLE by_k (k STRING, n BIGINT, sv BIGINT,
+         |  PRIMARY KEY (k) NOT ENFORCED)
+         |  WITH ('connector'='filesystem', 'path'='$dir/snk',
+         |        'format'='parquet', 'sink.checkpoint-dir'='$dir/ck');
+         |INSERT INTO by_k
+         |SELECT k, COUNT(*) AS n, SUM(v) AS sv
+         |FROM changes GROUP BY k""".stripMargin
+    val qs = FlinkDdl.runStreaming(spark, script)
+    try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
+    assert(spark.conf.get(key) == before)
+    def pinned(batch: Int): String = new String(java.nio.file.Files
+      .readAllBytes(java.nio.file.Paths.get(s"$dir/ck/offsets/$batch")))
+    assert(pinned(0).contains(s""""$key":"1""""), pinned(0))
+    def got = graft.changelog.UpsertSink.readTable(spark, s"$dir/snk")
+      .as[(String, Long, Long)].collect().toSet
+    assert(got == Set(("a", 2L, 3L), ("b", 1L, 5L)))
+    // at a 1-byte open cost a fresh query over the two files would get
+    // more than 1; the restart keeps the count batch 0 pinned
+    Seq("""{"before":{"id":3,"k":"b","v":5},"after":{"id":3,"k":"b","v":7},"op":"u","ts_ms":2}""")
+      .toDF("value").coalesce(1).write.mode("append").text(s"$dir/src")
+    withConf("spark.sql.files.openCostInBytes" -> "1") {
+      val src = new org.apache.hadoop.fs.Path(s"$dir/src")
+      val files = src.getFileSystem(spark.sessionState.newHadoopConf())
+        .listStatus(src).toSeq
+        .filterNot(f => Seq(".", "_").exists(f.getPath.getName.startsWith))
+      assert(files.size == 2)
+      assert(GraftSession.statePartitions(spark, files) > 1)
+      val again = FlinkDdl.runStreaming(spark, script)
+      try again.foreach(_.processAllAvailable())
+      finally again.foreach(_.stop())
+    }
+    assert(pinned(1).contains(s""""$key":"1""""), pinned(1))
+    assert(got == Set(("a", 2L, 3L), ("b", 1L, 7L)))
+  }
+
   test("runStreaming: CDC passthrough MERGEs projected changelog rows; " +
       "an update leaving the WHERE set deletes the sink row") {
     import spark.implicits._

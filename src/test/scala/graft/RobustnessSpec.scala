@@ -17,8 +17,9 @@ class RobustnessSpec extends SparkSpecBase {
     java.nio.file.Files.createTempDirectory("graft_rb").toString
 
   test("a bad tuning value fails with a message naming its variable") {
-    assert(GraftSession.parseStreamPartitions(None) == 8)
-    assert(GraftSession.parseStreamPartitions(Some(" 16 ")) == 16)
+    // unset: the count follows the query's first batch
+    assert(GraftSession.parseStreamPartitions(None).isEmpty)
+    assert(GraftSession.parseStreamPartitions(Some(" 16 ")).contains(16))
     for (bad <- Seq("x", "0", "-2", "1.5", "")) {
       val e = intercept[IllegalArgumentException](
         GraftSession.parseStreamPartitions(Some(bad)))
@@ -33,6 +34,30 @@ class RobustnessSpec extends SparkSpecBase {
         GraftSession.parseConf(Some(bad)))
       assert(e.getMessage.contains("SPARK_GRAFT_CONF"), e.getMessage)
     }
+  }
+
+  test("a streaming query's state partitions follow the file scan of " +
+      "its first batch") {
+    val mb = 1L << 20
+    def files(sizes: Long*) = sizes.zipWithIndex.map { case (n, i) =>
+      new org.apache.hadoop.fs.FileStatus(n, false, 1, 128 * mb, 0L,
+        new org.apache.hadoop.fs.Path(s"file:/in/part-$i"))
+    }
+    def parts(conf: (String, String)*)(sizes: Long*): Int =
+      withConf(conf: _*)(GraftSession.statePartitions(spark, files(sizes: _*)))
+    assert(parts()() == 1, "no files: one partition")
+    assert(parts()(2 * mb) == 1, "a file under the open cost is one split")
+    // one 300 MB file splits at maxPartitionBytes (128 MB): three splits
+    assert(parts("spark.sql.files.minPartitionNum" -> "1")(300 * mb) == 3)
+    // eight 1 MB files under an 8 MB split size: the open cost charged
+    // per file decides how many share a partition
+    val eight = Seq.fill(8)(mb)
+    val capped = Seq("spark.sql.files.minPartitionNum" -> "1",
+      "spark.sql.files.maxPartitionBytes" -> "8m")
+    assert(parts(capped :+ ("spark.sql.files.openCostInBytes" -> "4m"): _*)(
+      eight: _*) == 4)
+    assert(parts(capped :+ ("spark.sql.files.openCostInBytes" -> "0"): _*)(
+      eight: _*) == 1)
   }
 
   test("string literals carrying ';' and keywords pass through intact") {

@@ -587,6 +587,84 @@ class StreamingSpec extends SparkSpecBase {
       s"StateQuery must read back the continued state: $back")
   }
 
+  test("StateBootstrap: a checkpoint authored at 4 partitions restarts " +
+      "at 4 under the sized start") {
+    import org.apache.spark.sql.types.{StructType, StructField, StringType}
+    val dir = java.nio.file.Files.createTempDirectory("graft-boot4-in-").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-boot4-ck-").toString
+    val seed = Seq(("a", 5L), ("b", 3L), ("d", 1L)).toDF("k", "count")
+    StateBootstrap.writeAggCheckpoint(seed, ckpt, Seq("k"),
+      numShufflePartitions = 4)
+    val arrived = Seq("a", "c", "c", "d")
+    arrived.toDF("k").coalesce(1).write.mode("append").parquet(dir)
+    val counts = spark.readStream
+      .schema(StructType(Seq(StructField("k", StringType))))
+      .parquet(dir).groupBy("k").count()
+    // one small file: a fresh query over it would be sized to 1
+    assume(sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS").isEmpty)
+    assert(GraftSession.streamPartitions(counts) == 1)
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    val q = GraftSession.withStreamPartitions(counts)(counts.writeStream
+      .format("memory").queryName("boot4_t").outputMode("complete")
+      .option("checkpointLocation", ckpt).start())
+    try q.processAllAvailable() finally q.stop()
+    assert(spark.conf.get(key) == before)
+    val offsets = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(ckpt, "offsets", "1")))
+    assert(offsets.contains(s""""$key":"4""""), offsets)
+    // the oracle: a flat count over the seeded and the arrived rows
+    val oracle = (seed.as[(String, Long)].collect().toSeq ++
+      arrived.map(_ -> 1L)).groupMapReduce(_._1)(_._2)(_ + _)
+    val got = spark.table("boot4_t").as[(String, Long)].collect().toMap
+    assert(got == oracle, s"restarted at 4 partitions: $got")
+  }
+
+  test("withStreamPartitions: two threads starting at once each pin their " +
+      "own count, and the session's count comes back") {
+    import org.apache.spark.sql.types.{StructType, StructField, StringType}
+    assume(sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS").isEmpty)
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    def source(nFiles: Int): DataFrame = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-sp-in-").toString
+      Seq("a", "b", "c").grouped(3 / nFiles).foreach(ks =>
+        ks.toDF("k").coalesce(1).write.mode("append").parquet(dir))
+      spark.readStream.schema(StructType(Seq(StructField("k", StringType))))
+        .parquet(dir).groupBy("k").count()
+    }
+    // an 8 MB open cost per file under an 8 MB split: one file a partition
+    withConf("spark.sql.files.minPartitionNum" -> "1",
+        "spark.sql.files.maxPartitionBytes" -> "8m",
+        "spark.sql.files.openCostInBytes" -> "8m") {
+      for (round <- 1 to 3) {
+        val dfs = Seq(1 -> source(1), 3 -> source(3))
+        val barrier = new java.util.concurrent.CyclicBarrier(dfs.size)
+        val started = dfs.map { case (n, df) =>
+          val ckpt = java.nio.file.Files.createTempDirectory("graft-sp-ck-")
+          val f = new java.util.concurrent.FutureTask[StreamingQuery](() => {
+            barrier.await()
+            GraftSession.withStreamPartitions(df)(df.writeStream
+              .format("memory").queryName(s"sp_${round}_$n")
+              .outputMode("complete")
+              .option("checkpointLocation", ckpt.toString).start())
+          })
+          new Thread(f).start()
+          (n, ckpt, f)
+        }
+        started.foreach { case (n, ckpt, f) =>
+          val q = f.get()
+          try q.processAllAvailable() finally q.stop()
+          val offsets = new String(java.nio.file.Files.readAllBytes(
+            ckpt.resolve("offsets").resolve("0")))
+          assert(offsets.contains(s""""$key":"$n""""), offsets)
+          assert(spark.table(s"sp_${round}_$n").count() == 3)
+        }
+        assert(spark.conf.get(key) == before, s"round $round")
+      }
+    }
+  }
+
   test("StateBootstrap: dedup checkpoint suppresses bootstrapped keys") {
     import org.apache.spark.sql.types.{StructType, StructField, StringType}
     val dir = java.nio.file.Files.createTempDirectory("graft-bootd-in-").toString

@@ -842,7 +842,7 @@ object SqlQueries {
     // reference's DOCUMENTED streaming Top-N idiom — ROW_NUMBER() OVER a
     // PARTITION, filtered rn <= N, over an updating aggregate (topn.md;
     // StreamExecRank). No Spark output mode accepts a window function on
-    // a stream, so the runner splits the text at the rank boundary: the
+    // a stream, so the runner cuts the plan at the rank Window: the
     // aggregate streams in complete mode and the rank+filter applies per
     // micro-batch. Final state after two arrivals equals the batch run —
     // the oracle (ties broken by bucket, so the cut is deterministic).
@@ -1332,8 +1332,8 @@ object SqlQueries {
     // Streaming OVER aggregation through the SQL text entry (r19,
     // VERDICT r18 task 4; ref over-agg.md, StreamExecOverAggregate,
     // RowTimeRangeUnboundedPrecedingOverFunction.java:52): Spark rejects
-    // window functions on streams, so the runner splits at the OVER
-    // boundary — the child streams append-only and the per-key
+    // window functions on streams, so the runner cuts the plan at the
+    // OVER Window — the child streams append-only and the per-key
     // event-time running sum applies through the StreamingOver engine
     // (watermark-driven emission, O(1) accumulator state per key). Two
     // ts-ordered arrivals plus a sentinel row to flush the watermark;

@@ -1,6 +1,8 @@
 package graft.sql
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftPlans, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Cast}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Window => WindowNode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -299,10 +301,14 @@ object FlinkDdl {
     * built (they must parse and resolve) but not executed — attach them
     * via [[streamingSource]] + your own writeStream instead. Streaming
     * CTAS is rejected, as in the reference's streaming CTAS w/o
-    * exactly-once sink support. INSERT queries must be append-capable
-    * under Spark semantics (projections, filters, stream-stream/static
-    * joins, dedup); windowed aggregations stream through the
-    * [[graft.streaming.StreamingWindows]] DSL face.
+    * exactly-once sink support.
+    *
+    * Each INSERT is compiled once. A query over a CDC-format source takes
+    * the signed-aggregation tiers ([[StreamingCdc.start]]); a window
+    * function over a stream is cut at the plan's lowest streaming
+    * `Window` ([[cut]]: the Top-N and OVER tiers); every other plan
+    * writes by its changelog mode ([[startStreamSink]]). A window no tier
+    * takes fails at `start()` with Spark's unsupported-operation error.
     */
   def runStreaming(
       spark: SparkSession,
@@ -345,16 +351,7 @@ object FlinkDdl {
         "streaming inserts append")
       val spec = catalog.getOrElse(sink, throw new IllegalArgumentException(
         s"INSERT into unknown table $sink; known: ${catalog.keys.mkString(", ")}"))
-      // the streaming rank/Top-N tier: window functions stream in no
-      // Spark output mode, so the ROW_NUMBER idiom is split at the rank
-      // boundary instead ([[StreamingRank]]) — only attempted when the
-      // statement is otherwise unrunnable (either the compiled plan has
-      // no legal output mode, or FlinkSql's own shape checks rejected the
-      // rank/dedup pattern on a stream), so every supported plan keeps
-      // its normal route
-      // compile ONCE — the CDC probe and the normal route share it (a
-      // failed compile re-raises inside normalRoute, preserving the rank
-      // fallback semantics below)
+      // compile ONCE: the CDC probe and the sink route share the plan
       lazy val compiled = FlinkSql.sql(spark, query, tables(), allModels())
       // CDC-format source tier (VERDICT r17 task 2): a query reading a
       // decoded changelog carries retractions no insert-only streaming
@@ -372,29 +369,9 @@ object FlinkDdl {
             return
           }
       }
-      var rankTried = false
-      def normalRoute() = {
-        val result = withStaticPartition(spec, compiled, static)
-        if (result.isStreaming && static.isEmpty && noLegalMode(result)) {
-          rankTried = true
-          startRankSink(spark, spec, query, tables(), allModels())
-            .orElse(startOverSink(spark, spec, query, tables(), allModels()))
-            .getOrElse(startStreamSink(spec, alignToSink(spec, result)))
-        } else startStreamSink(spec, alignToSink(spec, result))
-      }
-      val qc =
-        try normalRoute()
-        catch {
-          // NonFatal only (ADVICE r17: a Throwable catch swallowed OOM /
-          // interrupts into a second planning pass), and never when
-          // normalRoute itself already attempted the rank split
-          case scala.util.control.NonFatal(e)
-              if static.isEmpty && !rankTried =>
-            startRankSink(spark, spec, query, tables(), allModels())
-              .orElse(
-                startOverSink(spark, spec, query, tables(), allModels()))
-              .getOrElse(throw e)
-        }
+      val result = alignToSink(spec, withStaticPartition(spec, compiled, static))
+      val qc = (if (static.isEmpty) cut(spec, result) else None)
+        .getOrElse(startStreamSink(spec, result))
       registerJob(s"insert-into_$sink", qc)
     }
 
@@ -2300,11 +2277,6 @@ object FlinkDdl {
     else "append"
   }
 
-  private def noLegalMode(df: DataFrame): Boolean = {
-    import org.apache.spark.sql.streaming.OutputMode._
-    !modeOk(df, Append()) && !modeOk(df, Update()) && !modeOk(df, Complete())
-  }
-
   /** Hidden boolean carrying a stripped exit-filter's condition. */
   private val KeepCol = "__keep"
 
@@ -2361,159 +2333,212 @@ object FlinkDdl {
     * spec installs a probe. */
   private[graft] var onMergeBatch: Option[(String, Long) => Unit] = None
 
-  /** The reference's streaming Top-N tier (`StreamExecRank`, docs
-    * `topn.md`): a `ROW_NUMBER() OVER (…) … WHERE rn <= N` idiom over a
-    * streaming input. Spark rejects window functions in every streaming
-    * output mode, so the statement is split at the rank boundary
-    * ([[StreamingRank]]): the CHILD runs as the continuous query and the
-    * rank+filter section applies per micro-batch as batch SQL. Two
-    * materialization tiers, by the child's own changelog mode:
+  /** Where a streaming statement's window functions run. Spark runs a
+    * `Window` over a stream in no output mode, so the statement is cut at
+    * its lowest `Window` whose child streams, the node the reference
+    * plans as `StreamExecRank` or `StreamExecOverAggregate`. That child
+    * is the continuous query, and the window applies beside it:
+    *
+    *   - ranking functions (`ROW_NUMBER`, `RANK`, `DENSE_RANK`; docs
+    *     `topn.md`): the statement runs per micro-batch as a batch plan
+    *     over the child's rows ([[rankTier]]);
+    *   - `SUM`/`COUNT`/`MIN`/`MAX` over a watermarked rowtime (docs
+    *     `over-agg.md`): the `Window` becomes the
+    *     [[graft.streaming.StreamingOver]] operator and the statement
+    *     streams on ([[overTier]]).
+    *
+    * `df` is the statement aligned to the sink. Returns None when no tier
+    * takes the window; the caller starts the plan as it is, and Spark's
+    * `start()` names the limitation. */
+  private def cut(spec: TableSpec, df: DataFrame)
+      : Option[StreamSink.Started] = {
+    import org.apache.spark.sql.catalyst.expressions.{DenseRank, Rank, RowNumber}
+    if (spec.connector != "filesystem") return None
+    val spark = df.sparkSession
+    val top = df.queryExecution.analyzed
+    top.collect { case w: WindowNode if w.child.isStreaming => w }
+      .lastOption.flatMap { w =>
+        val ranking = w.windowExpressions.forall(_.exists {
+          case _: RowNumber | _: Rank | _: DenseRank => true
+          case _ => false
+        })
+        if (ranking) rankTier(spark, spec, top, w)
+        else overTier(spark, top, w).map(p =>
+          startStreamSink(spec, GraftPlans.ofRows(spark, p)))
+      }
+  }
+
+  /** `from`'s columns under the names, attribute ids and types of `to`,
+    * so a plan resolved against `to` reads `from` unchanged. */
+  private def rebind(to: Seq[Attribute], from: Seq[Attribute])
+      : Seq[Alias] =
+    to.zip(from).map { case (a, b) =>
+      val v = if (b.dataType == a.dataType) b else Cast(b, a.dataType)
+      Alias(v, a.name)(exprId = a.exprId)
+    }
+
+  /** `plan` with its subtree `c` replaced by `rows` ([[rebind]]). */
+  private def swap(plan: LogicalPlan, c: LogicalPlan, rows: LogicalPlan)
+      : LogicalPlan = {
+    val rebound = Project(rebind(c.output, rows.output), rows)
+    plan.transformDown { case p if p eq c => rebound }
+  }
+
+  /** The streaming Top-N tier (`StreamExecRank`): the ranking window
+    * `w`'s child streams, and `top`, the whole statement, runs per
+    * micro-batch with that child swapped for rows of it ([[swap]]). Two
+    * materializations, by the child's own changelog mode:
     *
     *   - child complete-capable (an updating aggregate — the reference's
     *     "rank over an updating input", RetractableTopNFunction): each
     *     batch carries the child's WHOLE state; rank it, filter, atomic
     *     truncate-replace into the sink. Stateless and replay-idempotent.
     *   - child append-only (raw-stream leaderboard,
-    *     AppendOnlyTopNFunction) and the outer filter is a monotone
-    *     prefix (`rn <= N` / `< N` / `= 1`): keep the CANDIDATE rows — the
-    *     child rows still inside the rank bound — in a side store; each
-    *     batch ranks candidates ∪ new rows, truncate-replaces the sink
-    *     and prunes the store. Closure: under appends a row's rank only
-    *     grows, so a row outside the bound can never re-enter — state
-    *     stays ≤ N rows per partition, never the whole stream. Sink and
-    *     store swaps are each atomic; a crash BETWEEN them replays the
-    *     batch against an already-pruned store, which re-derives the
-    *     same candidates (ranking is deterministic), so the pair is
-    *     replay-idempotent the same way the upsert sink is — the
-    *     reference instead keeps this state inside the checkpoint, which
-    *     a transactional table format would give the store at scale.
+    *     AppendOnlyTopNFunction) under a monotone rank filter
+    *     ([[candidates]]): keep the CANDIDATE rows — the child rows still
+    *     inside the rank bound — in a side store; each batch ranks
+    *     candidates ∪ new rows, truncate-replaces the sink and prunes the
+    *     store. Closure: under appends a row's rank only grows, so a row
+    *     outside the bound can never re-enter — state stays ≤ N rows per
+    *     partition, never the whole stream. Sink and store swaps are each
+    *     atomic; a crash BETWEEN them replays the batch against an
+    *     already-pruned store, which re-derives the same candidates
+    *     (ranking is deterministic), so the pair is replay-idempotent the
+    *     same way the upsert sink is — the reference instead keeps this
+    *     state inside the checkpoint, which a transactional table format
+    *     would give the store at scale.
     *
-    * Returns None when the text is not the idiom or the child streams in
-    * no usable mode — the caller falls through to the normal error. */
-  private def startRankSink(
+    * Returns None when another stream remains outside the child or the
+    * child streams in neither mode. */
+  private def rankTier(
       spark: SparkSession,
       spec: TableSpec,
-      query: String,
-      tbls: Map[String, DataFrame],
-      models: Map[String, graft.ml.ModelProvider])
-      : Option[(org.apache.spark.sql.streaming.StreamingQuery, String)] = {
-    if (spec.connector != "filesystem") return None
-    StreamingRank.split(query).flatMap { rs =>
-      val inner = scala.util.Try(
-        FlinkSql.sql(spark, rs.innerText, tbls, models)).toOption
-        .filter(_.isStreaming)
-      inner.flatMap { in =>
-        import org.apache.spark.sql.streaming.OutputMode._
-        // Crash-safe swaps (ADVICE r17): a crash between the renames
-        // leaves the candidate store in .old, which the reader below
-        // falls back to. The sink takes its DECLARED format (ADVICE r17:
-        // the parquet-only write corrupted csv/json-declared sinks); the
-        // .rankstate store is engine-internal and stays parquet.
-        def applyOuter(sp: SparkSession, snapshot: DataFrame): DataFrame =
-          alignToSink(spec, FlinkSql.sql(sp, rs.outerText,
-            Map(StreamingRank.Marker -> snapshot), models))
-        if (modeOk(in, Complete())) {
-          Some(StreamSink.startSink(spec, in, "complete") { (batch, _) =>
-            StreamSink.replace(applyOuter(batch.sparkSession, batch),
-              spec.path, spec.format)
-          })
-        } else if (modeOk(in, Append()) && rs.candidateText.nonEmpty) {
-          val stateDir = spec.path + ".rankstate"
-          def readState(sp: SparkSession): Option[DataFrame] =
-            graft.changelog.FsOps.current(sp, stateDir).map(sp.read.parquet(_))
-          Some(StreamSink.startSink(spec, in, "append") { (batch, _) =>
-            val sp = batch.sparkSession
-            val combined = readState(sp)
-              .map(_.unionByName(batch)).getOrElse(batch)
-            // both swaps below re-execute the micro-batch plan through
-            // `combined` — persist it across the pair (r19, guide §5)
-            combined.persist(
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              // rank once over candidates ∪ new rows: exact by closure
-              val cand = FlinkSql.sql(sp, rs.candidateText.get,
-                Map(StreamingRank.Marker -> combined), models)
-                .drop(StreamingRank.CandRn)
-              StreamSink.replace(applyOuter(sp, combined), spec.path,
-                spec.format)
-              StreamSink.replace(cand, stateDir, "parquet")
-            } finally combined.unpersist(blocking = false)
-          })
-        } else None
+      top: LogicalPlan,
+      w: WindowNode)
+      : Option[StreamSink.Started] = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.streaming.OutputMode._
+    val c = w.child
+    if (swap(top, c, LocalRelation(c.output)).isStreaming) return None
+    val in = GraftPlans.ofRows(spark, c)
+    def onRows(plan: LogicalPlan, rows: DataFrame): DataFrame =
+      GraftPlans.ofRows(rows.sparkSession,
+        swap(plan, c, rows.queryExecution.analyzed))
+    if (modeOk(in, Complete()))
+      Some(StreamSink.startSink(spec, in, "complete") { (batch, _) =>
+        StreamSink.replace(onRows(top, batch), spec.path, spec.format)
+      })
+    else if (modeOk(in, Append())) candidates(top, w).map { cand =>
+      // the sink takes its DECLARED format; the .rankstate store is
+      // engine-internal and stays parquet
+      val stateDir = spec.path + ".rankstate"
+      StreamSink.startSink(spec, in, "append") { (batch, _) =>
+        val sp = batch.sparkSession
+        val combined = graft.changelog.FsOps.current(sp, stateDir)
+          .map(sp.read.parquet(_).unionByName(batch)).getOrElse(batch)
+        // both swaps below re-execute the micro-batch plan through
+        // `combined` — persist it across the pair
+        combined.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          // rank once over candidates ∪ new rows: exact by closure
+          StreamSink.replace(onRows(top, combined), spec.path, spec.format)
+          StreamSink.replace(onRows(cand, combined), stateDir, "parquet")
+        } finally combined.unpersist(blocking = false)
       }
+    }
+    else None
+  }
+
+  /** The candidate rows of the append Top-N tier: the ranking window `w`
+    * filtered by the monotone rank conjuncts (`rn <= N`, `rn < N`,
+    * `rn = 1`) of the Filter right above it in `top`, projected to the
+    * child's columns. None when no such conjunct sits above `w`. */
+  private def candidates(top: LogicalPlan, w: WindowNode)
+      : Option[LogicalPlan] = {
+    import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, LessThan, LessThanOrEqual, Literal}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, SubqueryAlias}
+    val ranks = w.windowExpressions.map(_.exprId).toSet
+    def reaches(p: LogicalPlan): Boolean = (p eq w) || (p match {
+      case _: Project | _: SubqueryAlias => reaches(p.children.head)
+      case _ => false
+    })
+    top.collectFirst { case Filter(cond, child) if reaches(child) =>
+      FlinkSql.conjuncts(cond).filter {
+        case LessThanOrEqual(a: Attribute, _: Literal) => ranks(a.exprId)
+        case LessThan(a: Attribute, _: Literal) => ranks(a.exprId)
+        case EqualTo(a: Attribute, Literal(1, _)) => ranks(a.exprId)
+        case _ => false
+      }
+    }.filter(_.nonEmpty)
+      .map(bound => Project(w.child.output, Filter(bound.reduce(And), w)))
+  }
+
+  /** The streaming OVER tier (`StreamExecOverAggregate`, docs
+    * `over-agg.md`, `RowTimeRangeBoundedPrecedingFunction.java:56`): `w`
+    * holds one SUM/COUNT/MIN/MAX of a child column over an append-only
+    * child, partitioned, ordered by the child's watermarked rowtime, with
+    * the RANGE UNBOUNDED PRECEDING frame (an integral value column: the
+    * engine's bit-exact running sums) or, for SUM, `ROWS BETWEEN n
+    * PRECEDING AND CURRENT ROW`. Returns `top` with `w` replaced by the
+    * [[graft.streaming.StreamingOver]] operator over the child (rows
+    * buffer until the watermark passes them, fire in row-time order,
+    * per-key state bounded by the frame — the reference's exact state
+    * contract), at the rowtime's declared delay. None for any other
+    * window. */
+  private def overTier(spark: SparkSession, top: LogicalPlan, w: WindowNode)
+      : Option[LogicalPlan] = {
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, CurrentRow, Literal, RangeFrame, RowFrame, SortOrder, SpecifiedWindowFrame, UnaryMinus, UnboundedPreceding, WindowExpression, WindowSpecDefinition}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count, Max, Min, Sum}
+    import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+    import graft.streaming.StreamingOver
+    val in = GraftPlans.ofRows(spark, w.child)
+    val names = in.columns.map(_.toLowerCase)
+    if (names.distinct.length != names.length || !isAppendCapable(in))
+      return None
+    w.windowExpressions match {
+      case Seq(Alias(WindowExpression(
+          AggregateExpression(fn, Complete, false, None, _),
+          WindowSpecDefinition(keys, Seq(SortOrder(ts: Attribute, Ascending,
+            _, _)), frame)), _))
+          if keys.nonEmpty && keys.forall(_.isInstanceOf[Attribute]) &&
+            ts.metadata.contains(EventTimeWatermark.delayKey) =>
+        val v = fn.children match {
+          case Seq(a: Attribute) => a
+          case _ => return None
+        }
+        val runCol = fn match {
+          case _: Sum => "run_sum"
+          case _: Count => "run_cnt"
+          case _: Min => "run_min"
+          case _: Max => "run_max"
+          case _ => return None
+        }
+        val by = keys.map(_.asInstanceOf[Attribute].name)
+        val delay =
+          s"${ts.metadata.getLong(EventTimeWatermark.delayKey)} milliseconds"
+        val integral =
+          Set[DataType](LongType, IntegerType, ShortType)(v.dataType)
+        val run = frame match {
+          case SpecifiedWindowFrame(RangeFrame, UnboundedPreceding,
+              CurrentRow) if integral =>
+            StreamingOver.unboundedMulti(in.withColumn(v.name,
+              col(v.name).cast("long")), by, ts.name, v.name, delay)
+          case SpecifiedWindowFrame(RowFrame,
+              UnaryMinus(Literal(n: Int, _), _), CurrentRow)
+              if runCol == "run_sum" =>
+            StreamingOver(in, by, ts.name, v.name, n, delay)
+          case _ => return None
+        }
+        val plan = run.queryExecution.analyzed
+        def column(n: String) = plan.output.find(_.name == n).get
+        Some(swap(top, w, Project(
+          w.child.output.map(a => column(a.name)) :+ column(runCol), plan)))
+      case _ => None
     }
   }
 
-  /** The reference's streaming OVER aggregation tier (r19, VERDICT r18
-    * task 4; ref `StreamExecOverAggregate.java:105`, docs `over-agg.md`,
-    * `RowTimeRangeBoundedPrecedingFunction.java:56`): Spark rejects
-    * window functions in every streaming output mode, so the statement
-    * splits at the OVER boundary ([[StreamingOverSql]]) — the CHILD runs
-    * as the continuous append query and the per-key event-time-ordered
-    * frame applies through the existing
-    * [[graft.streaming.StreamingOver]] engine (rows buffer until the
-    * watermark passes them, fire in row-time order, per-key state
-    * bounded by the frame — the reference's exact state contract). The
-    * ORDER BY column must be the child's watermarked rowtime; its
-    * declared delay is reused. Unbounded frames need an integral value
-    * column (the engine's bit-exact running sums); `ROWS n PRECEDING`
-    * supports SUM. Returns None when the text is not the idiom or the
-    * child doesn't stream append-only — the caller falls through to the
-    * normal error. */
-  private def startOverSink(
-      spark: SparkSession,
-      spec: TableSpec,
-      query: String,
-      tbls: Map[String, DataFrame],
-      models: Map[String, graft.ml.ModelProvider])
-      : Option[(org.apache.spark.sql.streaming.StreamingQuery, String)] = {
-    if (spec.connector != "filesystem") return None
-    StreamingOverSql.split(query).flatMap { os =>
-      val inner = scala.util.Try(FlinkSql.sql(spark,
-        s"SELECT * FROM ${os.childText}", tbls, models)).toOption
-        .filter(_.isStreaming).filter(isAppendCapable)
-      inner.flatMap { in =>
-        val delayMs: Long = in.queryExecution.analyzed.collectFirst {
-          case e: org.apache.spark.sql.catalyst.plans.logical
-              .EventTimeWatermark if e.eventTime.name == os.orderCol =>
-            e.delay.days * 86400000L + e.delay.microseconds / 1000L
-        }.getOrElse(0L)
-        val delay = s"$delayMs milliseconds"
-        val integral = in.schema.find(_.name.equalsIgnoreCase(os.valCol))
-          .exists(f => f.dataType == org.apache.spark.sql.types.LongType ||
-            f.dataType == org.apache.spark.sql.types.IntegerType ||
-            f.dataType == org.apache.spark.sql.types.ShortType)
-        val overDf: Option[(DataFrame, String)] = os.frame match {
-          case StreamingOverSql.RowsPreceding(nr) if os.fn == "SUM" =>
-            Some((graft.streaming.StreamingOver(
-              in, os.partitionCols, os.orderCol, os.valCol, nr, delay),
-              "run_sum"))
-          case StreamingOverSql.Unbounded if integral =>
-            val prepared = in.withColumn(os.valCol,
-              col(os.valCol).cast("long"))
-            val runCol = os.fn match {
-              case "SUM" => "run_sum"
-              case "COUNT" => "run_cnt"
-              case "MIN" => "run_min"
-              case "MAX" => "run_max"
-            }
-            Some((graft.streaming.StreamingOver.unboundedMulti(
-              prepared, os.partitionCols, os.orderCol, os.valCol, delay),
-              runCol))
-          case _ => None
-        }
-        overDf.map { case (df, runCol) =>
-          val sel = df.select(os.items.map {
-            case StreamingOverSql.Plain(nm, as) => col(nm).as(as)
-            case StreamingOverSql.OverCall => col(runCol).as(os.alias)
-          }: _*)
-          StreamSink.startAppend(spec, alignToSink(spec, sel))
-        }
-      }
-    }
-  }
-
-  /** Continuous write of an (aligned) streaming result into a sink table,
+  /** Continuous write of an (aligned) streaming result into a sink table —
+    * every INSERT that neither the CDC tiers nor [[cut]] take —
     * by its changelog mode ([[changelogMode]]) over the shared sink path
     * ([[StreamSink]], which owns the checkpoint, the upsert target, the
     * PRIMARY-KEY-vs-grouping guard and the writers):

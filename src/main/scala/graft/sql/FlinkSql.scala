@@ -3,7 +3,7 @@ package graft.sql
 import graft.operators.{AfterMatchSkip, CepNfa, PatternStep, Sessionize, Windows}
 import org.apache.spark.sql.{Column, DataFrame, GraftPlans, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+import org.apache.spark.sql.catalyst.expressions.{Expression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -95,8 +95,8 @@ object FlinkSql {
             return translateTemporalJoin(spark, cur, toks, ctx)
           if (hasLegacyWindowCall(toks))
             return translateLegacyWindows(spark, cur, toks, ctx)
-          return analyze(spark,
-            rewriteStreamingDedup(cur, toks, ctx).getOrElse(cur), ctx)
+          val df = analyze(spark, cur, ctx)
+          return if (df.isStreaming) keepFirst(df, ctx) else df
         case Some((start, fn)) =>
           // the cap guards runaway self-rewrites, not statement size: it
           // only fires when ANOTHER Flink FROM item still remains
@@ -963,147 +963,73 @@ object FlinkSql {
     (out, p.toks(endTok - 1).end)
   }
 
-  /** Flink's streaming DEDUPLICATION SQL pattern (docs
+  /** Flink's streaming DEDUPLICATION idiom (docs
     * dev/table/sql/queries/deduplication.md; StreamExecDeduplicate.java):
     * `SELECT … FROM (SELECT …, ROW_NUMBER() OVER (PARTITION BY k ORDER
-    * BY t) AS rn FROM s) WHERE rn = 1`. Spark rejects ranking windows on
-    * streams, so on a STREAMING source the keep-first form routes to
-    * `dropDuplicates` (`…WithinWatermark` when the source carries one) —
-    * append-only emission. DOCUMENTED APPROXIMATION (ADVICE r9): this
-    * keeps the first-ARRIVED row per key, which equals the reference's
-    * keep-first (smallest-rowtime) dedup only when arrival order matches
-    * event-time order per key — exact for proctime-ordered dedup, an
-    * approximation under out-of-order event-time arrivals (the parsed
-    * ORDER BY column is not replayed). The spliced view carries `rn = 1`
-    * so the outer text runs unchanged.
-    * Keep-last (`ORDER BY … DESC`) and Top-N (`rn <= N`) emit
-    * retractions — rejected with a pointer at the changelog tier. Batch
-    * inputs are untouched (Spark runs the window natively).
+    * BY t) AS rn FROM s) WHERE rn = 1` over a streaming table passed to
+    * the statement. Spark runs no ranking window on a stream, so in the
+    * analyzed plan that `row_number` Window becomes `Deduplicate` on the
+    * partition keys (`DeduplicateWithinWatermark` when the table carries
+    * a watermark) plus a literal `rn` of 1: append-only emission.
+    * DOCUMENTED APPROXIMATION (ADVICE r9): this keeps the first-ARRIVED
+    * row per key, which equals the reference's keep-first
+    * (smallest-rowtime) dedup only when arrival order matches event-time
+    * order per key — exact for proctime-ordered dedup, an approximation
+    * under out-of-order event-time arrivals. Only this shape is
+    * rewritten: plain partition keys, one ascending order key, plain
+    * columns over the table. Keep-last and Top-N keep their Window, which
+    * [[FlinkDdl.runStreaming]] cuts into its rank tier; anywhere else
+    * Spark rejects them when the query starts.
     */
-  private def rewriteStreamingDedup(
-      text: String,
-      toks: IndexedSeq[Tok],
-      ctx: Ctx): Option[String] = {
-    val k = toks.indexWhere(_.up == "ROW_NUMBER")
-    if (k < 0) return None
-    // parse ROW_NUMBER() OVER (PARTITION BY … ORDER BY ord [dir]) AS rn
-    val p = new P(toks, text)
-    p.i = k
-    try {
-      p.eat("ROW_NUMBER"); p.eat("("); p.eat(")")
-      p.eat("OVER"); p.eat("(")
-      p.eat("PARTITION"); p.eat("BY")
-      val keys = scala.collection.mutable.ArrayBuffer(p.ident())
-      while (p.opt(",")) keys += p.ident()
-      p.eat("ORDER"); p.eat("BY")
-      p.ident()
-      val desc = p.opt("DESC")
-      if (!desc) p.opt("ASC")
-      p.eat(")")
-      p.opt("AS")
-      val rnAlias = p.ident()
-      // enclosing `( SELECT` of the subquery holding the ROW_NUMBER
-      var depth = 0
-      var i = k - 1
-      var selStart = -1
-      while (selStart < 0 && i >= 0) {
-        val s = toks(i).s
-        if (s == ")") depth += 1
-        else if (s == "(") {
-          if (depth == 0) selStart = i else depth -= 1
-        }
-        i -= 1
-      }
-      if (selStart < 0 || toks(selStart + 1).up != "SELECT") return None
-      // matching close + the bare inner table: … FROM tbl )
-      var d2 = 1
-      var m = selStart + 1
-      var closeIdx = -1
-      while (closeIdx < 0 && m < toks.length) {
-        val s = toks(m).s
-        if (s == "(") d2 += 1
-        else if (s == ")") { d2 -= 1; if (d2 == 0) closeIdx = m }
-        m += 1
-      }
-      if (closeIdx < 0 || closeIdx < 2 || toks(closeIdx - 2).up != "FROM")
-        return None
-      val tblName = toks(closeIdx - 1).s
-      val src = ctx.get(tblName).getOrElse(return None)
-      if (!src.isStreaming) return None
-      // streaming source confirmed: the DELIBERATE unsupported shapes
-      // (keep-last, Top-N) now error clearly; any other parse/shape
-      // mismatch still falls through to None so plain Spark handles the
-      // statement (ADVICE r9: a mini-parser miss must not break valid
-      // queries just because SOME registered table is streaming)
-      if (desc) throw new StreamingShapeError(
-        "streaming keep-LAST deduplication emits updates — use the " +
-          "changelog tier (UpsertMaterialize) or StreamingDedupLast " +
-          "(windowed)")
-      // WHERE <rn> = 1 directly after the subquery('s alias)
-      val q = new P(toks, text)
-      q.i = closeIdx + 1
-      if (q.opt("AS")) q.ident()
-      else if (!q.done && q.peek != "WHERE" &&
-          q.peekRaw.headOption.exists(c => c.isLetter || c == '_')) q.ident()
-      val aliasEnd = q.i
-      q.eat("WHERE")
-      val lhs = q.ident()
-      require(lhs.equalsIgnoreCase(rnAlias),
-        s"expected the rank filter on $rnAlias, found $lhs")
-      if (q.peek == "<" || q.peek == "<=") throw new StreamingShapeError(
-        "streaming Top-N emits retractions — use ChangelogTopN " +
-          "(changelog tier) or StreamingTopN (windowed)")
-      q.eat("=")
-      require(q.next().s == "1", s"streaming dedup expects $rnAlias = 1")
-      // inner select list: '*' or bare [aliased] columns + the rn item
-      val listText = text.substring(toks(selStart + 2).start,
-        toks(closeIdx - 2).start)
-      val items = {
-        val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-        var dep = 0
-        val sb = new StringBuilder
-        listText.foreach {
-          case '(' => dep += 1; sb += '('
-          case ')' => dep -= 1; sb += ')'
-          case ',' if dep == 0 => parts += sb.toString; sb.clear()
-          case c => sb += c
-        }
-        parts += sb.toString
-        parts.map(_.trim).filter(_.nonEmpty).toSeq
-      }
-      val plain = items.filterNot(_.toUpperCase.contains("ROW_NUMBER"))
-      val proj =
-        if (plain == Seq("*")) src
-        else {
-          require(plain.forall(_.matches(
-            "(?i)[A-Za-z_][A-Za-z_0-9]*(\\s+AS\\s+[A-Za-z_][A-Za-z_0-9]*)?")),
-            "streaming dedup supports '*' or plain [aliased] columns in " +
-              s"the inner select, got: ${plain.mkString(", ")}")
-          src.selectExpr(plain: _*)
-        }
-      val hasWm = src.queryExecution.analyzed.collectFirst {
-        case e: org.apache.spark.sql.catalyst.plans.logical
-          .EventTimeWatermark => e
-      }.isDefined
-      val dd =
-        if (hasWm) proj.dropDuplicatesWithinWatermark(keys.toSeq)
-        else proj.dropDuplicates(keys.toSeq)
-      val name = ctx.bind(dd.withColumn(rnAlias, lit(1)))
-      Some(text.substring(0, toks(selStart).start) + name + " " +
-        text.substring(toks(aliasEnd - 1).end))
-    } catch {
-      case e: StreamingShapeError => throw e
-      case _: IllegalArgumentException => None
+  private def keepFirst(df: DataFrame, ctx: Ctx): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, EqualTo, Literal, RowNumber, SortOrder, WindowExpression, WindowSpecDefinition}
+    import org.apache.spark.sql.catalyst.plans.logical.{Deduplicate, DeduplicateWithinWatermark, EventTimeWatermark, Filter, Project, Window => WindowNode}
+    def plainOverPassed(p: LogicalPlan): Boolean = p match {
+      case Project(list, child) => list.forall {
+        case _: Attribute | Alias(_: Attribute, _) => true
+        case _ => false
+      } && plainOverPassed(child)
+      case SubqueryAlias(id, child) =>
+        ctx.get(id.name).isDefined && child.isStreaming
+      case _ => false
     }
+    def keepFirstOf(p: LogicalPlan): Option[WindowNode] = p match {
+      case w @ WindowNode(Seq(Alias(WindowExpression(_: RowNumber,
+          WindowSpecDefinition(keys, Seq(SortOrder(_: Attribute, Ascending,
+            _, _)), _)), _)), _, _, child, _)
+          if keys.nonEmpty && keys.forall(_.isInstanceOf[Attribute]) &&
+            plainOverPassed(child) => Some(w)
+      case _: Project | _: SubqueryAlias => keepFirstOf(p.children.head)
+      case _ => None
+    }
+    val plan = df.queryExecution.analyzed
+    val dedups = plan.collect { case Filter(cond, child) =>
+      keepFirstOf(child).filter(w => conjuncts(cond).exists {
+        case EqualTo(a: Attribute, Literal(1, _)) =>
+          a.exprId == w.windowExpressions.head.exprId
+        case _ => false
+      })
+    }.flatten
+    if (dedups.isEmpty) df
+    else GraftPlans.ofRows(df.sparkSession, plan.transformDown {
+      case w: WindowNode if dedups.exists(_ eq w) =>
+        val rn = w.windowExpressions.head
+        val keys = w.partitionSpec.map(_.asInstanceOf[Attribute])
+        val dedup =
+          if (w.child.exists(_.isInstanceOf[EventTimeWatermark]))
+            DeduplicateWithinWatermark(keys, w.child)
+          else Deduplicate(keys, w.child)
+        Project(w.child.output :+
+          Alias(Literal(1), rn.name)(exprId = rn.exprId), dedup)
+    })
   }
 
-  /** A DELIBERATE streaming-unsupported-shape rejection (keep-last,
-    * Top-N) raised only after the source is confirmed streaming — the
-    * only mini-parser error allowed to escape [[rewriteStreamingDedup]];
-    * plain parse/shape mismatches return None and fall through to Spark.
-    */
-  private final class StreamingShapeError(msg: String)
-    extends IllegalArgumentException(msg)
+  /** The AND-ed parts of a predicate. */
+  private[sql] def conjuncts(e: Expression): Seq[Expression] = e match {
+    case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
+      conjuncts(l) ++ conjuncts(r)
+    case other => Seq(other)
+  }
 
   /** Per-statement context threaded into the FROM-item translators: the
     * passed tables and the translated FROM items, each under a name local

@@ -2,10 +2,12 @@ package graft.tools
 
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
-/** Dev-only profiling harness: run named queries once (noop sink) with a
+/** Dev-only profiling harness: run named queries (noop sink) with a
   * streaming listener that prints every micro-batch's durationMs breakdown
   * to stderr, so streaming fixed costs (state commit, addBatch, walCommit)
-  * are attributable. Usage:
+  * are attributable. Each rep's line splits its wall time into `build=`
+  * (the query function: for a SQL query its entry pipeline, for a
+  * streaming tier its whole run) and `exec=` (the noop write). Usage:
   *   sbt "runMain graft.tools.QueryProfile /root/testdata/sf0.1 q_a,q_b [reps]"
   */
 object QueryProfile {
@@ -56,10 +58,14 @@ object QueryProfile {
       val fn = qs(n)
       (1 to reps).foreach { r =>
         val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[prof] $ts $n rep$r total=$dt%.3f s")
-        println(f"[prof] $n rep$r total=$dt%.3f s")
+        val df = fn(spark, sfDir)
+        val t1 = System.nanoTime()
+        df.write.format("noop").mode("overwrite").save()
+        val t2 = System.nanoTime()
+        val line = f"$n rep$r build=${(t1 - t0) / 1e9}%.3f " +
+          f"exec=${(t2 - t1) / 1e9}%.3f total=${(t2 - t0) / 1e9}%.3f s"
+        System.err.println(s"[prof] $ts $line")
+        println(s"[prof] $line")
       }
     }
     spark.stop()

@@ -476,7 +476,7 @@ class FlinkDdlSpec extends SparkSpecBase {
     new java.io.File(s"$dir/src").mkdirs()
     // the reference's documented streaming Top-N SQL (topn.md): rank over
     // an unwindowed aggregate — no Spark output mode accepts the window
-    // function, so the statement must split at the rank boundary
+    // function, so the statement must be cut at the plan's rank Window
     val qs = FlinkDdl.runStreaming(spark,
       s"""CREATE TABLE src (k STRING, v BIGINT)
          |  WITH ('connector'='filesystem', 'path'='$dir/src',
@@ -553,6 +553,125 @@ class FlinkDdlSpec extends SparkSpecBase {
       assert(cand.toSet == Set(("a", 10L), ("a", 8L),
         ("b", 7L), ("b", 3L)))
     } finally qs.foreach(_.stop())
+  }
+
+  test("runStreaming: keep-last ROW_NUMBER (ORDER BY … DESC, rn = 1) takes " +
+      "the rank candidate store and equals the batch result") {
+    import spark.implicits._
+    val dir = tmpDir()
+    new java.io.File(s"$dir/src").mkdirs()
+    val select =
+      """SELECT k, v, rn FROM (
+        |  SELECT k, v, ROW_NUMBER() OVER (PARTITION BY k
+        |                                  ORDER BY v DESC) AS rn
+        |  FROM src
+        |) WHERE rn = 1""".stripMargin
+    val qs = FlinkDdl.runStreaming(spark,
+      s"""CREATE TABLE src (k STRING, v BIGINT)
+         |  WITH ('connector'='filesystem', 'path'='$dir/src',
+         |        'format'='parquet');
+         |CREATE TABLE last_vals (k STRING, v BIGINT, rn BIGINT)
+         |  WITH ('connector'='filesystem', 'path'='$dir/snk',
+         |        'format'='parquet', 'sink.checkpoint-dir'='$dir/ck');
+         |INSERT INTO last_vals
+         |$select""".stripMargin)
+    try {
+      Seq(("a", 3L), ("a", 9L), ("b", 4L)).toDF("k", "v")
+        .write.mode("append").parquet(s"$dir/src")
+      qs.head.processAllAvailable()
+      Seq(("a", 5L), ("b", 8L), ("c", 1L)).toDF("k", "v")
+        .write.mode("append").parquet(s"$dir/src")
+      qs.head.processAllAvailable()
+      assert(new java.io.File(s"$dir/snk.rankstate").isDirectory,
+        "keep-last must take the candidate-store tier")
+      val batch = FlinkSql.sql(spark, select,
+        Map("src" -> spark.read.parquet(s"$dir/src")))
+        .select(col("k"), col("v"), col("rn").cast("bigint"))
+      val got = spark.read.parquet(s"$dir/snk")
+      assert(got.as[(String, Long, Long)].collect().toSet ==
+        batch.as[(String, Long, Long)].collect().toSet)
+      assert(got.as[(String, Long, Long)].collect().toSet ==
+        Set(("a", 9L, 1L), ("b", 8L, 1L), ("c", 1L, 1L)))
+    } finally qs.foreach(_.stop())
+  }
+
+  test("runStreaming: SUM … OVER (ROWS BETWEEN 2 PRECEDING AND CURRENT " +
+      "ROW) and MIN … OVER (RANGE UNBOUNDED PRECEDING) of an INT column " +
+      "over a watermarked rowtime equal the batch OVER") {
+    import spark.implicits._
+    val dir = tmpDir()
+    new java.io.File(s"$dir/src").mkdirs()
+    val sums =
+      """SELECT k, v, SUM(v) OVER (PARTITION BY k ORDER BY ts
+        |  ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS s
+        |FROM src""".stripMargin
+    val mins =
+      """SELECT k, v, MIN(v) OVER (PARTITION BY k ORDER BY ts) AS s
+        |FROM src WHERE v > 0""".stripMargin
+    val qs = FlinkDdl.runStreaming(spark,
+      s"""CREATE TABLE src (k STRING, v INT, ts TIMESTAMP(3),
+         |  WATERMARK FOR ts AS ts - INTERVAL '0' SECOND)
+         |  WITH ('connector'='filesystem', 'path'='$dir/src',
+         |        'format'='parquet');
+         |CREATE TABLE sum_snk (k STRING, v INT, s BIGINT)
+         |  WITH ('connector'='filesystem', 'path'='$dir/sums',
+         |        'format'='parquet', 'sink.checkpoint-dir'='$dir/ck1');
+         |CREATE TABLE min_snk (k STRING, v INT, s INT)
+         |  WITH ('connector'='filesystem', 'path'='$dir/mins',
+         |        'format'='parquet', 'sink.checkpoint-dir'='$dir/ck2');
+         |EXECUTE STATEMENT SET
+         |BEGIN
+         |  INSERT INTO sum_snk $sums;
+         |  INSERT INTO min_snk $mins;
+         |END""".stripMargin)
+    assert(qs.size == 2)
+    def arrive(rows: Seq[(String, Int, Long)]): Unit = {
+      rows.toDF("k", "v", "ms")
+        .select(col("k"), col("v"), timestamp_millis(col("ms")).as("ts"))
+        .write.mode("append").parquet(s"$dir/src")
+      qs.foreach(_.processAllAvailable())
+    }
+    try {
+      arrive(Seq(("a", 1, 1000L), ("a", 0, 1200L), ("b", 10, 1500L),
+        ("a", 4, 2000L), ("a", 2, 3000L)))
+      // after the first arrival's watermark (3 s), so none is late
+      arrive(Seq(("a", 8, 4000L), ("b", 20, 3500L), ("b", 30, 4500L),
+        ("a", 16, 5000L)))
+      // sentinel far in event time: the watermark passes every real row
+      arrive(Seq(("zz", 1, 4102444800000L)))
+      val real = spark.read.parquet(s"$dir/src").where(col("k") =!= "zz")
+      Seq((sums, "sums", 9L), (mins, "mins", 8L)).foreach {
+        case (select, path, n) =>
+          val got = spark.read.parquet(s"$dir/$path")
+            .where(col("k") =!= "zz")
+          val batch = FlinkSql.sql(spark, select, Map("src" -> real))
+          assert(got.schema.map(_.dataType) == batch.schema.map(_.dataType))
+          assert(got.collect().map(_.toSeq).toSet ==
+            batch.collect().map(_.toSeq).toSet, path)
+          assert(got.count() == n, path)
+      }
+    } finally qs.foreach(_.stop())
+  }
+
+  test("runStreaming: a window function no tier takes (LAG) fails at " +
+      "start with Spark's unsupported-operation error") {
+    val dir = tmpDir()
+    new java.io.File(s"$dir/src").mkdirs()
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      FlinkDdl.runStreaming(spark,
+        s"""CREATE TABLE src (k STRING, v BIGINT, ts TIMESTAMP(3),
+           |  WATERMARK FOR ts AS ts - INTERVAL '0' SECOND)
+           |  WITH ('connector'='filesystem', 'path'='$dir/src',
+           |        'format'='parquet');
+           |CREATE TABLE lag_snk (k STRING, v BIGINT, pv BIGINT)
+           |  WITH ('connector'='filesystem', 'path'='$dir/snk',
+           |        'format'='parquet', 'sink.checkpoint-dir'='$dir/ck');
+           |INSERT INTO lag_snk
+           |SELECT k, v, LAG(v) OVER (PARTITION BY k ORDER BY ts) AS pv
+           |FROM src""".stripMargin)
+    }
+    assert(e.getMessage.contains("streaming DataFrames/Datasets"),
+      e.getMessage)
   }
 
   test("runStreaming: an updating INSERT into a PK-less sink fails loudly") {

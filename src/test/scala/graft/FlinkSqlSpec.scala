@@ -975,10 +975,51 @@ class FlinkSqlSpec extends SparkSpecBase {
     assert(pos.forall(r => r.getInt(1) == 1 && r.getString(2) == "none"))
   }
 
+  test("streaming keep-first ROW_NUMBER is an append stream equal to the " +
+      "batch keep-first") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Deduplicate, DeduplicateWithinWatermark}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val stmt =
+      """SELECT k, v, rn FROM (
+        |  SELECT k, v, ROW_NUMBER() OVER (PARTITION BY k ORDER BY t) AS rn
+        |  FROM s
+        |) WHERE rn = 1""".stripMargin
+    // arrival order is event order per key, where keep-first by arrival
+    // and keep-first by ORDER BY t agree
+    val h1 = Seq(("a", 10L, 1L), ("b", 20L, 2L), ("a", 11L, 3L))
+    val h2 = Seq(("c", 30L, 4L), ("b", 21L, 5L), ("a", 12L, 6L))
+    val input = MemoryStream[(String, Long, Long)]
+    val out = FlinkSql.sql(spark, stmt,
+      Map("s" -> input.toDF().toDF("k", "v", "t")))
+    assert(out.isStreaming)
+    assert(out.queryExecution.analyzed.collectFirst {
+      case d: Deduplicate => d }.isDefined, out.queryExecution.analyzed)
+    val q = out.writeStream.format("memory").queryName("sql_stream_keep_first")
+      .outputMode("append").start()
+    val got =
+      try {
+        input.addData(h1); q.processAllAvailable()
+        input.addData(h2); q.processAllAvailable()
+        spark.table("sql_stream_keep_first").collect().map(_.toSeq).toSet
+      } finally q.stop()
+    val batch = FlinkSql.sql(spark, stmt,
+      Map("s" -> (h1 ++ h2).toDF("k", "v", "t")))
+    assert(got == batch.collect().map(_.toSeq).toSet)
+    assert(got == Set(Seq("a", 10L, 1), Seq("b", 20L, 1), Seq("c", 30L, 1)))
+    // a watermarked source keeps only the watermark's span of keys
+    val wm = MemoryStream[(String, Long, java.sql.Timestamp)].toDF()
+      .toDF("k", "v", "t").withWatermark("t", "1 minute")
+    assert(FlinkSql.sql(spark, stmt, Map("s" -> wm))
+      .queryExecution.analyzed.collectFirst {
+        case d: DeduplicateWithinWatermark => d }.isDefined)
+  }
+
   test("batch ROW_NUMBER outside the dedup shape survives a mixed session") {
     // ADVICE r9: with a STREAMING table registered, a batch query whose
-    // ROW_NUMBER doesn't fit the dedup mini-parser (no PARTITION BY)
-    // must fall through to plain Spark SQL, not raise from the parser.
+    // ROW_NUMBER is not the keep-first shape (no PARTITION BY) must run
+    // as plain Spark SQL, untouched by the streaming dedup rule.
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
